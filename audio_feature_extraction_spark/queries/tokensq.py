@@ -191,10 +191,11 @@ _BPE_N_MERGES = 8
 def _q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE vocabulary learning over the documents corpus: 8 iterative
     most-frequent-adjacent-pair merges (operators/tokenize.py). ONE corpus
-    scan into the word-frequency table; every merge round is window math
-    over the vocabulary-bounded symbol table with a deterministic
-    (count DESC, left, right) argmax — the DuckDB oracle replays all 8
-    rounds as unrolled CTEs (the ann_recall_fitted pattern)."""
+    scan into the word-frequency table, then the whole merge loop in one
+    lazy grouped-map kernel over that vocabulary-bounded table, with a
+    deterministic (count DESC, left, right) argmax; the builder runs no
+    job beyond the table read. The DuckDB oracle replays all 8 rounds as
+    unrolled window CTEs (the ann_recall_fitted pattern)."""
     from audio_feature_extraction_spark.operators.tokenize import bpe_learn
 
     d = _t(spark, sf_dir, "documents")
@@ -352,8 +353,9 @@ def _q_bpe_vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ENCODE side of the tokenizer: after the 8 learned merges, the
     resulting subword vocabulary with per-token stats — in how many
     distinct words the token appears and its corpus occurrence count
-    (token occurrences x word frequency). Reuses the learning loop's
-    final symbol table (bpe_learn with_symbols — zero extra passes);
+    (token occurrences x word frequency). Aggregates the final symbol
+    table that bpe_learn(with_symbols=True) emits from a second kernel
+    over the same word-count table (one corpus scan, no builder job);
     the oracle extends the unrolled merge-round CTEs with the final
     aggregation."""
     from audio_feature_extraction_spark.operators.tokenize import bpe_learn

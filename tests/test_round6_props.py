@@ -252,18 +252,16 @@ def test_bpe_learn_matches_reference_implementation(spark):
 
 def test_bpe_greedy_run_semantics(spark):
     """Greedy-leftmost on repeated-symbol runs: 'aaaa' merges to (aa)(aa),
-    'aaa' to (aa)a — the run-parity islands rule."""
+    'aaa' to (aa)a."""
     from audio_feature_extraction_spark.operators.tokenize import (
-        bpe_merge_round,
+        bpe_encode_words,
         bpe_word_counts,
-        _init_symbols,
     )
 
     df = spark.createDataFrame(
         pd.DataFrame({"text": ["aaaa aaa baaa"]})
     )
-    syms = _init_symbols(bpe_word_counts(df, "text"))
-    out = bpe_merge_round(syms, "a", "a")
+    out = bpe_encode_words(bpe_word_counts(df, "text"), [("a", "a")])
     got = {
         r["word"]: r["ss"]
         for r in out.groupBy("word")

@@ -17,26 +17,37 @@ import os
 import sys
 
 
+def load_session(path: str) -> dict:
+    """The one bench document in ``path``: exactly one line must parse as a
+    JSON object, and its ``queries`` must be a non-empty dict of numbers.
+    Anything else exits non-zero, naming the file."""
+    with open(path) as fh:
+        docs = []
+        for ln in fh.read().splitlines():
+            try:
+                doc = json.loads(ln)
+            except json.JSONDecodeError:
+                continue  # log noise around the bench line
+            if isinstance(doc, dict):
+                docs.append(doc)
+    if len(docs) != 1:
+        sys.exit(f"{path}: expected exactly one JSON object line, "
+                 f"found {len(docs)}")
+    q = docs[0].get("queries")
+    if not (isinstance(q, dict) and q and all(
+        isinstance(v, (int, float)) and not isinstance(v, bool)
+        for v in q.values()
+    )):
+        sys.exit(f"{path}: 'queries' is not a non-empty dict of numbers")
+    return docs[0]
+
+
 def main() -> None:
     out_path = sys.argv[1]
-    sessions = []
-    for p in sys.argv[2:]:
-        with open(p) as fh:
-            # the bench prints exactly one JSON object line; tolerate log
-            # noise around it by taking the last line that parses
-            doc = None
-            for ln in fh.read().splitlines():
-                ln = ln.strip()
-                if ln.startswith("{"):
-                    try:
-                        doc = json.loads(ln)
-                    except json.JSONDecodeError:
-                        continue
-            assert doc is not None, f"no JSON line in {p}"
-            sessions.append(doc)
+    sessions = [load_session(p) for p in sys.argv[2:]]
     folded: dict[str, float] = {}
     for s in sessions:
-        for k, v in s.get("queries", {}).items():
+        for k, v in s["queries"].items():
             folded[k] = min(v, folded.get(k, v))
     art = {"queries": folded, "sessions": sessions}
     if os.path.exists("BENCH/plan_hashes.json"):
