@@ -39,5 +39,3 @@ pandas UDFs (applyInPandas / mapInPandas / cogroup) for true kernels only.
 """
 
 __version__ = "0.1.0"
-
-from audio_feature_extraction_spark.session import get_spark  # noqa: F401

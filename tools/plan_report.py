@@ -7,6 +7,12 @@ at-a-time Python, sort-merge joins, and scan pushdown. The same facts
 `tools/check_entry.py`'s plan gate asserts piecewise, collected in one
 reviewable artifact so a plan regression shows up as a diff.
 
+It also writes BENCH/plan_hashes.json, the normalized plan hash of every
+query. The shipped hashes were computed at sf0.001 (the default ``sf_dir``):
+they prove plan stability at that scale only. AQE and size-dependent
+choices (broadcast vs shuffle, partition counts) can give another plan at a
+larger scale factor.
+
 Usage:
     python tools/plan_report.py [sf_dir]
 """
