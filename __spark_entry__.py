@@ -3,7 +3,10 @@
 ``entry(spark)`` runs the flagship point-in-time feature pipeline on
 /root/testdata/sf0.001. ``queries()`` exposes one entry per implemented
 operator from SURVEY.md §2, each runnable on any sf dir; ``oracle_sql()``
-gives the DuckDB-equivalent SQL for the correctness gate.
+gives the DuckDB-equivalent SQL for the correctness gate. Each family
+module under ``audio_feature_extraction_spark/queries/`` declares its
+queries as ``QUERIES = {name: (builder, oracle_sql_text)}``; this file only
+fixes their order.
 
 Conventions shared by both sides so the driver's order-insensitive
 value-hash matches:
@@ -21,539 +24,87 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from audio_feature_extraction_spark.queries.flagship import (  # noqa: E501
-    _SQL_PIPELINE,
-    _pipeline,
-    _pipeline_scalar,
+from audio_feature_extraction_spark.queries import (
+    aggregates, asofq, dedupq, dtwq, flagship, joins, samplingq, sessions,
+    similarityq, sketchq, streamsq, textq, tokensq, windowsq,
 )
-from audio_feature_extraction_spark.queries.aggregates import (  # noqa: E501
-    _SQL_BOOL_RATES,
-    _SQL_CORPUS_STATS,
-    _SQL_COUNT_DISTINCT,
-    _SQL_CUBE_REPORT,
-    _sql_drift_psi,
-    _SQL_GROUPED_STATS,
-    _SQL_GROUPING_SETS,
-    _SQL_MISSING_RATE,
-    _SQL_PERCENTILES,
-    _SQL_PIVOT_REPORT,
-    _SQL_PRICING,
-    _SQL_QUALITY_SCORE,
-    _SQL_ROLLUP_REPORT,
-    _SQL_SNR_STABILITY,
-    _SQL_TREND_FIT,
-    _SQL_TREND_SLOPE,
-    _SQL_VALUE_HISTOGRAM,
-    _SQL_VECTOR_KERNEL,
-    _q_bool_rates,
-    _q_corpus_stats,
-    _q_count_distinct,
-    _q_cube_report,
-    _q_drift_psi,
-    _q_grouped_stats,
-    _q_grouping_sets,
-    _q_missing_rate,
-    _q_percentiles,
-    _q_pivot_report,
-    _q_pricing_summary,
-    _q_quality_score,
-    _q_rollup_report,
-    _q_snr_stability,
-    _q_trend_fit,
-    _q_trend_slope,
-    _q_value_histogram,
-    _q_vector_kernel,
-)
-from audio_feature_extraction_spark.queries.sessions import (  # noqa: E501
-    _SQL_CAPPED_SESSIONS,
-    _SQL_SESSIONIZE,
-    _SQL_SESSION_OVERLAP,
-    _SQL_SESSION_STATS,
-    _SQL_SESSION_TOKEN_STATS,
-    _q_capped_sessions,
-    _q_session_overlap,
-    _q_session_stats,
-    _q_session_token_stats,
-    _q_sessionize,
-)
-from audio_feature_extraction_spark.queries.windowsq import (  # noqa: E501
-    _SQL_DELTA9,
-    _SQL_DELTA9_CENTERED,
-    _SQL_DELTA9_SECOND,
-    _SQL_GATE_CLIP,
-    _SQL_LAG_LEAD_DELTA,
-    _SQL_LOCF_FILL,
-    _SQL_PREEMPH_ZCR,
-    _SQL_RANK_STATS,
-    _SQL_ROBUST_NORM,
-    _SQL_ROLLING_MEDIAN,
-    _SQL_ROLLING_STATS,
-    _SQL_RUNNING_TOTALS,
-    _SQL_TIME_RANGE_STATS,
-    _SQL_TOP1,
-    _SQL_TRIM_ACTIVE,
-    _q_delta9,
-    _q_delta9_centered,
-    _q_delta9_second,
-    _q_gate_clip,
-    _q_gauss_smooth,
-    _q_lag_lead_delta,
-    _q_locf_fill,
-    _q_preemph_zcr,
-    _q_rank_stats,
-    _q_robust_norm,
-    _q_rolling_median,
-    _q_rolling_stats,
-    _q_running_totals,
-    _q_savgol,
-    _q_time_range_stats,
-    _q_top1_per_group,
-    _q_trim_active,
-    _sql_gauss,
-    _sql_savgol,
-)
-from audio_feature_extraction_spark.queries.asofq import (  # noqa: E501
-    _SQL_ASOF_BACKWARD,
-    _SQL_ASOF_FORWARD,
-    _SQL_ASOF_NEAREST,
-    _q_asof,
-)
-from audio_feature_extraction_spark.queries.joins import (  # noqa: E501
-    _SQL_ANTI_JOIN,
-    _SQL_BAND_JOIN,
-    _SQL_EQUI_JOIN_FANOUT,
-    _SQL_INTERSECT_USERS,
-    _SQL_REGION_PART_REVENUE,
-    _SQL_UNION_DISTINCT,
-    _q_anti_join,
-    _q_band_join,
-    _q_equi_join_fanout,
-    _q_intersect_users,
-    _q_region_part_revenue,
-    _q_union_distinct,
-)
-from audio_feature_extraction_spark.queries.dedupq import (  # noqa: E501
-    NGRAM_DF_CAP,
-    _SQL_DEDUP_EXACT,
-    _SQL_JACCARD_BASE,
-    _SQL_SUBSTRING_DEDUP,
-    _SQL_WINDOWED_DEDUP,
-    _q_substring_dedup,
-    _q_dedup_clusters,
-    _q_dedup_clusters_star,
-    _q_dedup_containment,
-    _sql_containment,
-    _q_dedup_exact,
-    _q_dedup_minhash,
-    _q_dedup_ngram,
-    _q_simhash,
-    _q_simhash_pairs,
-    _q_windowed_dedup,
-    _sql_dedup_clusters,
-    _sql_jaccard,
-    _sql_simhash,
-    _sql_simhash_pairs,
-)
-from audio_feature_extraction_spark.queries.textq import (  # noqa: E501
-    _SQL_CONTAMINATION,
-    _SQL_DOC_REPETITION,
-    _SQL_JSON_PROPS,
-    _SQL_LENGTH_BUCKETS,
-    _SQL_TOKEN_VOCAB,
-    _SQL_TFIDF_TOPTERMS,
-    _SQL_TOP_NGRAMS_BY_SOURCE,
-    _SQL_UNIGRAM_SURPRISAL,
-    _SQL_BIGRAM_LM,
-    _SQL_DOC_PERPLEXITY,
-    _q_bigram_lm,
-    _q_doc_perplexity,
-    _q_bm25_scores,
-    _q_tfidf_topterms,
-    _sql_bm25,
-    _q_top_ngrams_by_source,
-    _q_unigram_surprisal,
-    _q_contamination,
-    _q_doc_repetition,
-    _q_json_props,
-    _q_length_buckets,
-    _q_text_features,
-    _q_token_vocab,
-    _sql_text_features,
-)
-from audio_feature_extraction_spark.queries.similarityq import (  # noqa: E501
-    _SQL_ANN_TOPK,
-    _SQL_ANN_TOPK_ARROW,
-    _SQL_FRAME_SAMPLE,
-    _q_ann_auto_topk,
-    _q_ann_recall,
-    _q_ann_recall_clustered,
-    _q_ann_recall_fitted,
-    _q_ann_recall_neardup,
-    _sql_ann_recall_neardup,
-    _q_ann_topk,
-    _q_ann_topk_arrow,
-    _q_emb_dedup_clusters,
-    _q_emb_neardup,
-    _sql_emb_dedup_clusters,
-    _q_frame_sample,
-    _q_ivf_topk,
-    _q_lsh_topk,
-    _q_media_features,
-    _sql_ann_ivf,
-    _sql_ann_lsh,
-    _sql_ann_recall,
-    _sql_ann_recall_clustered,
-    _sql_ann_recall_fitted,
-    _sql_emb_neardup,
-    _sql_media_features,
-)
-from audio_feature_extraction_spark.queries.samplingq import (  # noqa: E501
-    _q_dataset_split,
-    _q_eval_sample,
-    _q_source_mixture,
-    _q_split_decontamination,
-    _q_stratified_sample,
-    _q_weighted_sample,
-    _sql_dataset_split,
-    _sql_eval_sample,
-    _sql_source_mixture,
-    _sql_split_decontamination,
-    _sql_stratified_sample,
-    _sql_weighted_sample,
-)
-from audio_feature_extraction_spark.queries.sketchq import (  # noqa: E501
-    _SQL_KEY_SKEW,
-    _q_approx_quantiles,
-    _q_bloom_prune,
-    _q_cms_freq,
-    _q_hll_distinct,
-    _q_key_skew,
-    _q_zorder_prune,
-    _sql_approx_quantiles,
-    _sql_bloom_prune,
-    _sql_cms_freq,
-    _sql_hll_distinct,
-    _sql_zorder_prune,
-)
-from audio_feature_extraction_spark.queries.tokensq import (  # noqa: E501
-    _SQL_BINPACK_ASSIGN,
-    _SQL_PACKED_ROLLUP,
-    _SQL_PACKED_TOKENS,
-    _SQL_TOKEN_SLICE,
-    _q_binpack_assign,
-    _q_bpe_merges,
-    _q_bpe_vocab_stats,
-    _q_epoch_shuffle,
-    _q_packed_rollup,
-    _q_packed_sequences,
-    _q_packed_tokens,
-    _q_token_slice,
-    _SQL_PACKED_SEQUENCES,
-    _sql_bpe_merges,
-    _sql_bpe_vocab_stats,
-    _sql_epoch_shuffle,
-)
-from audio_feature_extraction_spark.queries.streamsq import (  # noqa: E501
-    _SQL_SLIDING_COUNTS,
-    _SQL_TUMBLING_COUNTS,
-    _q_sliding_counts,
-    _q_tumbling_counts,
-)
-from audio_feature_extraction_spark.queries.dtwq import (  # noqa: E501
-    _SQL_DTW_BAND_COST,
-    _q_dtw_band_cost,
-)
+from audio_feature_extraction_spark.queries.flagship import _pipeline
+
+# The driver's correctness gate hashes the first 50 names, so the order is
+# part of the contract: tests/test_registry_pin.py pins it and
+# tools/rotate_registry.py audits a rotation.
+ORDER = [
+    "pipeline_features", "pricing_summary", "grouped_stats", "delta9",
+    "savgol_smooth", "top1_per_group", "locf_fill", "sessionize",
+    "asof_range_merge", "equi_join_fanout", "anti_join", "dedup_minhash_lsh",
+    "dedup_exact", "ann_cosine_topk", "media_features", "cube_report",
+    "text_features", "dtw_band_cost", "dedup_clusters", "tumbling_counts",
+    "binpack_assign", "time_range_stats", "doc_repetition", "contamination",
+    "stratified_sample", "json_props", "ann_topk_arrow", "packed_tokens",
+    "packed_sequences", "eval_sample", "substring_dedup", "ann_recall_fitted",
+    "ann_auto_topk", "doc_perplexity", "source_mixture",
+    "split_decontamination", "bpe_merges", "bpe_vocab_stats", "epoch_shuffle",
+    "ann_recall_clustered", "trend_slope", "ann_recall", "bm25_scores",
+    "bigram_lm", "hll_distinct", "bloom_prune", "session_overlap", "drift_psi",
+    "approx_quantiles", "zorder_prune",
+    # ---- the driver gate hashes the names above ----
+    "corpus_stats", "bool_rates", "missing_rate", "quality_score",
+    "session_stats", "lag_lead_delta", "rolling_stats", "preemph_zcr",
+    "asof_backward", "asof_salted", "asof_broadcast", "asof_broadcast_arrow",
+    "asof_forward", "dedup_ngram_jaccard", "simhash_signatures",
+    "simhash_pairs", "frame_sample", "trim_active", "gate_clip", "robust_norm",
+    "snr_stability", "value_histogram", "rollup_report", "vector_kernel_stats",
+    "count_distinct", "gauss_smooth", "union_distinct", "intersect_users",
+    "delta9_centered", "delta9_second", "sliding_counts",
+    "grouping_sets_report", "pivot_report", "region_part_revenue",
+    "capped_sessions", "token_slice", "rank_stats", "emb_neardup",
+    "percentiles", "rolling_median", "running_totals", "ann_ivf_topk",
+    "ann_lsh_topk", "band_join", "length_buckets", "token_vocab",
+    "packed_rollup", "trend_fit", "asof_nearest", "dedup_clusters_star",
+    "unigram_surprisal", "dedup_containment", "top_ngrams_by_source",
+    "windowed_dedup", "session_token_stats", "dataset_split",
+    "emb_dedup_clusters", "ann_recall_neardup", "tfidf_topterms", "cms_freq",
+    "weighted_sample", "key_skew",
+]
+
+Query = tuple[Callable[[SparkSession, str], DataFrame], str]
+
+
+def _merge(order: list[str], families) -> dict[str, Query]:
+    """Union of the families' ``QUERIES``; ValueError naming the offenders
+    unless each name is declared by one family and listed once in order."""
+    merged: dict[str, Query] = {}
+    twice: set[str] = set()
+    for family in families:
+        twice |= merged.keys() & family.QUERIES.keys()
+        merged.update(family.QUERIES)
+    problems = {
+        "declared in two families": twice,
+        "listed twice in ORDER": {n for n in order if order.count(n) > 1},
+        "declared by no family": set(order) - merged.keys(),
+        "missing from ORDER": merged.keys() - set(order),
+    }
+    bad = [f"{what}: {sorted(names)}" for what, names in problems.items()
+           if names]
+    if bad:
+        raise ValueError("; ".join(bad))
+    return merged
+
+
+_REGISTRY = _merge(ORDER, (
+    aggregates, asofq, dedupq, dtwq, flagship, joins, samplingq, sessions,
+    similarityq, sketchq, streamsq, textq, tokensq, windowsq,
+))
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     return _pipeline(spark, "/root/testdata/sf0.001")
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Dict ORDER matters: the driver's correctness gate hashes the FIRST 50
-    entries; rotations are audited by tools/rotate_registry.py (dual pin:
-    order-sensitive sha for the driver contract, order-INSENSITIVE content
-    sha that must not move on a pure rotation) and asserted by
-    tests/test_registry_pin.py.
 
-    r05 rotation: ALL 8 never-driver-hashed queries sit in the head —
-    bigram_lm (the one r04 left unhashed, VERDICT r04 #1) plus the 7 new
-    r05 queries (substring_dedup, ann_recall_fitted, ann_auto_topk,
-    dataset_split, emb_dedup_clusters, doc_perplexity, ann_recall_neardup).
-    Rotated to the tail to make room (ALL driver-green in r04, each
-    family keeping at least one head canary): trend_fit (← trend_slope),
-    asof_nearest (← asof_range_merge), dedup_clusters_star (←
-    dedup_clusters), unigram_surprisal + top_ngrams_by_source (←
-    doc_repetition/bm25/tfidf/bigram_lm), dedup_containment +
-    windowed_dedup (← dedup_exact/minhash/clusters/substring),
-    session_token_stats (← sessionize/session_overlap). After the r05
-    driver gate, every registry query has earned a driver-green row with
-    zero debt. The tail stays covered by tools/check_entry.py locally
-    (full 105-query sweeps green at sf0.001/0.01/0.1 this round)."""
-    return {
-        # -- canaries: one per driver-proven family (r02 green) ------------
-        "pipeline_features": _pipeline_scalar,
-        "pricing_summary": _q_pricing_summary,
-        "grouped_stats": _q_grouped_stats,
-        "delta9": _q_delta9,
-        "savgol_smooth": _q_savgol,
-        "top1_per_group": _q_top1_per_group,
-        "locf_fill": _q_locf_fill,
-        "sessionize": _q_sessionize,
-        "asof_range_merge": _q_asof("range_merge"),
-        "equi_join_fanout": _q_equi_join_fanout,
-        "anti_join": _q_anti_join,
-        "dedup_minhash_lsh": _q_dedup_minhash,
-        "dedup_exact": _q_dedup_exact,
-        "ann_cosine_topk": _q_ann_topk,
-        "media_features": _q_media_features,
-        "cube_report": _q_cube_report,
-        "text_features": _q_text_features,
-        "dtw_band_cost": _q_dtw_band_cost,
-        "dedup_clusters": _q_dedup_clusters,
-        "tumbling_counts": _q_tumbling_counts,
-        "binpack_assign": _q_binpack_assign,
-        "time_range_stats": _q_time_range_stats,
-        "doc_repetition": _q_doc_repetition,
-        "contamination": _q_contamination,
-        "stratified_sample": _q_stratified_sample,
-        "json_props": _q_json_props,
-        "ann_topk_arrow": _q_ann_topk_arrow,
-        "packed_tokens": _q_packed_tokens,
-        # packed_sequences (late r06): key_skew (driver-green r04+r05;
-        # sketch family keeps hll/bloom/quantiles) rotated out for it
-        "packed_sequences": _q_packed_sequences,
-        "eval_sample": _q_eval_sample,
-        # -- new in r05 (never driver-hashed): rotated into the head in
-        #    place of asof_nearest / dedup_clusters_star / unigram_surprisal
-        #    / dedup_containment / top_ngrams_by_source (all driver-green
-        #    r04; asof_range_merge, dedup_clusters/minhash/exact/substring,
-        #    doc_repetition/bm25/tfidf/bigram keep those families canaried)
-        "substring_dedup": _q_substring_dedup,
-        "ann_recall_fitted": _q_ann_recall_fitted,
-        "ann_auto_topk": _q_ann_auto_topk,
-        "doc_perplexity": _q_doc_perplexity,
-        # -- new in r06 (never driver-hashed): rotated into the head over
-        #    dataset_split / emb_dedup_clusters / ann_recall_neardup /
-        #    tfidf_topterms / cms_freq (all driver-green r05; families
-        #    keep canaries: stratified/eval/weighted_sample + the
-        #    composing source_mixture/split_decontamination for sampling,
-        #    dedup_clusters for CC, ann_recall/fitted/auto for ANN,
-        #    text_features/bm25/bigram_lm for text, hll/bloom/quantiles/
-        #    key_skew for sketches)
-        "source_mixture": _q_source_mixture,
-        "split_decontamination": _q_split_decontamination,
-        "bpe_merges": _q_bpe_merges,
-        # bpe_vocab_stats (late r06): weighted_sample (driver-green
-        # r04+r05; sampling keeps stratified/eval + the two new r06
-        # composition queries) rotated out for it
-        "bpe_vocab_stats": _q_bpe_vocab_stats,
-        "epoch_shuffle": _q_epoch_shuffle,
-        "ann_recall_clustered": _q_ann_recall_clustered,
-        # -- new in r04 ----------------------------------------------------
-        "trend_slope": _q_trend_slope,
-        "ann_recall": _q_ann_recall,
-        "bm25_scores": _q_bm25_scores,
-        # -- r05 rotation: bigram_lm (landed after the final r04
-        #    rotation, the one query never driver-hashed) enters the
-        #    head; trend_fit (driver-green r04, trend_slope canary
-        #    retained) moves to the tail. VERDICT r04 #1.
-        "bigram_lm": _q_bigram_lm,
-        # -- late r04 additions, rotated in for the r04 driver hash ---
-        "hll_distinct": _q_hll_distinct,
-        "bloom_prune": _q_bloom_prune,
-        "session_overlap": _q_session_overlap,
-        "drift_psi": _q_drift_psi,
-        "approx_quantiles": _q_approx_quantiles,
-        "zorder_prune": _q_zorder_prune,
-        # ------------------- 50-entry driver-gate cap ---------------------
-        # tail: driver-proven in r01-r03, covered locally by check_entry.py
-        "corpus_stats": _q_corpus_stats,
-        "bool_rates": _q_bool_rates,
-        "missing_rate": _q_missing_rate,
-        "quality_score": _q_quality_score,
-        "session_stats": _q_session_stats,
-        "lag_lead_delta": _q_lag_lead_delta,
-        "rolling_stats": _q_rolling_stats,
-        "preemph_zcr": _q_preemph_zcr,
-        "asof_backward": _q_asof("window"),
-        "asof_salted": _q_asof("salted"),
-        "asof_broadcast": _q_asof("broadcast"),
-        "asof_broadcast_arrow": _q_asof("broadcast_arrow"),
-        "asof_forward": _q_asof("window", direction="forward"),
-        "dedup_ngram_jaccard": _q_dedup_ngram,
-        "simhash_signatures": _q_simhash,
-        "simhash_pairs": _q_simhash_pairs,
-        "frame_sample": _q_frame_sample,
-        "trim_active": _q_trim_active,
-        "gate_clip": _q_gate_clip,
-        "robust_norm": _q_robust_norm,
-        "snr_stability": _q_snr_stability,
-        "value_histogram": _q_value_histogram,
-        "rollup_report": _q_rollup_report,
-        "vector_kernel_stats": _q_vector_kernel,
-        "count_distinct": _q_count_distinct,
-        "gauss_smooth": _q_gauss_smooth,
-        "union_distinct": _q_union_distinct,
-        "intersect_users": _q_intersect_users,
-        # -- r03-green, rotated out of the head (family canary retained) ---
-        "delta9_centered": _q_delta9_centered,
-        "delta9_second": _q_delta9_second,
-        "sliding_counts": _q_sliding_counts,
-        "grouping_sets_report": _q_grouping_sets,
-        "pivot_report": _q_pivot_report,
-        "region_part_revenue": _q_region_part_revenue,
-        "capped_sessions": _q_capped_sessions,
-        "token_slice": _q_token_slice,
-        "rank_stats": _q_rank_stats,
-        "emb_neardup": _q_emb_neardup,
-        # -- rotated out in late r04 (driver-green r01-r03; family
-        #    canaries retained in the head) ---------------------------
-        "percentiles": _q_percentiles,
-        "rolling_median": _q_rolling_median,
-        "running_totals": _q_running_totals,
-        "ann_ivf_topk": _q_ivf_topk,
-        "ann_lsh_topk": _q_lsh_topk,
-        "band_join": _q_band_join,
-        "length_buckets": _q_length_buckets,
-        "token_vocab": _q_token_vocab,
-        "packed_rollup": _q_packed_rollup,
-        # -- rotated out in r05 (driver-green r04; trend_slope canary
-        #    stays in the head) --------------------------------------
-        "trend_fit": _q_trend_fit,
-        "asof_nearest": _q_asof("window", direction="nearest"),
-        "dedup_clusters_star": _q_dedup_clusters_star,
-        "unigram_surprisal": _q_unigram_surprisal,
-        "dedup_containment": _q_dedup_containment,
-        "top_ngrams_by_source": _q_top_ngrams_by_source,
-        "windowed_dedup": _q_windowed_dedup,
-        "session_token_stats": _q_session_token_stats,
-        # -- rotated out in r06 (driver-green r05; family canaries
-        #    retained in the head — see the r06 note above) -----------
-        "dataset_split": _q_dataset_split,
-        "emb_dedup_clusters": _q_emb_dedup_clusters,
-        "ann_recall_neardup": _q_ann_recall_neardup,
-        "tfidf_topterms": _q_tfidf_topterms,
-        "cms_freq": _q_cms_freq,
-        "weighted_sample": _q_weighted_sample,
-        "key_skew": _q_key_skew,
-    }
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {name: _REGISTRY[name][0] for name in ORDER}
+
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "pricing_summary": _SQL_PRICING,
-        "grouped_stats": _SQL_GROUPED_STATS,
-        "percentiles": _SQL_PERCENTILES,
-        "bool_rates": _SQL_BOOL_RATES,
-        "missing_rate": _SQL_MISSING_RATE,
-        "corpus_stats": _SQL_CORPUS_STATS,
-        "quality_score": _SQL_QUALITY_SCORE,
-        "sessionize": _SQL_SESSIONIZE,
-        "session_stats": _SQL_SESSION_STATS,
-        "locf_fill": _SQL_LOCF_FILL,
-        "lag_lead_delta": _SQL_LAG_LEAD_DELTA,
-        "delta9": _SQL_DELTA9,
-        "rolling_stats": _SQL_ROLLING_STATS,
-        "rolling_median": _SQL_ROLLING_MEDIAN,
-        "savgol_smooth": _sql_savgol(),
-        "preemph_zcr": _SQL_PREEMPH_ZCR,
-        "running_totals": _SQL_RUNNING_TOTALS,
-        "top1_per_group": _SQL_TOP1,
-        "asof_backward": _SQL_ASOF_BACKWARD,
-        "asof_salted": _SQL_ASOF_BACKWARD,
-        "asof_range_merge": _SQL_ASOF_BACKWARD,
-        "asof_broadcast": _SQL_ASOF_BACKWARD,
-        "asof_broadcast_arrow": _SQL_ASOF_BACKWARD,
-        "asof_forward": _SQL_ASOF_FORWARD,
-        "asof_nearest": _SQL_ASOF_NEAREST,
-        "equi_join_fanout": _SQL_EQUI_JOIN_FANOUT,
-        "anti_join": _SQL_ANTI_JOIN,
-        "pipeline_features": _SQL_PIPELINE,
-        "dedup_exact": _SQL_DEDUP_EXACT,
-        "dedup_ngram_jaccard": _sql_jaccard(NGRAM_DF_CAP),
-        "dedup_minhash_lsh": _SQL_JACCARD_BASE,
-        "simhash_signatures": _sql_simhash(),
-        "simhash_pairs": _sql_simhash_pairs(),
-        "text_features": _sql_text_features(),
-        "ann_cosine_topk": _SQL_ANN_TOPK,
-        "frame_sample": _SQL_FRAME_SAMPLE,
-        "trim_active": _SQL_TRIM_ACTIVE,
-        "gate_clip": _SQL_GATE_CLIP,
-        "robust_norm": _SQL_ROBUST_NORM,
-        "snr_stability": _SQL_SNR_STABILITY,
-        "value_histogram": _SQL_VALUE_HISTOGRAM,
-        "rollup_report": _SQL_ROLLUP_REPORT,
-        "cube_report": _SQL_CUBE_REPORT,
-        "vector_kernel_stats": _SQL_VECTOR_KERNEL,
-        "count_distinct": _SQL_COUNT_DISTINCT,
-        "gauss_smooth": _sql_gauss(),
-        "union_distinct": _SQL_UNION_DISTINCT,
-        "intersect_users": _SQL_INTERSECT_USERS,
-        "band_join": _SQL_BAND_JOIN,
-        "tumbling_counts": _SQL_TUMBLING_COUNTS,
-        "sliding_counts": _SQL_SLIDING_COUNTS,
-        "token_slice": _SQL_TOKEN_SLICE,
-        "emb_neardup": _sql_emb_neardup(),
-        "binpack_assign": _SQL_BINPACK_ASSIGN,
-        "delta9_centered": _SQL_DELTA9_CENTERED,
-        "delta9_second": _SQL_DELTA9_SECOND,
-        "time_range_stats": _SQL_TIME_RANGE_STATS,
-        "grouping_sets_report": _SQL_GROUPING_SETS,
-        "pivot_report": _SQL_PIVOT_REPORT,
-        "ann_lsh_topk": _sql_ann_lsh(),
-        "ann_ivf_topk": _sql_ann_ivf(),
-        "media_features": _sql_media_features(),
-        "doc_repetition": _SQL_DOC_REPETITION,
-        "contamination": _SQL_CONTAMINATION,
-        "stratified_sample": _sql_stratified_sample(),
-        "length_buckets": _SQL_LENGTH_BUCKETS,
-        "token_vocab": _SQL_TOKEN_VOCAB,
-        "packed_rollup": _SQL_PACKED_ROLLUP,
-        "session_token_stats": _SQL_SESSION_TOKEN_STATS,
-        "windowed_dedup": _SQL_WINDOWED_DEDUP,
-        "json_props": _SQL_JSON_PROPS,
-        "rank_stats": _SQL_RANK_STATS,
-        "ann_topk_arrow": _SQL_ANN_TOPK_ARROW,
-        "packed_tokens": _SQL_PACKED_TOKENS,
-        "region_part_revenue": _SQL_REGION_PART_REVENUE,
-        "capped_sessions": _SQL_CAPPED_SESSIONS,
-        "eval_sample": _sql_eval_sample(),
-        "dtw_band_cost": _SQL_DTW_BAND_COST,
-        "dedup_clusters": _sql_dedup_clusters(),
-        "dedup_containment": _sql_containment(NGRAM_DF_CAP),
-        "dedup_clusters_star": _sql_dedup_clusters(),
-        "unigram_surprisal": _SQL_UNIGRAM_SURPRISAL,
-        "top_ngrams_by_source": _SQL_TOP_NGRAMS_BY_SOURCE,
-        "trend_slope": _SQL_TREND_SLOPE,
-        "ann_recall": _sql_ann_recall(),
-        "bm25_scores": _sql_bm25(),
-        "tfidf_topterms": _SQL_TFIDF_TOPTERMS,
-        "trend_fit": _SQL_TREND_FIT,
-        "hll_distinct": _sql_hll_distinct(),
-        "weighted_sample": _sql_weighted_sample(),
-        "key_skew": _SQL_KEY_SKEW,
-        "cms_freq": _sql_cms_freq(),
-        "bloom_prune": _sql_bloom_prune(),
-        "session_overlap": _SQL_SESSION_OVERLAP,
-        "drift_psi": _sql_drift_psi(),
-        "approx_quantiles": _sql_approx_quantiles(),
-        "zorder_prune": _sql_zorder_prune(),
-        "bigram_lm": _SQL_BIGRAM_LM,
-        "doc_perplexity": _SQL_DOC_PERPLEXITY,
-        "substring_dedup": _SQL_SUBSTRING_DEDUP,
-        "dataset_split": _sql_dataset_split(),
-        "emb_dedup_clusters": _sql_emb_dedup_clusters(),
-        "ann_recall_fitted": _sql_ann_recall_fitted(),
-        "ann_recall_neardup": _sql_ann_recall_neardup(),
-        # auto routes to IVF on this corpus (sampled kth-cos ~0.3 < 0.75),
-        # so the IVF SQL IS the oracle — a routing regression hash-fails
-        "ann_auto_topk": _sql_ann_ivf(),
-        # -- new in r06 ------------------------------------------------
-        "source_mixture": _sql_source_mixture(),
-        "split_decontamination": _sql_split_decontamination(),
-        "bpe_merges": _sql_bpe_merges(),
-        "epoch_shuffle": _sql_epoch_shuffle(),
-        "ann_recall_clustered": _sql_ann_recall_clustered(),
-        "bpe_vocab_stats": _sql_bpe_vocab_stats(),
-        "packed_sequences": _SQL_PACKED_SEQUENCES,
-    }
+    return {name: _REGISTRY[name][1] for name in ORDER}

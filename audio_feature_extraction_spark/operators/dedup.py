@@ -81,7 +81,7 @@ def shingles(
     # cheap relative to the window+agg that follows, and the probe/plan
     # overhead (~0.1 s per construction) plus the extra exchange outweigh
     # the scan-stage parallelism it buys.
-    wdf = df.select(F.col(id_col), F.col(text_col)).select(
+    wdf = df.select(
         F.col(id_col), F.posexplode(words(text_col)).alias("_i", "_w0")
     )
     win = Window.partitionBy(id_col).orderBy("_i")
@@ -112,7 +112,7 @@ def positioned_shingles(
 
     # (same r07 A/B note as shingles(): the pre-exchange guard lost at
     # sf0.1 and was neutral at sf1.0 — reverted)
-    wdf = df.select(F.col(id_col), F.col(text_col)).select(
+    wdf = df.select(
         F.col(id_col), F.posexplode(words(text_col)).alias("_i", "_w0")
     )
     win = Window.partitionBy(id_col).orderBy("_i")
@@ -437,9 +437,7 @@ def simhash(
     weights naturally (no distinct)."""
     # (r07 A/B: the pre-exchange parallelism guard lost at sf0.1, neutral
     # at sf1.0 — reverted; see shingles())
-    w = df.select(F.col(id_col), F.col(text_col)).select(
-        F.col(id_col), F.explode(words(text_col)).alias("w")
-    )
+    w = df.select(F.col(id_col), F.explode(words(text_col)).alias("w"))
     h = portable_word_hash(F.col("w"))
     w = w.withColumn("h", h)
     # whole signature as ONE parsed aggregate expression (bit sums nested

@@ -93,7 +93,7 @@ def repetition_stats(
     measured ~10× slower despite doing no shuffle at all."""
     # (r07 A/B: the ensure_min_parallelism_by pre-exchange was reverted —
     # 1.76x slower at sf0.1, neutral at sf1.0; see operators/dedup.shingles)
-    wdf = df.select(F.col(id_col), F.col(text_col)).select(
+    wdf = df.select(
         F.col(id_col), F.posexplode(words(text_col)).alias("i", "w0")
     )
     win = Window.partitionBy(id_col).orderBy("i")

@@ -1,7 +1,6 @@
 """Grouped/rollup/cube/pivot aggregations and corpus statistics.
 
-Split out of __spark_entry__.py (registry-only now); see that module's
-docstring for the cross-engine oracle conventions all queries follow."""
+Declares its queries in ``QUERIES``; oracle conventions: __spark_entry__.py."""
 
 from __future__ import annotations
 
@@ -636,3 +635,25 @@ SELECT event_type,
        FLOOR(({psi}) * 1e6 + 0.5) / 1e6 AS psi
 FROM g ORDER BY 1
 """
+
+
+QUERIES = {
+    "pricing_summary": (_q_pricing_summary, _SQL_PRICING),
+    "grouped_stats": (_q_grouped_stats, _SQL_GROUPED_STATS),
+    "percentiles": (_q_percentiles, _SQL_PERCENTILES),
+    "bool_rates": (_q_bool_rates, _SQL_BOOL_RATES),
+    "missing_rate": (_q_missing_rate, _SQL_MISSING_RATE),
+    "corpus_stats": (_q_corpus_stats, _SQL_CORPUS_STATS),
+    "quality_score": (_q_quality_score, _SQL_QUALITY_SCORE),
+    "snr_stability": (_q_snr_stability, _SQL_SNR_STABILITY),
+    "value_histogram": (_q_value_histogram, _SQL_VALUE_HISTOGRAM),
+    "rollup_report": (_q_rollup_report, _SQL_ROLLUP_REPORT),
+    "vector_kernel_stats": (_q_vector_kernel, _SQL_VECTOR_KERNEL),
+    "cube_report": (_q_cube_report, _SQL_CUBE_REPORT),
+    "count_distinct": (_q_count_distinct, _SQL_COUNT_DISTINCT),
+    "grouping_sets_report": (_q_grouping_sets, _SQL_GROUPING_SETS),
+    "pivot_report": (_q_pivot_report, _SQL_PIVOT_REPORT),
+    "trend_slope": (_q_trend_slope, _SQL_TREND_SLOPE),
+    "trend_fit": (_q_trend_fit, _SQL_TREND_FIT),
+    "drift_psi": (_q_drift_psi, _sql_drift_psi()),
+}

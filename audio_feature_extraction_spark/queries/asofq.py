@@ -1,7 +1,6 @@
 """Point-in-time as-of join queries (all strategies).
 
-Split out of __spark_entry__.py (registry-only now); see that module's
-docstring for the cross-engine oracle conventions all queries follow."""
+Declares its queries in ``QUERIES``; oracle conventions: __spark_entry__.py."""
 
 from __future__ import annotations
 
@@ -107,3 +106,18 @@ SELECT event_id, user_id, ts, value, mts AS matched_ts,
    WHERE r.user_id = c.user_id AND r.ts = c.mts) AS ref_value
 FROM c
 """
+
+
+QUERIES = {
+    "asof_range_merge": (_q_asof("range_merge"), _SQL_ASOF_BACKWARD),
+    "asof_backward": (_q_asof("window"), _SQL_ASOF_BACKWARD),
+    "asof_salted": (_q_asof("salted"), _SQL_ASOF_BACKWARD),
+    "asof_broadcast": (_q_asof("broadcast"), _SQL_ASOF_BACKWARD),
+    "asof_broadcast_arrow": (_q_asof("broadcast_arrow"), _SQL_ASOF_BACKWARD),
+    "asof_forward": (
+        _q_asof("window", direction="forward"), _SQL_ASOF_FORWARD
+    ),
+    "asof_nearest": (
+        _q_asof("window", direction="nearest"), _SQL_ASOF_NEAREST
+    ),
+}

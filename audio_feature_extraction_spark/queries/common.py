@@ -1,7 +1,6 @@
 """Shared helpers: table loaders, window specs, event-table constants.
 
-Split out of __spark_entry__.py (registry-only now); see that module's
-docstring for the cross-engine oracle conventions all queries follow."""
+Used by the family modules, which declare their queries in ``QUERIES``."""
 
 from __future__ import annotations
 

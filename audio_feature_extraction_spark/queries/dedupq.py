@@ -1,7 +1,6 @@
 """Exact and near-duplicate detection (jaccard, minhash-LSH, simhash, clusters).
 
-Split out of __spark_entry__.py (registry-only now); see that module's
-docstring for the cross-engine oracle conventions all queries follow."""
+Declares its queries in ``QUERIES``; oracle conventions: __spark_entry__.py."""
 
 from __future__ import annotations
 
@@ -273,3 +272,19 @@ SELECT doc_id, run_start, run_end,
        CAST(span_tokens AS BIGINT) AS span_tokens
 FROM agg WHERE span_tokens >= {SUBSTR_MIN_SPAN}
 """
+
+
+QUERIES = {
+    "dedup_exact": (_q_dedup_exact, _SQL_DEDUP_EXACT),
+    "dedup_ngram_jaccard": (_q_dedup_ngram, _sql_jaccard(NGRAM_DF_CAP)),
+    "dedup_clusters": (_q_dedup_clusters, _sql_dedup_clusters()),
+    "dedup_minhash_lsh": (_q_dedup_minhash, _SQL_JACCARD_BASE),
+    "simhash_signatures": (_q_simhash, _sql_simhash()),
+    "simhash_pairs": (_q_simhash_pairs, _sql_simhash_pairs()),
+    "windowed_dedup": (_q_windowed_dedup, _SQL_WINDOWED_DEDUP),
+    "dedup_containment": (
+        _q_dedup_containment, _sql_containment(NGRAM_DF_CAP)
+    ),
+    "dedup_clusters_star": (_q_dedup_clusters_star, _sql_dedup_clusters()),
+    "substring_dedup": (_q_substring_dedup, _SQL_SUBSTRING_DEDUP),
+}

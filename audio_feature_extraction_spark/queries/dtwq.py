@@ -1,7 +1,6 @@
 """Exact banded weighted-DTW alignment kernel query.
 
-Split out of __spark_entry__.py (registry-only now); see that module's
-docstring for the cross-engine oracle conventions all queries follow."""
+Declares its queries in ``QUERIES``; oracle conventions: __spark_entry__.py."""
 
 from __future__ import annotations
 
@@ -152,3 +151,8 @@ FROM pairs p
 LEFT JOIN dp d ON d.user_id = p.user_id AND d.i = p.n AND d.j = p.m
 GROUP BY p.user_id, p.n, p.m
 """
+
+
+QUERIES = {
+    "dtw_band_cost": (_q_dtw_band_cost, _SQL_DTW_BAND_COST),
+}

@@ -1,7 +1,6 @@
 """Flagship point-in-time pipeline query + its oracle.
 
-Split out of __spark_entry__.py (registry-only now); see that module's
-docstring for the cross-engine oracle conventions all queries follow."""
+Declares its queries in ``QUERIES``; oracle conventions: __spark_entry__.py."""
 
 from __future__ import annotations
 
@@ -111,3 +110,8 @@ SELECT doc_id, seq, ts, session_id,
         AS lag_sec
 FROM m
 """
+
+
+QUERIES = {
+    "pipeline_features": (_pipeline_scalar, _SQL_PIPELINE),
+}

@@ -1,7 +1,6 @@
 """Equi/anti/band/star joins and set operations.
 
-Split out of __spark_entry__.py (registry-only now); see that module's
-docstring for the cross-engine oracle conventions all queries follow."""
+Declares its queries in ``QUERIES``; oracle conventions: __spark_entry__.py."""
 
 from __future__ import annotations
 
@@ -186,3 +185,13 @@ JOIN region ON n_regionkey = r_regionkey
 JOIN part ON l_partkey = p_partkey
 GROUP BY r_name, p_brand
 """
+
+
+QUERIES = {
+    "equi_join_fanout": (_q_equi_join_fanout, _SQL_EQUI_JOIN_FANOUT),
+    "anti_join": (_q_anti_join, _SQL_ANTI_JOIN),
+    "union_distinct": (_q_union_distinct, _SQL_UNION_DISTINCT),
+    "intersect_users": (_q_intersect_users, _SQL_INTERSECT_USERS),
+    "band_join": (_q_band_join, _SQL_BAND_JOIN),
+    "region_part_revenue": (_q_region_part_revenue, _SQL_REGION_PART_REVENUE),
+}

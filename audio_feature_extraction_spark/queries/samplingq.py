@@ -1,7 +1,6 @@
 """Deterministic stratified and fixed-size sampling.
 
-Split out of __spark_entry__.py (registry-only now); see that module's
-docstring for the cross-engine oracle conventions all queries follow."""
+Declares its queries in ``QUERIES``; oracle conventions: __spark_entry__.py."""
 
 from __future__ import annotations
 
@@ -333,3 +332,15 @@ SELECT eval_doc_id, CASE {ecase} END AS eval_split,
        train_doc_id, CAST(shared AS BIGINT) AS shared_shingles
 FROM pairs WHERE shared >= {_DECON_MIN_OVERLAP}
 """
+
+
+QUERIES = {
+    "stratified_sample": (_q_stratified_sample, _sql_stratified_sample()),
+    "weighted_sample": (_q_weighted_sample, _sql_weighted_sample()),
+    "eval_sample": (_q_eval_sample, _sql_eval_sample()),
+    "dataset_split": (_q_dataset_split, _sql_dataset_split()),
+    "source_mixture": (_q_source_mixture, _sql_source_mixture()),
+    "split_decontamination": (
+        _q_split_decontamination, _sql_split_decontamination()
+    ),
+}

@@ -1,7 +1,6 @@
 """Gap-based sessionization and per-session statistics.
 
-Split out of __spark_entry__.py (registry-only now); see that module's
-docstring for the cross-engine oracle conventions all queries follow."""
+Declares its queries in ``QUERIES``; oracle conventions: __spark_entry__.py."""
 
 from __future__ import annotations
 
@@ -307,3 +306,12 @@ SELECT event_id, user_id, session_id,
   CAST((diff - (diff % 14400000000)) / 14400000000 AS BIGINT) AS sub_session
 FROM anchored
 """
+
+
+QUERIES = {
+    "sessionize": (_q_sessionize, _SQL_SESSIONIZE),
+    "session_stats": (_q_session_stats, _SQL_SESSION_STATS),
+    "session_token_stats": (_q_session_token_stats, _SQL_SESSION_TOKEN_STATS),
+    "session_overlap": (_q_session_overlap, _SQL_SESSION_OVERLAP),
+    "capped_sessions": (_q_capped_sessions, _SQL_CAPPED_SESSIONS),
+}

@@ -1,7 +1,6 @@
 """Embedding similarity search (brute force, LSH, IVF, Arrow) and multimodal.
 
-Split out of __spark_entry__.py (registry-only now); see that module's
-docstring for the cross-engine oracle conventions all queries follow."""
+Declares its queries in ``QUERIES``; oracle conventions: __spark_entry__.py."""
 
 from __future__ import annotations
 
@@ -842,3 +841,24 @@ base AS (SELECT query_id, COUNT(*) AS k FROM gt GROUP BY 1),
 {blocks}
 {final}
 """
+
+
+QUERIES = {
+    "ann_cosine_topk": (_q_ann_topk, _SQL_ANN_TOPK),
+    "ann_lsh_topk": (_q_lsh_topk, _sql_ann_lsh()),
+    "ann_ivf_topk": (_q_ivf_topk, _sql_ann_ivf()),
+    "media_features": (_q_media_features, _sql_media_features()),
+    "frame_sample": (_q_frame_sample, _SQL_FRAME_SAMPLE),
+    "emb_neardup": (_q_emb_neardup, _sql_emb_neardup()),
+    "ann_topk_arrow": (_q_ann_topk_arrow, _SQL_ANN_TOPK_ARROW),
+    "ann_recall": (_q_ann_recall, _sql_ann_recall()),
+    "ann_recall_fitted": (_q_ann_recall_fitted, _sql_ann_recall_fitted()),
+    # auto routes to IVF on this corpus (sampled kth-cos ~0.3 < 0.75),
+    # so the IVF SQL IS the oracle — a routing regression hash-fails
+    "ann_auto_topk": (_q_ann_auto_topk, _sql_ann_ivf()),
+    "emb_dedup_clusters": (_q_emb_dedup_clusters, _sql_emb_dedup_clusters()),
+    "ann_recall_neardup": (_q_ann_recall_neardup, _sql_ann_recall_neardup()),
+    "ann_recall_clustered": (
+        _q_ann_recall_clustered, _sql_ann_recall_clustered()
+    ),
+}

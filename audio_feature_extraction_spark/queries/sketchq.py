@@ -1,8 +1,7 @@
 """Sketch / diagnostic queries: portable HLL approx-distinct and the
 key-skew report.
 
-Split layout per __spark_entry__.py's conventions (registry-only there;
-see that module's docstring for the cross-engine oracle rules)."""
+Declares its queries in ``QUERIES``; oracle conventions: __spark_entry__.py."""
 
 from __future__ import annotations
 
@@ -465,3 +464,13 @@ SELECT CAST(rank AS INT) AS rank, user_id, cnt,
        n_keys
 FROM r WHERE rank <= 10
 """
+
+
+QUERIES = {
+    "hll_distinct": (_q_hll_distinct, _sql_hll_distinct()),
+    "cms_freq": (_q_cms_freq, _sql_cms_freq()),
+    "bloom_prune": (_q_bloom_prune, _sql_bloom_prune()),
+    "approx_quantiles": (_q_approx_quantiles, _sql_approx_quantiles()),
+    "zorder_prune": (_q_zorder_prune, _sql_zorder_prune()),
+    "key_skew": (_q_key_skew, _SQL_KEY_SKEW),
+}

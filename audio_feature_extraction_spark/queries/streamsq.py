@@ -1,7 +1,6 @@
 """Batch twins of the streaming tumbling/sliding window aggregations.
 
-Split out of __spark_entry__.py (registry-only now); see that module's
-docstring for the cross-engine oracle conventions all queries follow."""
+Declares its queries in ``QUERIES``; oracle conventions: __spark_entry__.py."""
 
 from __future__ import annotations
 
@@ -70,3 +69,9 @@ SELECT make_timestamp(epoch_us(ts)
 FROM events, unnest([0, 1]) AS t(j)
 GROUP BY 1, 2
 """
+
+
+QUERIES = {
+    "tumbling_counts": (_q_tumbling_counts, _SQL_TUMBLING_COUNTS),
+    "sliding_counts": (_q_sliding_counts, _SQL_SLIDING_COUNTS),
+}

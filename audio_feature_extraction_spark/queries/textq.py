@@ -1,7 +1,6 @@
 """Text analysis: language-ID, quality, repetition, contamination, vocab.
 
-Split out of __spark_entry__.py (registry-only now); see that module's
-docstring for the cross-engine oracle conventions all queries follow."""
+Declares its queries in ``QUERIES``; oracle conventions: __spark_entry__.py."""
 
 from __future__ import annotations
 
@@ -734,3 +733,21 @@ JOIN cw c ON p.w1 = c.w1
 CROSS JOIN vocab v
 GROUP BY p.doc_id
 """
+
+
+QUERIES = {
+    "text_features": (_q_text_features, _sql_text_features()),
+    "doc_repetition": (_q_doc_repetition, _SQL_DOC_REPETITION),
+    "contamination": (_q_contamination, _SQL_CONTAMINATION),
+    "length_buckets": (_q_length_buckets, _SQL_LENGTH_BUCKETS),
+    "token_vocab": (_q_token_vocab, _SQL_TOKEN_VOCAB),
+    "json_props": (_q_json_props, _SQL_JSON_PROPS),
+    "unigram_surprisal": (_q_unigram_surprisal, _SQL_UNIGRAM_SURPRISAL),
+    "top_ngrams_by_source": (
+        _q_top_ngrams_by_source, _SQL_TOP_NGRAMS_BY_SOURCE
+    ),
+    "bm25_scores": (_q_bm25_scores, _sql_bm25()),
+    "tfidf_topterms": (_q_tfidf_topterms, _SQL_TFIDF_TOPTERMS),
+    "bigram_lm": (_q_bigram_lm, _SQL_BIGRAM_LM),
+    "doc_perplexity": (_q_doc_perplexity, _SQL_DOC_PERPLEXITY),
+}

@@ -1,7 +1,6 @@
 """Token-array operators: slicing, bin-packing, packed batches.
 
-Split out of __spark_entry__.py (registry-only now); see that module's
-docstring for the cross-engine oracle conventions all queries follow."""
+Declares its queries in ``QUERIES``; oracle conventions: __spark_entry__.py."""
 
 from __future__ import annotations
 
@@ -457,3 +456,15 @@ SELECT source, bin_id,
   CAST(SUM(n_tok) AS BIGINT) AS n_tok
 FROM offs GROUP BY source, bin_id
 """
+
+
+QUERIES = {
+    "token_slice": (_q_token_slice, _SQL_TOKEN_SLICE),
+    "binpack_assign": (_q_binpack_assign, _SQL_BINPACK_ASSIGN),
+    "packed_rollup": (_q_packed_rollup, _SQL_PACKED_ROLLUP),
+    "packed_tokens": (_q_packed_tokens, _SQL_PACKED_TOKENS),
+    "bpe_merges": (_q_bpe_merges, _sql_bpe_merges()),
+    "epoch_shuffle": (_q_epoch_shuffle, _sql_epoch_shuffle()),
+    "bpe_vocab_stats": (_q_bpe_vocab_stats, _sql_bpe_vocab_stats()),
+    "packed_sequences": (_q_packed_sequences, _SQL_PACKED_SEQUENCES),
+}

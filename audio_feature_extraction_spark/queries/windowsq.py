@@ -1,7 +1,6 @@
 """Per-entity ordered-window features (LOCF, deltas, rolling, smoothing, ranks).
 
-Split out of __spark_entry__.py (registry-only now); see that module's
-docstring for the cross-engine oracle conventions all queries follow."""
+Declares its queries in ``QUERIES``; oracle conventions: __spark_entry__.py."""
 
 from __future__ import annotations
 
@@ -379,3 +378,24 @@ SELECT event_id, user_id,
 FROM events
 WINDOW w AS (PARTITION BY user_id ORDER BY value, event_id)
 """
+
+
+QUERIES = {
+    "locf_fill": (_q_locf_fill, _SQL_LOCF_FILL),
+    "lag_lead_delta": (_q_lag_lead_delta, _SQL_LAG_LEAD_DELTA),
+    "delta9": (_q_delta9, _SQL_DELTA9),
+    "rolling_stats": (_q_rolling_stats, _SQL_ROLLING_STATS),
+    "rolling_median": (_q_rolling_median, _SQL_ROLLING_MEDIAN),
+    "savgol_smooth": (_q_savgol, _sql_savgol()),
+    "gauss_smooth": (_q_gauss_smooth, _sql_gauss()),
+    "preemph_zcr": (_q_preemph_zcr, _SQL_PREEMPH_ZCR),
+    "running_totals": (_q_running_totals, _SQL_RUNNING_TOTALS),
+    "top1_per_group": (_q_top1_per_group, _SQL_TOP1),
+    "trim_active": (_q_trim_active, _SQL_TRIM_ACTIVE),
+    "gate_clip": (_q_gate_clip, _SQL_GATE_CLIP),
+    "robust_norm": (_q_robust_norm, _SQL_ROBUST_NORM),
+    "delta9_centered": (_q_delta9_centered, _SQL_DELTA9_CENTERED),
+    "time_range_stats": (_q_time_range_stats, _SQL_TIME_RANGE_STATS),
+    "delta9_second": (_q_delta9_second, _SQL_DELTA9_SECOND),
+    "rank_stats": (_q_rank_stats, _SQL_RANK_STATS),
+}

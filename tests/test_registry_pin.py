@@ -84,3 +84,26 @@ def test_content_sha_is_rotation_invariant():
 def test_every_query_is_callable():
     for k, fn in em.queries().items():
         assert callable(fn), k
+
+
+def test_merge_rejects_inconsistent_declarations():
+    """The registry merge names the offending queries when a name is
+    declared by two families, a family name is missing from ORDER, or
+    ORDER lists a name twice."""
+    from types import SimpleNamespace
+
+    import pytest
+
+    q = (lambda spark, sf_dir: None, "SELECT 1")
+    a = SimpleNamespace(QUERIES={"x": q, "y": q})
+    b = SimpleNamespace(QUERIES={"z": q})
+    assert em._merge(["y", "z", "x"], (a, b)).keys() == {"x", "y", "z"}
+    cases = [
+        (["x", "y", "z"], (a, b, SimpleNamespace(QUERIES={"y": q})),
+         r"declared in two families: \['y'\]"),
+        (["x", "y"], (a, b), r"missing from ORDER: \['z'\]"),
+        (["x", "y", "z", "x"], (a, b), r"listed twice in ORDER: \['x'\]"),
+    ]
+    for order, families, message in cases:
+        with pytest.raises(ValueError, match=message):
+            em._merge(order, families)
