@@ -19,8 +19,8 @@ idiomatic Spark DataFrame plans:
 - ``operators.similarity`` brute-force + LSH-bucketed + IVF cell-pruned ANN;
                            Lloyd centroid fitting, regime-routed approx_topk,
                            cell-partitioned parquet index
-- ``operators.dtw``        exact banded weighted-step DTW kernel (cogrouped
-                           applyInPandas, anti-diagonal-vectorized DP)
+- ``operators.dtw``        exact banded weighted-step DTW kernel (one batched
+                           mapInArrow, anti-diagonal DP vectorized across pairs)
 - ``operators.text``       language-ID, quality scoring, token counting,
                            fingerprinting
 - ``operators.multimodal`` opaque binary media columns + Arrow-batched decode
@@ -35,7 +35,8 @@ idiomatic Spark DataFrame plans:
                            join
 
 No per-row Python UDFs anywhere: column expressions first, Arrow-vectorized
-pandas UDFs (applyInPandas / mapInPandas / cogroup) for true kernels only.
+pandas/Arrow UDFs (applyInPandas / mapInPandas / mapInArrow / cogroup) for
+true kernels only.
 """
 
 __version__ = "0.1.0"

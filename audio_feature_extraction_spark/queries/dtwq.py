@@ -34,12 +34,11 @@ def _q_dtw_band_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
     order on both engines."""
     from audio_feature_extraction_spark.operators.dtw import dtw_join
 
+    events = _t(spark, sf_dir, "events")
+
     def side(event_type: str) -> DataFrame:
-        # fresh scan per call: all four derivations below would otherwise
-        # share lineage and trip Spark's ambiguous-self-join analyzer
         return (
-            _t(spark, sf_dir, "events")
-            .where(F.col("event_type") == event_type)
+            events.where(F.col("event_type") == event_type)
             .select(
                 "user_id",
                 "value",
@@ -48,24 +47,9 @@ def _q_dtw_band_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("seq") <= _DTW_CAP)
         )
 
-    left, right = side("click"), side("view")
-    # restrict to pair keys present on BOTH sides (the oracle's pair list);
-    # one-sided keys are dtw_join's NULL-distance path, tested in test_dtw
-    # membership needs no row_number window (a user with >= 1 event always
-    # has seq 1 <= cap): plain filtered distincts keep the broadcast-build
-    # jobs to two cheap scans instead of two full window computations
-    def users(event_type: str) -> DataFrame:
-        return (
-            _t(spark, sf_dir, "events")
-            .where(F.col("event_type") == event_type)
-            .select("user_id")
-            .distinct()
-        )
-
-    common = users("click").join(users("view"), "user_id")
     out = dtw_join(
-        left.join(F.broadcast(common), "user_id"),
-        right.join(F.broadcast(common), "user_id"),
+        side("click"),
+        side("view"),
         on=["user_id"],
         order_col="seq",
         feature_cols=["value"],
@@ -73,7 +57,9 @@ def _q_dtw_band_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
         step_weight=_DTW_SW,
         band=int(_DTW_BAND),
     )
-    return out.select(
+    # pairs present on BOTH sides (the oracle's pair list); one-sided keys
+    # are dtw_join's NULL-distance path, tested in test_dtw
+    return out.where((F.col("n") > 0) & (F.col("m") > 0)).select(
         "user_id",
         "n",
         "m",

@@ -163,13 +163,16 @@ def test_top_ngrams_mapside_group_limit(spark):
     assert re.search(r"Window \[row_number\(\)[^\n]*\[source#\d+\],", plan), plan
 
 
-def test_dtw_cogroup_stays_parallel(spark):
-    """dtw_join pre-partitions on the pair key so AQE's size-based
-    coalescing cannot collapse the Python DP stage to one task: the plan
-    must carry the explicit REPARTITION_BY_NUM shuffle origin."""
+def test_dtw_single_arrow_kernel(spark):
+    """dtw_join runs every pair's DP in one batched Arrow kernel: exactly one
+    MapInArrow, no per-key cogroup, no forced repartition and no
+    row-at-a-time Python UDF. The packing aggregates and the full-outer
+    join reuse the row_number windows' user_id exchanges: two in all."""
     plan = _plan(em.queries()["dtw_band_cost"](spark, SF_DIR))
-    assert "REPARTITION_BY_NUM" in plan, plan
-    assert "FlatMapCoGroupsInPandas" in plan, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 2, plan
+    for node in ("FlatMapCoGroupsInPandas", "REPARTITION_BY_NUM", "BatchEvalPython"):
+        assert node not in plan, plan
 
 
 def test_unigram_surprisal_broadcast_total(spark):
