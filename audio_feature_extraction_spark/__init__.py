@@ -27,12 +27,8 @@ idiomatic Spark DataFrame plans:
                            plumbing (decode kernels stubbed; see module docs)
 - ``sources.checkpoint``   snapshot commits + per-partition lineage manifests,
                            anti-join resume (Iceberg-style; Parquet fallback)
-- ``sources.reports``      CSV/JSON report sinks
-- ``sources.config``       YAML/JSON experiment config + env overrides
+- ``operators.graph``      large-star/small-star connected components
 - ``plans.pipeline``       the flagship end-to-end feature pipeline
-- ``streaming``            session_window, tumbling/sliding frames, stateful
-                           running totals, watermarked stream-stream interval
-                           join
 
 No per-row Python UDFs anywhere: column expressions first, Arrow-vectorized
 pandas/Arrow UDFs (applyInPandas / mapInPandas / mapInArrow / cogroup) for

@@ -53,7 +53,3 @@ def clip(col: str, lo: float, hi: float) -> Column:
         F.least(F.greatest(c, F.lit(lo)), F.lit(hi))
     )
 
-
-def nan_to_null(col: str) -> Column:
-    """Normalize NaN → NULL at ingest so NULL is the only missing encoding."""
-    return F.when(F.isnan(F.col(col)), F.lit(None)).otherwise(F.col(col))

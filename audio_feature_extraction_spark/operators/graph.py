@@ -5,113 +5,23 @@ The reference's only graph structure is the teacher→students pairing map
 grouping. The curation analog a 100 TB pipeline actually needs is one step
 more: near-duplicate PAIRS (minhash/simhash/jaccard output) must become
 duplicate CLUSTERS so exactly one representative per cluster survives.
-That is connected components, implemented here as distributed min-label
-propagation on DataFrames.
+That is connected components, implemented here as the large-star/small-star
+contraction of Kiveris et al. ("Connected Components in MapReduce and
+Beyond", SoCC 2014) on DataFrames.
 
-Scale shape: each round is one shuffle join (messages along edges) + one
-keyed min-agg; rounds needed = max component diameter. Near-dup clusters
-are dense and shallow (diameter ≲ 4 in practice), so this converges in a
-handful of rounds; for adversarial long-chain graphs swap in the
-large-star/small-star contraction (same primitive ops, O(log n) rounds).
-Lineage is truncated every round with localCheckpoint so the plan does not
-grow with iterations; the convergence check is one count() per round —
-a scalar driver action, not a data collect.
+Scale shape: each round is two shuffle groupBy(min) + join phases over the
+canonical edge set, and the number of rounds is O(log n) whatever the
+component diameter — a long chain of near-duplicates costs a few more
+rounds, not one round per hop. Lineage is truncated after every phase with
+localCheckpoint so the plan does not grow with iterations; the convergence
+check is one scalar aggregate (edge count + bit_xor fingerprint) per round,
+not a data collect.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def connected_components(
-    edges: DataFrame,
-    nodes: DataFrame,
-    id_col: str = "id",
-    edge_a: str = "id_a",
-    edge_b: str = "id_b",
-    out: str = "cluster_id",
-    max_iter: int = 50,
-) -> DataFrame:
-    """(node, cluster_id) where cluster_id = min node id reachable in the
-    undirected graph; isolated nodes are their own singleton cluster.
-
-    ``edges`` may list each undirected pair once in either orientation;
-    duplicate edges are harmless (min-agg absorbs them). Edges incident to
-    an id absent from ``nodes`` are IGNORED (no relaying through
-    out-of-universe endpoints) — both CC implementations share this rule.
-    Raises RuntimeError if ``max_iter`` rounds pass without convergence
-    (silently-partial labels would corrupt downstream cluster stats)."""
-    all_nodes = nodes.select(F.col(id_col).alias("node"))
-    sym = edges.select(
-        F.col(edge_a).alias("src"), F.col(edge_b).alias("dst")
-    ).unionAll(
-        edges.select(F.col(edge_b).alias("src"), F.col(edge_a).alias("dst"))
-    )
-    # the contract ignores edges incident to an id absent from ``nodes``;
-    # filtering them out ONCE here (instead of relying on per-round join
-    # drops) shrinks every iteration's join input and makes the first-round
-    # shortcut below valid
-    sym = (
-        sym.join(all_nodes.select(F.col("node").alias("src")), "src", "left_semi")
-        .join(all_nodes.select(F.col("node").alias("dst")), "dst", "left_semi")
-        .localCheckpoint(eager=True)
-    )
-    # only edge-endpoint nodes ride the iteration: isolated nodes are their
-    # own singleton cluster by definition and would otherwise multiply every
-    # round's join/agg/checkpoint by |nodes| / |touched| (a dup graph is
-    # SPARSE — a few % of a 100 TB corpus has a near-dup partner)
-    touched = sym.select(F.col("src").alias("node")).distinct()
-    # first propagation round done as ONE agg: with lbl(v)=v initially, the
-    # round-1 neighbor minimum is just min(neighbor id), so initializing
-    # lbl(v)=min(v, min nbr(v)) skips a full join+agg+checkpoint round
-    nbr0 = sym.groupBy(F.col("src").alias("node")).agg(
-        F.min("dst").alias("m0")
-    )
-    lbl = touched.join(nbr0, "node", "left").select(
-        "node",
-        F.least(F.col("node"), F.coalesce("m0", F.col("node"))).alias("lbl"),
-    ).localCheckpoint(eager=True)
-    changed = -1
-    for _ in range(max_iter):
-        nbr = (
-            sym.join(
-                lbl.select(
-                    F.col("node").alias("dst"), F.col("lbl").alias("dst_lbl")
-                ),
-                "dst",
-            )
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.min("dst_lbl").alias("nbr_min"))
-        )
-        # carry the OLD label through the update so convergence is a scalar
-        # agg over the checkpointed frame — not an extra label-frame join
-        # per round (which at 100 TB is a doc-id-sized shuffle per round)
-        new = (
-            lbl.join(nbr, "node", "left")
-            .select(
-                "node",
-                F.col("lbl").alias("old"),
-                F.least(
-                    F.col("lbl"), F.coalesce("nbr_min", F.col("lbl"))
-                ).alias("lbl"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = new.where(F.col("lbl") != F.col("old")).count()
-        lbl = new.select("node", "lbl")
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(component diameter exceeds max_iter); raise max_iter or use "
-            "connected_components_star (O(log n) rounds)."
-        )
-    isolated = all_nodes.join(touched, "node", "left_anti").select(
-        "node", F.col("node").alias("lbl")
-    )
-    return lbl.unionAll(isolated).select("node", F.col("lbl").alias(out))
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -135,7 +45,7 @@ def _edge_fingerprint(edges: DataFrame) -> tuple:
     return (row["n"], row["h"])
 
 
-def connected_components_star(
+def connected_components(
     edges: DataFrame,
     nodes: DataFrame,
     id_col: str = "id",
@@ -144,10 +54,9 @@ def connected_components_star(
     out: str = "cluster_id",
     max_iter: int = 40,
 ) -> DataFrame:
-    """Large-star/small-star connected components — the O(log n)-round
-    escalation of :func:`connected_components` for graphs whose component
-    DIAMETER is large (adversarial chains), where per-round min-label
-    propagation would need diameter rounds. Alternates:
+    """(node, cluster_id) where cluster_id = min node id reachable in the
+    undirected graph; isolated nodes are their own singleton cluster.
+    Large-star/small-star rounds alternate:
 
     - **large-star**: every node hooks its LARGER neighbors to the minimum
       of its closed neighborhood — halves long paths;
@@ -158,14 +67,15 @@ def connected_components_star(
     (hi > lo) edge set; convergence when the edge multiset fingerprint
     (count + bit_xor of xxhash64) is stable, at which point every edge points
     a node directly at its component minimum. Node ids must be totally
-    ordered (numeric or string). Same output contract as
-    :func:`connected_components` — including the shared rule that edges
-    incident to an id absent from ``nodes`` are ignored (filtered BEFORE
-    the contraction, so labels can never relay through, or land on, an
-    out-of-universe id); raises RuntimeError if ``max_iter`` rounds pass
-    without reaching the fixpoint (a pre-fixpoint edge set can carry one
-    node under multiple labels). The two implementations are
-    property-tested equal."""
+    ordered (numeric or string).
+
+    ``edges`` may list each undirected pair once in either orientation;
+    duplicate edges and self-loops are harmless. Edges incident to an id
+    absent from ``nodes`` are IGNORED (filtered BEFORE the contraction, so
+    labels can never relay through, or land on, an out-of-universe id).
+    Raises RuntimeError if ``max_iter`` rounds pass without reaching the
+    fixpoint (a pre-fixpoint edge set can carry one node under multiple
+    labels, and silently-partial labels would corrupt cluster stats)."""
     all_nodes = nodes.select(F.col(id_col).alias("node"))
     raw = edges.select(F.col(edge_a).alias("hi"), F.col(edge_b).alias("lo"))
     in_universe = raw.join(
@@ -204,7 +114,7 @@ def connected_components_star(
         fp = nfp
     if not converged:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
+            f"connected_components did not converge in {max_iter} "
             "rounds; raise max_iter (rounds needed is O(log n))."
         )
     # converged: each non-min node appears as hi exactly once, pointing at

@@ -10,8 +10,6 @@ entity key, both windows share it):
   1. gap[t]   = ts[t] - lag(ts)[t]
   2. new[t]   = gap > threshold
   3. session  = running_sum(new)    -- cumulative count of session breaks
-
-Streaming variant: ``streaming.sessions`` uses ``session_window`` directly.
 """
 
 from __future__ import annotations

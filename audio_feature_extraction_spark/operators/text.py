@@ -76,21 +76,6 @@ def marker_hits(
     return out
 
 
-def stopword_ratio(text_col: str, markers: list[str] | None = None) -> Column:
-    markers = markers or LANG_MARKERS["en"]
-    return marker_hits(text_col, markers) / whitespace_token_count(text_col)
-
-
-def distinct_word_ratio(text_col: str) -> Column:
-    """Low ratio = heavy repetition (boilerplate / spam signal)."""
-    return F.size(F.array_distinct(words(text_col))) / whitespace_token_count(text_col)
-
-
-def avg_word_len(text_col: str) -> Column:
-    wc = whitespace_token_count(text_col)
-    return (F.length(text_col) - (wc - 1)) / wc
-
-
 def quality_score(text_col: str, w: Column | None = None) -> Column:
     """Deduction ladder: −0.3 each for (too short, too repetitive, words too
     long/short on average), floored at 0. ``w``: optional pre-split words

@@ -64,11 +64,12 @@ def _q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate CLUSTERS: verified jaccard pairs → connected
-    components (min-label propagation, operators/graph.py) → every document
+    components (large-star/small-star, operators/graph.py) → every document
     labeled with its cluster representative (min doc_id reachable) and the
     cluster size. This is the keep-one-representative primitive of corpus
     dedup; the DuckDB oracle computes the same components via a recursive
-    reachability CTE."""
+    reachability CTE. ``dedup_clusters_star`` is this builder too: its
+    registry name and oracle are pinned."""
     from audio_feature_extraction_spark.operators.graph import (
         connected_components,
     )
@@ -218,26 +219,6 @@ FROM directed WHERE containment >= 0.8
 """
 
 
-def _q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same cluster semantics as `dedup_clusters`, computed by the
-    large-star/small-star O(log n)-round contraction instead of min-label
-    propagation — the two algorithms share one oracle, so the driver gate
-    proves them equivalent end-to-end."""
-    from audio_feature_extraction_spark.operators.graph import (
-        connected_components_star,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    pairs = _D.ngram_jaccard_pairs(
-        docs, "doc_id", "text", n=3, threshold=0.8, df_cap=NGRAM_DF_CAP
-    )
-    cc = connected_components_star(pairs, docs, id_col="doc_id")
-    sizes = cc.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
-    return cc.join(sizes, "cluster_id").select(
-        F.col("node").alias("doc_id"), "cluster_id", "cluster_size"
-    )
-
-
 SUBSTR_K, SUBSTR_MIN_SPAN = 8, 16
 
 def _q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -285,6 +266,6 @@ QUERIES = {
     "dedup_containment": (
         _q_dedup_containment, _sql_containment(NGRAM_DF_CAP)
     ),
-    "dedup_clusters_star": (_q_dedup_clusters_star, _sql_dedup_clusters()),
+    "dedup_clusters_star": (_q_dedup_clusters, _sql_dedup_clusters()),
     "substring_dedup": (_q_substring_dedup, _SQL_SUBSTRING_DEDUP),
 }

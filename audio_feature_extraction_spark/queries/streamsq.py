@@ -1,4 +1,4 @@
-"""Batch twins of the streaming tumbling/sliding window aggregations.
+"""Tumbling and sliding event-time window aggregations over the events table.
 
 Declares its queries in ``QUERIES``; oracle conventions: __spark_entry__.py."""
 

@@ -189,7 +189,7 @@ def test_lang_id_cjk_substring_and_und(spark):
 
 
 def test_connected_components_planted(spark):
-    """Chain a-b-c plus pair d-e plus singleton f: min-label propagation
+    """Chain a-b-c plus pair d-e plus singleton f: connected components
     must find {a,b,c}, {d,e}, {f} regardless of edge orientation or
     partitioning."""
     from audio_feature_extraction_spark.operators.graph import (
@@ -210,7 +210,7 @@ def test_connected_components_planted(spark):
 
 
 def test_connected_components_long_chain(spark):
-    """A 12-node path needs multiple propagation rounds; the driver loop
+    """A 12-node path needs multiple contraction rounds; the driver loop
     must iterate to the fixpoint, not stop after one round."""
     from audio_feature_extraction_spark.operators.graph import (
         connected_components,
@@ -236,31 +236,11 @@ def test_connected_components_no_edges(spark):
     assert {r["node"]: r["cluster_id"] for r in out} == {i: i for i in range(5)}
 
 
-def test_star_cc_matches_label_propagation(spark):
-    """large-star/small-star and min-label propagation must agree on random
-    graphs (both = min reachable id)."""
-    import random
-
-    from audio_feature_extraction_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
-
-    rng = random.Random(7)
-    n = 30
-    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(25)]
-    e = spark.createDataFrame(edges, "id_a long, id_b long")
-    nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
-    a = {r["node"]: r["cluster_id"] for r in connected_components(e, nodes).collect()}
-    b = {r["node"]: r["cluster_id"] for r in connected_components_star(e, nodes).collect()}
-    assert a == b
-
-
 def test_star_cc_long_chain(spark):
     """A 64-node path: star contraction must reach the fixpoint well inside
-    the O(log n) budget (min-label would need 63 rounds)."""
+    the O(log n) budget (one round per hop would need 63 rounds)."""
     from audio_feature_extraction_spark.operators.graph import (
-        connected_components_star,
+        connected_components,
     )
 
     n = 64
@@ -268,27 +248,28 @@ def test_star_cc_long_chain(spark):
         [(i, i + 1) for i in range(1, n)], "id_a long, id_b long"
     )
     nodes = spark.createDataFrame([(i,) for i in range(1, n + 1)], "id long")
-    out = connected_components_star(e, nodes, max_iter=14).collect()
+    out = connected_components(e, nodes, max_iter=14).collect()
     assert len(out) == n and all(r["cluster_id"] == 1 for r in out)
 
 
 def test_cc_out_of_universe_edges_ignored_consistently(spark):
-    """Edges incident to ids absent from `nodes` are ignored by BOTH CC
-    implementations — no relaying through, or labels landing on,
-    out-of-universe ids (review finding r03)."""
+    """Edges incident to ids absent from `nodes` are ignored — no relaying
+    through, or labels landing on, out-of-universe ids (review finding
+    r03)."""
     from audio_feature_extraction_spark.operators.graph import (
         connected_components,
-        connected_components_star,
     )
 
-    # x=99 outside the universe bridges 1-99-2: both impls must NOT merge
+    # x=99 outside the universe bridges 1-99-2: CC must NOT merge them
     edges = spark.createDataFrame(
         [(1, 99), (99, 2), (3, 4)], "id_a long, id_b long"
     )
     nodes = spark.createDataFrame([(i,) for i in range(1, 5)], "id long")
-    for fn in (connected_components, connected_components_star):
-        got = {r["node"]: r["cluster_id"] for r in fn(edges, nodes).collect()}
-        assert got == {1: 1, 2: 2, 3: 3, 4: 3}, fn.__name__
+    got = {
+        r["node"]: r["cluster_id"]
+        for r in connected_components(edges, nodes).collect()
+    }
+    assert got == {1: 1, 2: 2, 3: 3, 4: 3}
 
 
 def test_cc_raises_when_not_converged(spark):

@@ -226,7 +226,7 @@ edges_strategy = st.lists(
 @given(edges=edges_strategy)
 @SETTINGS
 def test_connected_components_matches_union_find(spark, edges):
-    """Distributed min-label propagation vs a local union-find on random
+    """Distributed large-star/small-star CC vs a local union-find on random
     graphs (self-loops, duplicate and reversed edges included)."""
     from audio_feature_extraction_spark.operators.graph import (
         connected_components,
@@ -246,7 +246,7 @@ def test_connected_components_matches_union_find(spark, edges):
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     want = {v: find(v) for v in range(n)}
-    # min-label invariant: union-find with min-root merging yields the min
+    # min-id invariant: union-find with min-root merging yields the min
     # reachable id as the representative
     nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
     e = spark.createDataFrame(

@@ -20,9 +20,9 @@ byte-copies, so dedup/ANN workloads are not distorted by planted x10 clones:
   with g ~ N(0, I) seeded by (vec_id, copy) — preserves the label/cluster
   geometry without exact clones.
 
-Everything is deterministic (seeded by copy index). Output is ONLY used by
-bench_extra.py / local measurement; correctness gates keep running against
-the shipped read-only tiers.
+Everything is deterministic (seeded by copy index). Output is ONLY used for
+local measurement (``SPARK_GRAFT_SF_DIR=<out> python bench.py``); correctness
+gates keep running against the shipped read-only tiers.
 
 Usage: python tools/scale_testdata.py [--out /root/sf1.0] [--factor 10]
 """
