@@ -27,6 +27,7 @@ idiomatic Spark DataFrame plans:
                            plumbing (decode kernels stubbed; see module docs)
 - ``sources.checkpoint``   snapshot commits + per-partition lineage manifests,
                            anti-join resume (Iceberg-style; Parquet fallback)
+- ``sources.reports``      CSV/JSON report sinks
 - ``operators.graph``      large-star/small-star connected components
 - ``plans.pipeline``       the flagship end-to-end feature pipeline
 

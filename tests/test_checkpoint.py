@@ -1,6 +1,5 @@
 import os
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -90,105 +89,3 @@ def test_time_travel_read(spark, tiny_df, tmp_path):
     assert m0.select("snapshot_id").distinct().collect() == [(0,)]
     with pytest.raises(FileNotFoundError):
         tbl.read(spark, as_of_snapshot=-1)
-
-
-def test_remaining_watermark_prune_skips_old_snapshots(spark, tmp_path):
-    """remaining(input_min_ts=...) must anti-join against ONLY the
-    snapshots whose manifest watermark reaches the input's time range —
-    proven by a key that lives in an old (pruned) snapshot surviving the
-    resume filter, while keys in kept snapshots still dedupe."""
-    from audio_feature_extraction_spark.sources.checkpoint import (
-        CheckpointTable,
-    )
-
-    t = CheckpointTable(str(tmp_path / "wm_tbl"))
-
-    def day(d, keys):
-        return spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "k": keys,
-                    "ts": pd.Timestamp(f"2024-01-{d:02d} 12:00:00"),
-                    "v": 1.0,
-                }
-            )
-        )
-
-    t.write_snapshot(day(1, ["a", "b"]), ["k"], watermark_col="ts")
-    t.write_snapshot(day(10, ["c", "d"]), ["k"], watermark_col="ts")
-
-    inp = day(11, ["a", "c", "e"])  # a: only in the day-1 snapshot
-
-    # no prune hint: fully correct — both a and c dedupe
-    full = sorted(t.remaining(inp, ["k"]).toPandas().k)
-    assert full == ["e"]
-
-    # prune at 2024-01-05: the day-1 snapshot (watermark 01-01) is
-    # skipped entirely, so 'a' survives — evidence the old files were
-    # never consulted; 'c' (kept snapshot) still dedupes
-    pruned = sorted(
-        t.remaining(inp, ["k"], input_min_ts="2024-01-05")
-        .toPandas().k
-    )
-    assert pruned == ["a", "e"]
-
-    # prune threshold below every watermark: identical to the full path
-    all_kept = sorted(
-        t.remaining(inp, ["k"], input_min_ts="2023-12-01")
-        .toPandas().k
-    )
-    assert all_kept == ["e"]
-
-    # threshold above every watermark: nothing to join, input unchanged
-    none_kept = sorted(
-        t.remaining(inp, ["k"], input_min_ts="2025-01-01")
-        .toPandas().k
-    )
-    assert none_kept == ["a", "c", "e"]
-
-
-def test_remaining_watermark_accepts_T_separated_iso(spark, tmp_path):
-    """ADVICE r04: stored watermarks are space-separated (Spark's timestamp
-    cast); a 'T'-separated input_min_ts must compare by TIME, not by
-    separator byte ('T' > ' ' would wrongly prune a same-day snapshot whose
-    watermark time-of-day is later than the input's)."""
-    from audio_feature_extraction_spark.sources.checkpoint import (
-        CheckpointTable,
-    )
-
-    t = CheckpointTable(str(tmp_path / "wmT_tbl"))
-    t.write_snapshot(
-        spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "k": ["a", "b"],
-                    "ts": pd.Timestamp("2024-01-01 12:00:00"),
-                    "v": 1.0,
-                }
-            )
-        ),
-        ["k"], watermark_col="ts",
-    )
-    inp = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "k": ["a", "e"],
-                "ts": pd.Timestamp("2024-01-01 06:30:00"),
-                "v": 1.0,
-            }
-        )
-    )
-    # wm 12:00 >= input 06:00 -> the snapshot MUST be consulted; the raw
-    # byte compare ('2024-01-01 12..' < '2024-01-01T06..') would skip it
-    # and let the committed key 'a' back into the resume set
-    got = sorted(
-        t.remaining(inp, ["k"], input_min_ts="2024-01-01T06:00:00")
-        .toPandas().k
-    )
-    assert got == ["e"]
-    # space-separated form: identical behavior
-    got2 = sorted(
-        t.remaining(inp, ["k"], input_min_ts="2024-01-01 06:00:00")
-        .toPandas().k
-    )
-    assert got2 == ["e"]

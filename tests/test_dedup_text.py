@@ -236,6 +236,35 @@ def test_connected_components_no_edges(spark):
     assert {r["node"]: r["cluster_id"] for r in out} == {i: i for i in range(5)}
 
 
+def test_star_cc_matches_label_propagation(spark):
+    """large-star/small-star and min-label propagation must agree on random
+    graphs (both = min reachable id). The propagation reference runs
+    locally: every node takes the min label of itself and its neighbours
+    until no label changes."""
+    import random
+
+    from audio_feature_extraction_spark.operators.graph import (
+        connected_components,
+    )
+
+    rng = random.Random(7)
+    n = 30
+    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(25)]
+    lbl = list(range(n))
+    changed = True
+    while changed:
+        changed = False
+        for a, b in edges:
+            m = min(lbl[a], lbl[b])
+            if lbl[a] != m or lbl[b] != m:
+                lbl[a] = lbl[b] = m
+                changed = True
+    e = spark.createDataFrame(edges, "id_a long, id_b long")
+    nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    got = {r["node"]: r["cluster_id"] for r in connected_components(e, nodes).collect()}
+    assert got == dict(enumerate(lbl))
+
+
 def test_star_cc_long_chain(spark):
     """A 64-node path: star contraction must reach the fixpoint well inside
     the O(log n) budget (one round per hop would need 63 rounds)."""
