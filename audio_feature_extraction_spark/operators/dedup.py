@@ -171,8 +171,11 @@ def duplicated_substring_runs(
         F.col(id_col),
         "pos",
         portable_word_hash(F.col("shingle")).alias("_h"),
-    ).persist()  # two consumers (dup-hash agg + semi-join probe) — same
-    # rationale and cache-lifetime contract as ngram_jaccard_pairs above
+    ).persist()  # two consumers (dup-hash agg + semi-join probe): without
+    # it each re-runs the tokenize+explode chain. The blocks stay cached
+    # until the returned plan is garbage-collected (the ContextCleaner then
+    # drops them); they are MEMORY_AND_DISK, so a long-lived session that
+    # keeps many such plans spills before it runs out of memory.
     dup = sh.groupBy("_h").agg(
         F.count_distinct(F.col(id_col)).alias("_nd")
     )
@@ -224,38 +227,31 @@ def exact_dedup(
 # --------------------------------------------------------- n-gram Jaccard
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.8,
-    df_cap: int | None = None,
+def _pair_intersections(
+    df: DataFrame, id_col: str, text_col: str, n: int, df_cap: int | None
 ) -> DataFrame:
-    """All pairs with n-gram-shingle Jaccard ≥ threshold, via the inverted
-    index: explode shingles → self-join on shingle → count intersections →
-    |A∩B| / (|A|+|B|-|A∩B|). Output (id_a, id_b, jaccard), id_a < id_b.
+    """(id_a, id_b, inter, n_a, n_b) for every doc pair id_a < id_b sharing
+    a kept shingle: ``inter`` shared distinct shingles, ``n_a`` / ``n_b``
+    each doc's kept-shingle count. Shingles in more than ``df_cap`` docs
+    are dropped first (none when None).
 
-    The kept-shingle frame feeds THREE consumers (sizes, both self-join
-    sides), and Spark has no automatic subplan materialization — without a
-    persist each consumer re-runs the full corpus tokenize+explode chain
-    (measured ~22% of query wall at sf0.1; at 100 TB it is a full corpus
-    re-read per consumer). persist() rather than localCheckpoint: lineage
-    survives executor loss, blocks spill MEMORY_AND_DISK, and the
-    ContextCleaner drops them once the plan is unreferenced.
+    The kept-shingle frame feeds three consumers (sizes, both self-join
+    sides) from ONE hash(shingle) exchange: the ``df_cap`` document
+    frequency is a window count over that partitioning, the self-join
+    needs no other, and the second join side reuses the first side's
+    exchange, so the corpus is tokenized and exploded once and nothing is
+    cached in the session. The whole stream is shuffled twice, by
+    :func:`shingles` (hash(id)) and here (hash(shingle))."""
+    from pyspark.sql import Window
 
-    Cache lifetime (caller-visible contract): the blocks stay resident
-    until the returned plan's references are garbage-collected — there is
-    no explicit unpersist here because the plan is returned LAZY and the
-    build cannot know when its consumers have run. A long-lived session
-    issuing many such plans should drop its references promptly (or call
-    ``spark.catalog.clearCache()`` between batches); blocks are
-    MEMORY_AND_DISK, so accumulation degrades to disk before it OOMs."""
     sh = shingles(df, id_col, text_col, n)
     if df_cap is not None:
-        hot = sh.groupBy("shingle").count().where(F.col("count") > df_cap)
-        sh = sh.join(hot.select("shingle"), "shingle", "left_anti")
-    sh = sh.persist()
+        n_docs = F.count(F.lit(1)).over(Window.partitionBy("shingle"))
+        sh = (
+            sh.withColumn("_df", n_docs)
+            .where(F.col("_df") <= df_cap)
+            .select(id_col, "shingle")
+        )
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
 
     a = sh.select(F.col(id_col).alias("id_a"), "shingle")
@@ -268,16 +264,28 @@ def ngram_jaccard_pairs(
     )
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    j = (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")),
-        )
-        .where(F.col("jaccard") >= F.lit(threshold))
+    return inter.join(sa, "id_a").join(sb, "id_b")
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int = 3,
+    threshold: float = 0.8,
+    df_cap: int | None = None,
+) -> DataFrame:
+    """All pairs with n-gram-shingle Jaccard ≥ threshold, via the inverted
+    index: explode shingles → self-join on shingle → count intersections →
+    |A∩B| / (|A|+|B|-|A∩B|). Output (id_a, id_b, jaccard), id_a < id_b.
+    ``df_cap`` drops stop-shingles (see :func:`_pair_intersections`)."""
+    j = _pair_intersections(df, id_col, text_col, n, df_cap).withColumn(
+        "jaccard",
+        F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")),
     )
-    return j.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    return j.where(F.col("jaccard") >= F.lit(threshold)).select(
+        "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
+    )
 
 
 def ngram_containment_pairs(
@@ -291,32 +299,12 @@ def ngram_containment_pairs(
     """DIRECTED containment |A∩B| / |A| ≥ threshold: the asymmetric twin of
     :func:`ngram_jaccard_pairs` that catches SUB-document duplication (a
     short doc embedded verbatim in a longer one scores low on jaccard —
-    union-normalized — but 1.0 on containment). Same inverted-index shape:
-    one shingle self-join, candidate-only arithmetic, ``df_cap``
-    stop-shingle drop; the per-pair intersection is computed once and
-    emitted in both directions. Output (id_sub, id_super, containment)
-    with id_sub != id_super.
-
-    Same three-consumer shingle frame as :func:`ngram_jaccard_pairs`, so
-    the same persist() applies (see that docstring for the rationale)."""
-    sh = shingles(df, id_col, text_col, n)
-    if df_cap is not None:
-        hot = sh.groupBy("shingle").count().where(F.col("count") > df_cap)
-        sh = sh.join(hot.select("shingle"), "shingle", "left_anti")
-    sh = sh.persist()
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-
-    a = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    both = inter.join(sa, "id_a").join(sb, "id_b")
+    union-normalized — but 1.0 on containment). Same inverted-index pair
+    frame (:func:`_pair_intersections`: one shingle self-join,
+    candidate-only arithmetic, ``df_cap`` stop-shingle drop); the per-pair
+    intersection is computed once and emitted in both directions. Output
+    (id_sub, id_super, containment) with id_sub != id_super."""
+    both = _pair_intersections(df, id_col, text_col, n, df_cap)
     directed = both.select(
         F.col("id_a").alias("id_sub"),
         F.col("id_b").alias("id_super"),

@@ -9,18 +9,19 @@ That is connected components, implemented here as the large-star/small-star
 contraction of Kiveris et al. ("Connected Components in MapReduce and
 Beyond", SoCC 2014) on DataFrames.
 
-Scale shape: each round is two shuffle groupBy(min) + join phases over the
-canonical edge set, and the number of rounds is O(log n) whatever the
-component diameter — a long chain of near-duplicates costs a few more
-rounds, not one round per hop. Lineage is truncated after every phase with
-localCheckpoint so the plan does not grow with iterations; the convergence
-check is one scalar aggregate (edge count + bit_xor fingerprint) per round,
-not a data collect.
+Scale shape: each round is two window-min phases (``min(...) over
+(partition by hi)``, one exchange each, no join back) and one distinct, and
+the number of rounds is O(log n) whatever the component diameter — a long
+chain of near-duplicates costs a few more rounds, not one round per hop.
+Each round ends in one localCheckpoint, so the plan does not grow with
+iterations; the convergence fingerprint (edge count + bit_xor) is an
+Observation on that checkpoint, so it costs no job of its own and no data
+collect.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -35,14 +36,19 @@ def _canonical(edges: DataFrame) -> DataFrame:
     )
 
 
-def _edge_fingerprint(edges: DataFrame) -> tuple:
+def _checkpoint(edges: DataFrame) -> tuple[DataFrame, tuple]:
+    """``edges`` checkpointed eagerly, with its multiset fingerprint
+    (count, bit_xor(xxhash64(hi, lo))) observed during that same job."""
     # bit_xor: order-independent and overflow-free (an int64 SUM of hashes
     # would throw under the engine's ANSI-on sessions)
-    row = edges.agg(
+    obs = Observation()
+    e = edges.observe(
+        obs,
         F.count(F.lit(1)).alias("n"),
         F.expr("bit_xor(xxhash64(hi, lo))").alias("h"),
-    ).collect()[0]
-    return (row["n"], row["h"])
+    ).localCheckpoint(eager=True)
+    row = obs.get
+    return e, (row["n"], row["h"])
 
 
 def connected_components(
@@ -63,11 +69,12 @@ def connected_components(
     - **small-star**: every node hooks its smaller-or-equal neighbors (and
       itself) to that minimum — flattens partial stars.
 
-    Each phase is one shuffle groupBy(min) + one join, on the canonical
-    (hi > lo) edge set; convergence when the edge multiset fingerprint
-    (count + bit_xor of xxhash64) is stable, at which point every edge points
-    a node directly at its component minimum. Node ids must be totally
-    ordered (numeric or string).
+    Each phase is one window min partitioned by ``hi``; one round (both
+    phases) is one checkpoint of the canonical (hi > lo) edge set.
+    Convergence when the edge set fingerprint (count + bit_xor of xxhash64)
+    is stable, at which point every edge points a node directly at its
+    component minimum. Node ids must be totally ordered (numeric or
+    string).
 
     ``edges`` may list each undirected pair once in either orientation;
     duplicate edges and self-loops are harmless. Edges incident to an id
@@ -81,33 +88,30 @@ def connected_components(
     in_universe = raw.join(
         all_nodes.select(F.col("node").alias("hi")), "hi", "left_semi"
     ).join(all_nodes.select(F.col("node").alias("lo")), "lo", "left_semi")
-    e = _canonical(in_universe).localCheckpoint(eager=True)
-    fp = _edge_fingerprint(e)
+    # the input stays its own checkpoint: a round that starts from the
+    # un-checkpointed pair plan would reference it once per phase
+    e, fp = _checkpoint(_canonical(in_universe))
+    by_hi = Window.partitionBy("hi")
     converged = False
     for _ in range(max_iter):
         # large-star: sym neighborhoods; m(u) = min(neighbors ∪ u);
-        # for v in neighbors, v > u: new edge (v, m)
+        # for v in neighbors, v > u: new edge (v, m). v > u >= m, so the
+        # output is already oriented and loop-free; its duplicates are
+        # harmless to the min below.
         sym = e.select("hi", "lo").unionAll(
             e.select(F.col("lo").alias("hi"), F.col("hi").alias("lo"))
         )
-        m = sym.groupBy(F.col("hi").alias("u")).agg(
-            F.least(F.min("lo"), F.first("hi")).alias("m")
-        )
         large = (
-            sym.join(m, sym["hi"] == m["u"])
+            sym.withColumn("m", F.least(F.min("lo").over(by_hi), F.col("hi")))
             .where(F.col("lo") > F.col("hi"))
             .select(F.col("lo").alias("hi"), F.col("m").alias("lo"))
         )
-        e = _canonical(large).localCheckpoint(eager=True)
         # small-star on the directed (hi -> lo) set: m(h) = min(lo nbrs);
         # hook every lo neighbor and h itself to m
-        mn = e.groupBy("hi").agg(F.min("lo").alias("m"))
-        hooked = e.join(mn, "hi")
-        small = hooked.select(
-            F.col("lo").alias("hi"), F.col("m").alias("lo")
-        ).unionAll(hooked.select("hi", F.col("m").alias("lo")))
-        e = _canonical(small).localCheckpoint(eager=True)
-        nfp = _edge_fingerprint(e)
+        small = large.withColumn("m", F.min("lo").over(by_hi)).select(
+            F.explode(F.array("lo", "hi")).alias("hi"), F.col("m").alias("lo")
+        )
+        e, nfp = _checkpoint(_canonical(small))
         if nfp == fp:
             converged = True
             break

@@ -4,7 +4,7 @@ Declares its queries in ``QUERIES``; oracle conventions: __spark_entry__.py."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from audio_feature_extraction_spark.operators import dedup as _D
 from .common import _t
@@ -79,9 +79,9 @@ def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "doc_id", "text", n=3, threshold=0.8, df_cap=NGRAM_DF_CAP
     )
     cc = connected_components(pairs, docs, id_col="doc_id")
-    sizes = cc.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
-    return cc.join(sizes, "cluster_id").select(
-        F.col("node").alias("doc_id"), "cluster_id", "cluster_size"
+    size = F.count("*").over(Window.partitionBy("cluster_id"))
+    return cc.select(
+        F.col("node").alias("doc_id"), "cluster_id", size.alias("cluster_size")
     )
 
 def _sql_dedup_clusters() -> str:

@@ -4,7 +4,7 @@ Declares its queries in ``QUERIES``; oracle conventions: __spark_entry__.py."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from audio_feature_extraction_spark.operators import multimodal as _M
 from audio_feature_extraction_spark.operators import similarity as _S
@@ -519,13 +519,11 @@ def _q_emb_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb_with_planted(spark, sf_dir)
     pairs = _S.cosine_neardup_pairs(emb, threshold=NEARDUP_COS)
     cc = connected_components(pairs, emb.select("vec_id"), id_col="vec_id")
-    sizes = cc.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("cluster_size")
-    )
-    return cc.join(sizes, "cluster_id").select(
+    size = F.count(F.lit(1)).over(Window.partitionBy("cluster_id"))
+    return cc.select(
         F.col("node").alias("vec_id"),
         "cluster_id",
-        F.col("cluster_size").cast("long").alias("cluster_size"),
+        size.cast("long").alias("cluster_size"),
     )
 
 

@@ -317,3 +317,27 @@ def test_cc_raises_when_not_converged(spark):
     nodes = spark.createDataFrame([(i,) for i in range(1, n + 1)], "id long")
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(e, nodes, max_iter=1)
+
+
+# Build jobs of dedup_clusters at sf0.001: 1 schema read, 9 for the
+# in-universe pair checkpoint, then 4 per star round (2 rounds here).
+# CC rounds are data-dependent, so this bound holds for this data only.
+DEDUP_CLUSTERS_BUILD_JOBS = 18
+
+
+def test_dedup_clusters_build_job_budget(spark):
+    """Each star round is one checkpoint whose convergence fingerprint is
+    observed in that same job: a separate fingerprint aggregate, or a
+    checkpoint per phase, pushes the builder over its budget."""
+    import __spark_entry__ as em
+
+    sc = spark.sparkContext
+    group = "dedup-clusters-builder"
+    sc.setJobGroup(group, "dedup_clusters build-job budget")
+    try:
+        em.queries()["dedup_clusters"](spark, SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= DEDUP_CLUSTERS_BUILD_JOBS, n_jobs

@@ -10,7 +10,9 @@ plan shape, so lock it in:
 - stacked window expressions over one spec collapse into one Window node
   (one sort, not five).
 
-These assert on plan text only — no jobs run, so the suite stays fast.
+These assert on plan text only. Almost all run no job, so the suite stays
+fast; an assertion on exchange reuse runs its query first, because AQE
+decides reuse while executing.
 """
 
 from __future__ import annotations
@@ -261,3 +263,39 @@ def test_qsketch_quantile_windows_share_register_exchange(spark):
     )
     assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 3
     assert "CartesianProduct" not in plan
+
+
+def _subtree(plan: str, marker: str) -> str:
+    """The first plan-tree node whose line contains ``marker``, with every
+    line below it (deeper-indented lines up to its next sibling)."""
+    lines = plan.splitlines()
+    i = next(k for k, ln in enumerate(lines) if marker in ln)
+    depth = re.search(r"[+:]- ", lines[i]).start()
+    out = [lines[i]]
+    for ln in lines[i + 1 :]:
+        m = re.search(r"[+:]- ", ln)
+        if m is None or m.start() <= depth:
+            break
+        out.append(ln)
+    return "\n".join(out)
+
+
+def test_jaccard_pairs_one_shingle_exchange_no_cache(spark):
+    """ngram_jaccard_pairs with a df cap tokenizes and explodes the corpus
+    once and caches nothing: below the shingle self-join the stream is
+    shuffled by doc id (lead window) and by shingle (cap window), and the
+    second join side reads the first side's shingle exchange again. Run
+    first, so the asserted plan is AQE's final one (exchange reuse is
+    decided there)."""
+    from audio_feature_extraction_spark.operators.dedup import ngram_jaccard_pairs
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    df = ngram_jaccard_pairs(docs, "doc_id", "text", df_cap=64)
+    df.collect()
+    plan = _plan(df).split("== Initial Plan ==")[0]
+    assert "InMemoryTableScan" not in plan, plan
+    assert len(re.findall(r"\bGenerate ", plan)) == 1, plan
+    join = _subtree(plan, "Join [shingle#")
+    shuffles = re.findall(r"[+:]- (?:\*\(\d+\) )?Exchange hashpartitioning\((\w+)#", join)
+    assert sorted(shuffles) == ["doc_id", "shingle"], join
+    assert re.search(r"ReusedExchange .*Exchange hashpartitioning\(shingle#", join), join
