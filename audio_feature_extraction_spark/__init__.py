@@ -7,8 +7,8 @@ re-expresses its dataflow semantics — windowed per-entity sequence features,
 gap sessionization, LOCF backfill, as-of alignment, grouped evaluation — as
 idiomatic Spark DataFrame plans:
 
-- ``operators.asof``       as-of / point-in-time join (union+window sorted merge,
-                           cogroup-merge_asof kernel, salting for skew)
+- ``operators.asof``       as-of / point-in-time join (union+window sorted merge
+                           under hash, salted or range partitioning; broadcast)
 - ``operators.sessionize`` gap-based sessionization (VAD segment-merge analog)
 - ``operators.backfill``   LOCF / backfill / fill strategies
 - ``operators.windows``    lag/lead deltas, width-9 regression delta, rolling
@@ -27,7 +27,6 @@ idiomatic Spark DataFrame plans:
                            plumbing (decode kernels stubbed; see module docs)
 - ``sources.checkpoint``   snapshot commits + per-partition lineage manifests,
                            anti-join resume (Iceberg-style; Parquet fallback)
-- ``sources.reports``      CSV/JSON report sinks
 - ``operators.graph``      large-star/small-star connected components
 - ``plans.pipeline``       the flagship end-to-end feature pipeline
 

@@ -12,7 +12,7 @@ from .common import EV_TOL_SEC, EV_TOL_US, _t
 
 
 # --------------------------------------------------------------------------
-# as-of joins (J4/J5) — all three physical strategies against one oracle
+# as-of joins (J4/J5) — every physical strategy against one oracle
 # --------------------------------------------------------------------------
 
 
@@ -113,7 +113,8 @@ QUERIES = {
     "asof_backward": (_q_asof("window"), _SQL_ASOF_BACKWARD),
     "asof_salted": (_q_asof("salted"), _SQL_ASOF_BACKWARD),
     "asof_broadcast": (_q_asof("broadcast"), _SQL_ASOF_BACKWARD),
-    "asof_broadcast_arrow": (_q_asof("broadcast_arrow"), _SQL_ASOF_BACKWARD),
+    # a driver-contract name (ORDER, pins); one broadcast matcher serves both
+    "asof_broadcast_arrow": (_q_asof("broadcast"), _SQL_ASOF_BACKWARD),
     "asof_forward": (
         _q_asof("window", direction="forward"), _SQL_ASOF_FORWARD
     ),

@@ -231,259 +231,6 @@ class CheckpointTable:
         )
         return input_df.join(done, on=key_cols, how="left_anti")
 
-    # ------------------------------------------------------------- upsert
-
-    _OP = "_op"  # 'U' = upsert row, 'D' = equality-delete tombstone
-
-    def upsert(
-        self,
-        df: DataFrame,
-        key_cols: list[str],
-        payload_col: str | None = None,
-        watermark_col: str | None = None,
-    ) -> int:
-        """MERGE INTO, Iceberg-v2 merge-on-read style: append the delta as
-        a snapshot tagged ``_op='U'``; :meth:`read_current` resolves each
-        key to its newest version. Nothing is rewritten — an upsert of k
-        rows costs O(k) writes whatever the table size, which is the only
-        shape that works when the table is 100 TB and the delta is not.
-        Contract: one row per key within a single upsert (enforced
-        downstream by the latest-wins window, but two same-key rows in ONE
-        snapshot have no defined order)."""
-        return self.write_snapshot(
-            df.withColumn(self._OP, F.lit("U")),
-            key_cols,
-            payload_col=payload_col,
-            watermark_col=watermark_col,
-        )
-
-    def delete(self, keys_df: DataFrame, key_cols: list[str]) -> int:
-        """Equality-delete: append a tombstone snapshot holding only the
-        key columns (``_op='D'``). Readers drop the key from the current
-        view; history before the delete is still time-travelable."""
-        return self.write_snapshot(
-            keys_df.select(*key_cols).withColumn(self._OP, F.lit("D")),
-            key_cols,
-        )
-
-    def read_current(
-        self,
-        spark: SparkSession,
-        key_cols: list[str],
-        as_of_snapshot: int | None = None,
-    ) -> DataFrame:
-        """Latest-wins view: per key, the row from the highest committed
-        snapshot id <= ``as_of_snapshot`` (all, when None), with tombstoned
-        keys removed. Plain-append snapshots (written before any upsert,
-        no ``_op`` column) read as upserts via mergeSchema + coalesce.
-
-        One hash exchange on the keys + a map-side WindowGroupLimit (the
-        Spark 4 row_number()<=1 rewrite) — no join, no second shuffle."""
-        from pyspark.sql import Window
-
-        ids = self._committed_as_of(as_of_snapshot)
-        base = self.base_snapshot()
-        if base is not None and base in ids:
-            # the compaction snapshot holds the full state as of base:
-            # everything earlier is redundant for this read (and may
-            # already be expired). as_of BEFORE the base keeps all ids —
-            # pre-base time travel works until expire_snapshots().
-            ids = [i for i in ids if i >= base]
-        paths = [self._snap_path(self.data_dir, i) for i in ids]
-        data = (
-            spark.read.option("basePath", self.data_dir)
-            .option("mergeSchema", "true")
-            .parquet(*paths)
-        )
-        if self._OP not in data.columns:
-            data = data.withColumn(self._OP, F.lit("U"))
-        data = data.withColumn(
-            self._OP, F.coalesce(F.col(self._OP), F.lit("U"))
-        )
-        w = Window.partitionBy(*key_cols).orderBy(
-            F.col("snapshot_id").desc()
-        )
-        return (
-            data.withColumn("_rn", F.row_number().over(w))
-            .where((F.col("_rn") == 1) & (F.col(self._OP) != "D"))
-            .drop("_rn", self._OP)
-        )
-
-    def diff(
-        self,
-        spark: SparkSession,
-        key_cols: list[str],
-        from_snapshot: int | None,
-        to_snapshot: int,
-    ) -> DataFrame:
-        """CDC between two committed versions: one row per changed key with
-        ``change`` in ('I', 'U', 'D') — insert/update/delete of the CURRENT
-        view between ``from_snapshot`` (exclusive basis; None = empty
-        table) and ``to_snapshot``. Row equality is xxhash64 over all
-        payload columns, so an upsert that rewrites a key with identical
-        values is NOT reported. One full-outer join on the keys.
-        Contract: both versions share the payload schema — a column first
-        added between the two snapshots makes the older view's fingerprint
-        unresolvable (diff across an additive schema change is not
-        supported; diff within one schema era is)."""
-        new = self.read_current(spark, key_cols, to_snapshot)
-        payload_cols = [
-            c for c in new.columns
-            if c not in key_cols and c != "snapshot_id"
-        ]
-        fp = F.xxhash64(*[F.col(c) for c in payload_cols]) if payload_cols \
-            else F.lit(0)
-        b = new.select(*key_cols, fp.alias("_fp_b"))
-        if from_snapshot is None:
-            return b.select(*key_cols, F.lit("I").alias("change"))
-        old = self.read_current(spark, key_cols, from_snapshot)
-        a = old.select(*key_cols, fp.alias("_fp_a"))
-        j = a.join(b, key_cols, "full_outer")
-        return (
-            j.select(
-                *key_cols,
-                F.when(F.col("_fp_a").isNull(), "I")
-                .when(F.col("_fp_b").isNull(), "D")
-                .when(F.col("_fp_a") != F.col("_fp_b"), "U")
-                .alias("change"),
-            )
-            .where(F.col("change").isNotNull())
-        )
-
-    # --------------------------------------------------- compaction/expiry
-
-    def _base_path(self) -> str:
-        return os.path.join(self.base, "base_snapshot")
-
-    def base_snapshot(self) -> int | None:
-        """Newest committed compaction baseline, or None. Reads at or after
-        the base prune every earlier snapshot; time travel BEFORE the base
-        still works until :meth:`expire_snapshots` reclaims those dirs."""
-        p = self._base_path()
-        if not os.path.isfile(p):
-            return None
-        with open(p) as f:
-            return int(f.read().strip())
-
-    def compact(self, spark: SparkSession, key_cols: list[str]) -> int:
-        """Squash history: write the whole CURRENT view (latest-wins,
-        tombstones applied) as one snapshot and mark it as the read
-        baseline — the Iceberg rewrite_data_files + new-base analog, the
-        answer to merge-on-read's ever-growing snapshot chain and the
-        small-files problem. Readers then touch ONE snapshot's files
-        instead of N; logical contents are bit-identical (tested).
-
-        Crash-safe by ordering: the marker is written only after the
-        compaction snapshot commits. A crash before the marker leaves a
-        redundant (but harmless) upsert snapshot — every key resolves to
-        identical values through the ordinary latest-wins window."""
-        cur = self.read_current(spark, key_cols).drop("snapshot_id")
-        sid = self.upsert(cur, key_cols)
-        tmp = self._base_path() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(sid))
-        os.replace(tmp, self._base_path())
-        return sid
-
-    def table_stats(self, spark: SparkSession) -> DataFrame:
-        """Maintenance report, one row per committed snapshot: data files,
-        bytes, manifest-recorded rows, payload and max watermark — the
-        numbers a compaction policy reads ("too many small files / too
-        long a merge-on-read chain → compact()"). File counts come from a
-        driver-side directory listing (metadata-only, like Iceberg's
-        manifests — never a data scan); rows/payload come from the
-        already-written manifests."""
-        rows = []
-        for sid in self.committed_snapshots():
-            d = self._snap_path(self.data_dir, sid)
-            files = [
-                os.path.join(d, f)
-                for f in os.listdir(d)
-                if f.endswith(".parquet")
-            ]
-            rows.append(
-                (sid, len(files), sum(os.path.getsize(f) for f in files))
-            )
-        listing = spark.createDataFrame(
-            rows, "snapshot_id int, n_files long, bytes long"
-        )
-        m = self.read_manifest(spark).groupBy("snapshot_id").agg(
-            F.sum("rows").cast("long").alias("rows"),
-            F.sum("payload").cast("long").alias("payload"),
-            F.max("watermark_ts").alias("watermark_ts"),
-        )
-        return listing.join(m, "snapshot_id", "left").orderBy("snapshot_id")
-
-    def expire_snapshots(self) -> list[int]:
-        """Physically delete data+manifest dirs older than the base
-        snapshot (Iceberg expire_snapshots): reclaims space, destroys time
-        travel before the base — call only when history is no longer
-        needed. Returns the dropped snapshot ids."""
-        base = self.base_snapshot()
-        if base is None:
-            return []
-        dropped = []
-        for sid in self._ids(self.data_dir):
-            if sid < base:
-                shutil.rmtree(self._snap_path(self.data_dir, sid))
-                d = self._snap_path(self.manifest_dir, sid)
-                if os.path.isdir(d):
-                    shutil.rmtree(d)
-                dropped.append(sid)
-        return dropped
-
-    def diff_rows(
-        self,
-        spark: SparkSession,
-        key_cols: list[str],
-        from_snapshot: int | None,
-        to_snapshot: int,
-    ) -> DataFrame:
-        """:meth:`diff` with payloads: (key_cols..., change, _old, _new)
-        where ``_old``/``_new`` are structs of the payload columns (NULL
-        on the missing side of an I/D). This is the input shape
-        incremental view maintenance needs — see
-        ``operators/ivm.py::incremental_group_agg``. Same schema-era
-        contract and same single full-outer join as :meth:`diff`."""
-        new = self.read_current(spark, key_cols, to_snapshot)
-        payload_cols = [
-            c for c in new.columns
-            if c not in key_cols and c != "snapshot_id"
-        ]
-        fp = F.xxhash64(*[F.col(c) for c in payload_cols]) if payload_cols \
-            else F.lit(0)
-        b = new.select(
-            *key_cols,
-            F.struct(*payload_cols).alias("_new"),
-            fp.alias("_fp_b"),
-        )
-        if from_snapshot is None:
-            return b.select(
-                *key_cols,
-                F.lit("I").alias("change"),
-                F.lit(None).cast(b.schema["_new"].dataType).alias("_old"),
-                "_new",
-            )
-        old = self.read_current(spark, key_cols, from_snapshot)
-        a = old.select(
-            *key_cols,
-            F.struct(*payload_cols).alias("_old"),
-            fp.alias("_fp_a"),
-        )
-        j = a.join(b, key_cols, "full_outer")
-        return (
-            j.select(
-                *key_cols,
-                F.when(F.col("_fp_a").isNull(), "I")
-                .when(F.col("_fp_b").isNull(), "D")
-                .when(F.col("_fp_a") != F.col("_fp_b"), "U")
-                .alias("change"),
-                "_old",
-                "_new",
-            )
-            .where(F.col("change").isNotNull())
-        )
-
     def verify(self, spark: SparkSession, key_cols: list[str]) -> DataFrame:
         """Recompute lineage from the data and diff against the manifest —
         returns snapshots that disagree on rows or checksum (empty = intact).

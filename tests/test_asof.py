@@ -1,13 +1,13 @@
 """As-of join operator unit tests (SURVEY.md J4/J5): direction, tolerance,
-ties, missing partners, strategy equivalence, cogroup kernel parity."""
+ties, missing partners, strategy equivalence, input validation."""
 
 import numpy as np
 import pandas as pd
 import pytest
 
 from audio_feature_extraction_spark.operators.asof import (
+    STRATEGIES,
     asof_join,
-    asof_join_pandas,
     dedupe_right,
 )
 
@@ -77,7 +77,7 @@ def check(out_pdf, direction="backward", tol=None):
     assert ((om == em) | (pd.isna(om) & pd.isna(em))).all()
 
 
-@pytest.mark.parametrize("strategy", ["window", "salted", "range_merge", "broadcast", "broadcast_arrow"])
+@pytest.mark.parametrize("strategy", STRATEGIES)
 @pytest.mark.parametrize("tol", [None, 60.0])
 def test_backward(dfs, strategy, tol):
     l, r = dfs
@@ -85,16 +85,14 @@ def test_backward(dfs, strategy, tol):
     check(out, "backward", tol)
 
 
-@pytest.mark.parametrize("strategy", ["window", "salted", "range_merge", "broadcast", "broadcast_arrow"])
+@pytest.mark.parametrize("strategy", STRATEGIES)
 def test_forward(dfs, strategy):
     l, r = dfs
     out = asof_join(l, r, on=["k"], direction="forward", strategy=strategy).toPandas()
     check(out, "forward", None)
 
 
-@pytest.mark.parametrize(
-    "strategy", ["window", "salted", "range_merge", "broadcast", "broadcast_arrow"]
-)
+@pytest.mark.parametrize("strategy", STRATEGIES)
 def test_null_payload_partner_wins(spark, strategy):
     """Regression (hypothesis-found): a right row whose PAYLOAD is NULL is
     still the as-of partner — the join must return its NULL, not resurrect
@@ -121,19 +119,12 @@ def test_null_payload_partner_wins(spark, strategy):
     assert pd.isna(out.rv.iloc[0])
 
 
-@pytest.mark.parametrize("tol", [None, 60.0])
-def test_cogroup_kernel_parity(dfs, tol):
-    l, r = dfs
-    out = asof_join_pandas(l, r, on=["k"], tolerance_sec=tol).toPandas()
-    check(out, "backward", tol)
-
-
-@pytest.mark.parametrize("strategy", ["window", "salted", "range_merge", "broadcast", "broadcast_arrow"])
+@pytest.mark.parametrize("strategy", STRATEGIES)
 def test_null_key_equivalence(spark, strategy):
     """NULL join keys must behave identically across all four physical
     strategies: NULL-key left rows match the NULL-key right history (the
-    window strategy's partitionBy groups NULLs together; range_merge's
-    boundary detection must be null-safe, not NaN != NaN)."""
+    window's partitionBy groups NULLs together, and range partitioning
+    sends them all to one partition; broadcast joins null-safe)."""
     l = spark.createDataFrame(
         pd.DataFrame(
             {
@@ -197,10 +188,9 @@ def test_null_left_ts_never_matches_any_strategy(spark):
         [("a", "2024-01-01 00:00:05", 1.0), ("a", "2024-01-01 00:00:15", 2.0)],
         "k string, rts string, rv double",
     ).select("k", F.col("rts").cast("timestamp").alias("rts"), "rv")
-    for strat in ["window", "salted", "range_merge", "broadcast",
-                  "broadcast_arrow"]:
+    for strat in STRATEGIES:
         for d in ["backward", "forward", "nearest"]:
-            if d == "nearest" and strat not in ("window", "salted"):
+            if d == "nearest" and strat == "broadcast":
                 continue
             row = asof_join(
                 left, right, on=["k"], left_ts="ts", right_ts="rts",
@@ -209,20 +199,26 @@ def test_null_left_ts_never_matches_any_strategy(spark):
             assert row["matched_ts"] is None and row["rv"] is None, (strat, d)
 
 
-def test_asof_join_pandas_nearest(spark):
-    """The cogrouped pandas strategy passes direction through to
-    merge_asof, so 'nearest' works there too — pin it."""
-    from pyspark.sql import functions as F
-
-    left = spark.createDataFrame(
-        [("a", "2024-01-01 00:00:10", 1.0)], "k string, ts string, v double"
-    ).select("k", F.col("ts").cast("timestamp").alias("ts"), "v")
-    right = spark.createDataFrame(
-        [("a", "2024-01-01 00:00:05", 1.0), ("a", "2024-01-01 00:00:14", 2.0)],
-        "k string, rts string, rv double",
-    ).select("k", F.col("rts").cast("timestamp").alias("rts"), "rv")
-    row = asof_join_pandas(
-        left, right, on=["k"], left_ts="ts", right_ts="rts",
-        direction="nearest",
-    ).collect()[0]
-    assert row["rv"] == 2.0  # forward at distance 4 beats backward at 5
+@pytest.mark.parametrize(
+    "kw, accepted",
+    [
+        ({"strategy": "broadcast_arrow"}, "range_merge"),
+        ({"strategy": "Window"}, "salted"),
+        ({"direction": "sideways"}, "nearest"),
+        ({"direction": "nearest", "strategy": "broadcast"}, "range_merge"),
+        ({"cluster_on": ["lid"]}, "subset"),
+        ({"cluster_on": ["k"], "strategy": "range_merge"}, "window"),
+    ],
+    ids=[
+        "deleted-strategy", "unknown-strategy", "unknown-direction",
+        "nearest-broadcast", "cluster-not-subset", "cluster-not-window",
+    ],
+)
+def test_invalid_strategy_or_direction_raises(dfs, kw, accepted):
+    """An unknown strategy or direction, nearest with broadcast, or a
+    cluster_on the plan would ignore or cannot use fails at call time with
+    the accepted values named, instead of running some other plan (an
+    assert would be stripped under python -O)."""
+    l, r = dfs
+    with pytest.raises(ValueError, match=accepted):
+        asof_join(l, r, on=["k"], **kw)

@@ -227,24 +227,3 @@ def test_arrow_topk_driver_collect_guard(emb):
     fail fast with the fallback named, not OOM the driver."""
     with pytest.raises(ValueError, match="brute_force_topk"):
         S.brute_force_topk_arrow(emb, emb, k=2, max_query_rows=10)
-
-
-def test_asof_broadcast_arrow_collect_guard(spark, monkeypatch):
-    """Same guard on the as-of broadcast-arrow reference side."""
-    import audio_feature_extraction_spark.operators.similarity as sim
-    from audio_feature_extraction_spark.operators.asof import asof_join
-
-    monkeypatch.setattr(sim, "MAX_DRIVER_COLLECT_ROWS", 5)
-    left = spark.range(10).select(
-        F.col("id").alias("k"), F.timestamp_seconds(F.col("id")).alias("ts")
-    )
-    right = spark.range(10).select(
-        F.col("id").alias("k"),
-        F.timestamp_seconds(F.col("id")).alias("rts"),
-        (F.col("id") * 2).alias("payload"),
-    )
-    with pytest.raises(ValueError, match="range_merge"):
-        asof_join(
-            left, right, on=["k"], left_ts="ts", right_ts="rts",
-            strategy="broadcast_arrow",
-        ).collect()

@@ -84,13 +84,14 @@ def main() -> None:
         plan = (
             fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
         )
-        # sha256 of the plan text with expression IDs and plan ids (both
-        # session-global counters, so they shift with every earlier query)
-        # normalized away, so the hash is stable across sessions and a
-        # cross-round timing drift on unchanged code is mechanically
-        # attributable to host vs plan (VERDICT r06 observation #2 /
-        # next-round #6).
-        canon = re.sub(r"(#|plan_id=)\d+L?", r"\1", plan)
+        # sha256 of the plan text with expression IDs, plan ids and the
+        # suffixes of lambda variable names (``lambda x_3``) normalized
+        # away: all three are session-global counters, so they shift with
+        # every earlier query. The hash is then stable across sessions and
+        # registry order, and a cross-round timing drift on unchanged code
+        # is mechanically attributable to host vs plan (VERDICT r06
+        # observation #2 / next-round #6).
+        canon = re.sub(r"(#|plan_id=|lambda [a-z]+_)\d+L?", r"\1", plan)
         plan_hashes[name] = hashlib.sha256(canon.encode()).hexdigest()[:16]
         f = plan_facts(plan)
         if f["banned"]:
@@ -139,7 +140,7 @@ plus the expression choices in the code are the codegen evidence.)
     assert not banned_any, f"banned plan nodes: {banned_any}"
     with open("BENCH/plan_hashes.json", "w") as fh:
         json.dump(
-            {"sf_dir": sf_dir, "normalized": "expr-ids and plan ids stripped",
+            {"sf_dir": sf_dir, "normalized": "expr-ids, plan ids and lambda variable ids stripped",
              "hashes": plan_hashes}, fh, indent=1, sort_keys=True,
         )
     print(
