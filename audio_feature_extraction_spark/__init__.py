@@ -16,9 +16,9 @@ idiomatic Spark DataFrame plans:
 - ``operators.binpack``    n_tok-aware payload-balanced repartitioning
 - ``operators.dedup``      exact / MinHash-LSH / SimHash / n-gram Jaccard /
                            cross-doc substring-run (ExactSubstr) dedup
-- ``operators.similarity`` brute-force + LSH-bucketed + IVF cell-pruned ANN;
-                           Lloyd centroid fitting, regime-routed approx_topk,
-                           cell-partitioned parquet index
+- ``operators.similarity`` exact Arrow/BLAS top-k + LSH-bucketed + IVF
+                           cell-pruned ANN; Lloyd centroid fitting,
+                           regime-routed approx_topk
 - ``operators.dtw``        exact banded weighted-step DTW kernel (one batched
                            mapInArrow, anti-diagonal DP vectorized across pairs)
 - ``operators.text``       language-ID, quality scoring, token counting,

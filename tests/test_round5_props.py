@@ -246,160 +246,6 @@ def test_substring_runs_merge_adjacent_and_gap_split(spark):
     assert d0.span_tokens.tolist() == [18, 18]
 
 
-# ------------------------------------------------------------- fitted IVF
-
-def test_fit_ivf_centroids_partitioning_invariant(spark):
-    """The 6dp rounding contract: fitted centroids must be identical
-    whatever the input partitioning (summation-order noise absorbed)."""
-    from audio_feature_extraction_spark.operators.similarity import (
-        fit_ivf_centroids,
-    )
-
-    rng = np.random.default_rng(31)
-    pdf = pd.DataFrame(
-        {
-            "vec_id": range(300),
-            "embedding": [rng.normal(0, 1, 16).tolist() for _ in range(300)],
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    c1 = fit_ivf_centroids(df.repartition(1), "embedding", n_cells=4,
-                           dim=16, seed=5, rounds=2)
-    c2 = fit_ivf_centroids(df.repartition(13), "embedding", n_cells=4,
-                           dim=16, seed=5, rounds=2)
-    assert c1 == c2
-
-
-def test_fit_ivf_centroids_reduces_quantization_error(spark):
-    """Lloyd rounds must not make the coarse quantizer worse: mean squared
-    distance to the assigned centroid after fitting <= before (strict <
-    on gaussian data vs gaussian random centroids)."""
-    from audio_feature_extraction_spark.operators.similarity import (
-        _centroid_literals,
-        fit_ivf_centroids,
-    )
-
-    rng = np.random.default_rng(37)
-    X = rng.normal(0, 1, (500, 16))
-    pdf = pd.DataFrame(
-        {"vec_id": range(500), "embedding": [x.tolist() for x in X]}
-    )
-    df = spark.createDataFrame(pdf)
-    fitted = fit_ivf_centroids(df, "embedding", n_cells=4, dim=16, seed=5,
-                               rounds=3)
-
-    def sse(cents):
-        C = np.array(cents)
-        d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-        return float(d.min(1).mean())
-
-    before = sse(_centroid_literals(4, 16, 5))
-    after = sse(fitted)
-    assert after < before, (before, after)
-
-
-def test_fit_ivf_empty_cells_keep_previous_centroid(spark):
-    """Fewer vectors than cells: the unpopulated cells must keep their
-    seed centroids (no NaNs, no drops)."""
-    from audio_feature_extraction_spark.operators.similarity import (
-        _centroid_literals,
-        fit_ivf_centroids,
-    )
-
-    pdf = pd.DataFrame(
-        {"vec_id": [0, 1], "embedding": [[1.0, 0.0], [0.9, 0.1]]}
-    )
-    df = spark.createDataFrame(pdf)
-    init = _centroid_literals(8, 2, 5)
-    fitted = fit_ivf_centroids(df, "embedding", n_cells=8, dim=2, seed=5,
-                               rounds=2)
-    assert len(fitted) == 8
-    changed = sum(1 for a, b in zip(init, fitted) if a != b)
-    assert 1 <= changed <= 2  # only the populated cell(s) moved
-    assert all(all(np.isfinite(x) for x in c) for c in fitted)
-
-
-# ----------------------------------------------------------------- routing
-
-def test_approx_topk_routes_low_cos_to_ivf_with_warning(spark):
-    """On a weak-neighbor corpus auto must serve the IVF result (row-equal)
-    and emit the steering warning (VERDICT r04 #3: the API actively steers
-    users off LSH in this regime)."""
-    import warnings
-
-    from audio_feature_extraction_spark.operators.similarity import (
-        approx_topk,
-        ivf_topk,
-    )
-
-    rng = np.random.default_rng(41)
-    pdf = pd.DataFrame(
-        {
-            "vec_id": range(200),
-            "embedding": [rng.normal(0, 1, 64).tolist() for _ in range(200)],
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    q = df.where(F.col("vec_id") < 3)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        routed = approx_topk(df, q, k=5, method="auto").toPandas()
-    assert any("routing" in str(x.message) for x in w), [str(x.message) for x in w]
-    want = ivf_topk(df, q, k=5).toPandas()
-    key = ["query_id", "rank"]
-    pd.testing.assert_frame_equal(
-        routed.sort_values(key).reset_index(drop=True),
-        want.sort_values(key).reset_index(drop=True),
-    )
-
-
-def test_approx_topk_routes_high_cos_to_lsh(spark):
-    """Planted near-duplicate clusters (kth-neighbor cos ~1): auto must
-    pick LSH (the regime it is actually good at) without warning."""
-    import warnings
-
-    from audio_feature_extraction_spark.operators.similarity import (
-        approx_topk,
-        lsh_bucketed_topk,
-    )
-
-    rng = np.random.default_rng(43)
-    base = rng.normal(0, 1, (3, 64))
-    rows = []
-    vid = 0
-    for b in base:
-        for _ in range(15):  # 15 copies per cluster -> kth(10) cos ~ 1
-            rows.append((vid, (b + rng.normal(0, 0.01, 64)).tolist()))
-            vid += 1
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["vec_id", "embedding"])
-    )
-    q = df.where(F.col("vec_id") < 3)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        routed = approx_topk(df, q, k=10, method="auto").toPandas()
-    assert not any("routing" in str(x.message) for x in w)
-    want = lsh_bucketed_topk(df, q, k=10, n_tables=4).toPandas()
-    key = ["query_id", "rank"]
-    pd.testing.assert_frame_equal(
-        routed.sort_values(key).reset_index(drop=True),
-        want.sort_values(key).reset_index(drop=True),
-    )
-
-
-def test_approx_topk_rejects_unknown_method(spark):
-    from audio_feature_extraction_spark.operators.similarity import (
-        approx_topk,
-    )
-
-    df = spark.range(1).select(
-        F.col("id").alias("vec_id"),
-        F.array(F.lit(1.0)).alias("embedding"),
-    )
-    with pytest.raises(ValueError, match="method"):
-        approx_topk(df, df, method="faiss")
-
-
 # ------------------------------------------------------------ dataset split
 
 def test_dataset_split_stable_under_growth(spark):
@@ -432,91 +278,6 @@ def test_dataset_split_covers_every_row_and_validates(spark):
     assert set(out.split) == {"a", "b"}
     with pytest.raises(ValueError, match="sum"):
         dataset_split(df, "doc_id", {"a": 0.5, "b": 0.3})
-
-
-# ------------------------------------------------- partitioned IVF index
-
-def test_ivf_partitioned_index_prunes_files(spark, tmp_path):
-    """The IVF scale story made measurable: a cell-partitioned parquet
-    layout must serve a query batch by reading ONLY the probed cells'
-    files (Hive partition pruning at file-listing time), and the candidate
-    set must be exactly the rows of those cells."""
-    from audio_feature_extraction_spark.operators.similarity import (
-        read_ivf_candidates,
-        with_ivf_cell,
-        write_ivf_index,
-    )
-
-    rng = np.random.default_rng(47)
-    pdf = pd.DataFrame(
-        {
-            "vec_id": range(400),
-            "embedding": [rng.normal(0, 1, 16).tolist() for _ in range(400)],
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    path = str(tmp_path / "ivf_idx")
-    write_ivf_index(df, path, n_cells=8, dim=16, seed=5)
-
-    queries = df.where(F.col("vec_id") < 2)
-    cand = read_ivf_candidates(
-        spark, path, queries, n_cells=8, nprobe=3, dim=16, seed=5
-    )
-    # independent numpy expectation of the probed-cell union (same
-    # -2 v·c + |c|^2 rank, ties to lowest cell)
-    from audio_feature_extraction_spark.operators.similarity import (
-        _centroid_literals,
-    )
-
-    C = np.array(_centroid_literals(8, 16, 5))
-    Q = np.stack(pdf.embedding[:2].to_numpy())
-    d = -2.0 * Q @ C.T + (C * C).sum(1)[None, :]
-    probed = set()
-    for row in d:
-        probed.update(np.argsort(row, kind="stable")[:3].tolist())
-    # file-level evidence: only probed cell dirs are even LISTED
-    files = cand.inputFiles()
-    assert files, "candidate scan lists no files"
-    for f in files:
-        assert any(f"cell={c}/" in f for c in probed), f
-    assert len(files) < len(spark.read.parquet(path).inputFiles())
-    # row-level evidence: candidates == rows assigned to probed cells
-    full = with_ivf_cell(df, "embedding", 8, 16, 5).select(
-        "vec_id", "cell"
-    ).toPandas()
-    want = set(full[full.cell.isin(probed)].vec_id)
-    got = {r["vec_id"] for r in cand.select("vec_id").collect()}
-    assert got == want
-
-
-def test_fit_ivf_on_hash_sample_still_improves(spark):
-    """The 100 TB fitting contract (pass a hash-sampled frame): centroids
-    fitted on a deterministic ~50% md5 sample must still beat the seed
-    centroids on the FULL corpus' quantization error."""
-    from audio_feature_extraction_spark.operators.quality import hash_bucket
-    from audio_feature_extraction_spark.operators.similarity import (
-        _centroid_literals,
-        fit_ivf_centroids,
-    )
-
-    rng = np.random.default_rng(53)
-    X = rng.normal(0, 1, (600, 16))
-    pdf = pd.DataFrame(
-        {"vec_id": range(600), "embedding": [x.tolist() for x in X]}
-    )
-    df = spark.createDataFrame(pdf)
-    sample = df.where(hash_bucket(F.col("vec_id"), 100) < 50)
-    n_sample = sample.count()
-    assert 200 < n_sample < 400  # the md5 split is roughly half
-    fitted = fit_ivf_centroids(sample, "embedding", n_cells=4, dim=16,
-                               seed=5, rounds=3)
-
-    def sse(cents):
-        C = np.array(cents)
-        d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-        return float(d.min(1).mean())
-
-    assert sse(fitted) < sse(_centroid_literals(4, 16, 5))
 
 
 # ----------------------------------------------- review-fix regressions

@@ -478,29 +478,6 @@ def test_bpe_encode_words_foreign_vocab(spark):
         assert got[w] == py_encode(w), (w, got[w], py_encode(w))
 
 
-def test_estimate_topk_cos_corpus_sampling_lower_bounds(spark):
-    """The router's corpus-side hash-sample (VERDICT r05 observation):
-    the kth-neighbor cosine on a 1/m subsample must LOWER-bound the
-    full-corpus value (fewer candidates -> weaker kth neighbor), so the
-    routing decision errs toward IVF — the safe direction."""
-    import numpy as np
-    from audio_feature_extraction_spark.operators.similarity import (
-        estimate_topk_cos,
-    )
-
-    rng = np.random.default_rng(3)
-    V = rng.normal(0, 1, (400, 16))
-    pdf = pd.DataFrame(
-        {"vec_id": range(400), "embedding": [list(map(float, v)) for v in V]}
-    )
-    df = spark.createDataFrame(pdf)
-    q = df.where(F.col("vec_id") < 3)
-    full = estimate_topk_cos(df, q, k=10)
-    sampled = estimate_topk_cos(df, q, k=10, corpus_sample_buckets=4)
-    assert sampled <= full + 1e-9
-    assert sampled > 0 or full == 0.0
-
-
 def test_pack_sequences_matches_pandas_reference(spark):
     """The concrete packed batch: flattened tokens + member start offsets
     equal an independent pandas packing at any parallelism."""

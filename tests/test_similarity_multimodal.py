@@ -1,4 +1,7 @@
+import warnings
+
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -41,23 +44,9 @@ def test_brute_force_topk(emb, emb_pdf):
     assert got.cos.between(-1.0, 1.0).all()
 
 
-def test_brute_force_topk_arrow_parity(emb):
-    """The Arrow/BLAS bulk path must return the same neighbor sets and
-    rounded cosines as the expression path (ranking is round(cos,6)+id on
-    the Arrow side, so compare as sets per query with cosine values)."""
+def test_brute_force_topk_excludes_self(emb):
     queries = emb.where(F.col("vec_id") < 5)
-    a = S.brute_force_topk(emb, queries, k=10).toPandas()
-    b = S.brute_force_topk_arrow(emb, queries, k=10).toPandas()
-    for qi in range(5):
-        ga = a[a.query_id == qi].sort_values("neighbor_id")
-        gb = b[b.query_id == qi].sort_values("neighbor_id")
-        assert ga.neighbor_id.tolist() == gb.neighbor_id.tolist(), qi
-        assert np.allclose(ga.cos.to_numpy(), gb.cos.to_numpy(), atol=2e-6)
-
-
-def test_brute_force_topk_arrow_excludes_self(emb):
-    queries = emb.where(F.col("vec_id") < 5)
-    out = S.brute_force_topk_arrow(emb, queries, k=10).toPandas()
+    out = S.brute_force_topk(emb, queries, k=10).toPandas()
     assert not (out.query_id == out.neighbor_id).any()
     assert (out.groupby("query_id").size() == 10).all()
 
@@ -181,7 +170,7 @@ def test_arrow_topk_survives_zero_vector(spark):
     rows = [(i, [float(i + 1), 1.0]) for i in range(6)] + [(6, [0.0, 0.0])]
     emb6 = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     q = emb6.where(F.col("vec_id") == 0)
-    out = S.brute_force_topk_arrow(emb6.coalesce(1), q, k=5).toPandas()
+    out = S.brute_force_topk(emb6.coalesce(1), q, k=5).toPandas()
     assert len(out) == 5
     assert 6 not in set(out.neighbor_id)  # the zero vector never ranks
     assert out.cos.notna().all()
@@ -224,6 +213,140 @@ def test_topk_rank_partitioning_invariant(emb):
 
 def test_arrow_topk_driver_collect_guard(emb):
     """The 'small by contract' query side is enforced: a fat query set must
-    fail fast with the fallback named, not OOM the driver."""
-    with pytest.raises(ValueError, match="brute_force_topk"):
-        S.brute_force_topk_arrow(emb, emb, k=2, max_query_rows=10)
+    fail fast with the remedy named, not OOM the driver."""
+    with pytest.raises(ValueError, match="Split the query set"):
+        S.brute_force_topk(emb, emb, k=2, max_query_rows=10)
+
+
+def test_lsh_recall_monotone_in_tables(emb):
+    """OR-amplification soundness: the candidate set of n_tables=4 is a
+    superset of n_tables=1 (same base seed), and approximate top-k hits
+    vs ground truth can only be displaced by other ground-truth members —
+    so per-corpus total recall must be non-decreasing in n_tables."""
+    queries = emb.where(F.col("vec_id") < 10)
+    gt = S.brute_force_topk(emb, queries, k=10).select("query_id", "neighbor_id")
+
+    def hits(n_tables):
+        r = S.lsh_bucketed_topk(emb, queries, k=10, n_tables=n_tables).select(
+            "query_id", "neighbor_id"
+        )
+        return r.join(gt, ["query_id", "neighbor_id"], "left_semi").count()
+
+    h1, h4 = hits(1), hits(4)
+    assert h4 >= h1, (h1, h4)
+    assert h4 > 0
+
+
+# ------------------------------------------------------------- fitted IVF
+
+def _gaussian_frame(spark, seed, n, dim):
+    X = np.random.default_rng(seed).normal(0, 1, (n, dim))
+    pdf = pd.DataFrame({"vec_id": range(n), "embedding": [x.tolist() for x in X]})
+    return X, spark.createDataFrame(pdf)
+
+
+def _sse(X, cents):
+    C = np.array(cents)
+    d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
+    return float(d.min(1).mean())
+
+
+def test_fit_ivf_centroids_partitioning_invariant(spark):
+    """The 6dp rounding contract: fitted centroids must be identical
+    whatever the input partitioning (summation-order noise absorbed)."""
+    _, df = _gaussian_frame(spark, 31, 300, 16)
+    c1 = S.fit_ivf_centroids(df.repartition(1), "embedding", n_cells=4,
+                             dim=16, seed=5, rounds=2)
+    c2 = S.fit_ivf_centroids(df.repartition(13), "embedding", n_cells=4,
+                             dim=16, seed=5, rounds=2)
+    assert c1 == c2
+
+
+def test_fit_ivf_centroids_reduces_quantization_error(spark):
+    """Lloyd rounds must not make the coarse quantizer worse: mean squared
+    distance to the assigned centroid after fitting <= before (strict <
+    on gaussian data vs gaussian random centroids)."""
+    X, df = _gaussian_frame(spark, 37, 500, 16)
+    fitted = S.fit_ivf_centroids(df, "embedding", n_cells=4, dim=16, seed=5,
+                                 rounds=3)
+    before = _sse(X, S._centroid_literals(4, 16, 5))
+    after = _sse(X, fitted)
+    assert after < before, (before, after)
+
+
+def test_fit_ivf_empty_cells_keep_previous_centroid(spark):
+    """Fewer vectors than cells: the unpopulated cells must keep their
+    seed centroids (no NaNs, no drops)."""
+    pdf = pd.DataFrame(
+        {"vec_id": [0, 1], "embedding": [[1.0, 0.0], [0.9, 0.1]]}
+    )
+    df = spark.createDataFrame(pdf)
+    init = S._centroid_literals(8, 2, 5)
+    fitted = S.fit_ivf_centroids(df, "embedding", n_cells=8, dim=2, seed=5,
+                                 rounds=2)
+    assert len(fitted) == 8
+    changed = sum(1 for a, b in zip(init, fitted) if a != b)
+    assert 1 <= changed <= 2  # only the populated cell(s) moved
+    assert all(all(np.isfinite(x) for x in c) for c in fitted)
+
+
+def test_fit_ivf_on_hash_sample_still_improves(spark):
+    """The 100 TB fitting contract (pass a hash-sampled frame): centroids
+    fitted on a deterministic ~50% md5 sample must still beat the seed
+    centroids on the FULL corpus' quantization error."""
+    from audio_feature_extraction_spark.operators.quality import hash_bucket
+
+    X, df = _gaussian_frame(spark, 53, 600, 16)
+    sample = df.where(hash_bucket(F.col("vec_id"), 100) < 50)
+    n_sample = sample.count()
+    assert 200 < n_sample < 400  # the md5 split is roughly half
+    fitted = S.fit_ivf_centroids(sample, "embedding", n_cells=4, dim=16,
+                                 seed=5, rounds=3)
+    assert _sse(X, fitted) < _sse(X, S._centroid_literals(4, 16, 5))
+
+
+# ----------------------------------------------------------------- routing
+
+def _assert_same_topk(got, want):
+    key = ["query_id", "rank"]
+    pd.testing.assert_frame_equal(
+        got.sort_values(key).reset_index(drop=True),
+        want.sort_values(key).reset_index(drop=True),
+    )
+
+
+def test_approx_topk_routes_low_cos_to_ivf_with_warning(spark):
+    """On a weak-neighbor corpus the router must serve the IVF result
+    (row-equal) and emit the steering warning: the API actively steers
+    users off LSH in this regime."""
+    _, df = _gaussian_frame(spark, 41, 200, 64)
+    q = df.where(F.col("vec_id") < 3)
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        routed = S.approx_topk(df, q, k=5).toPandas()
+    assert any("routing" in str(x.message) for x in w), [str(x.message) for x in w]
+    _assert_same_topk(routed, S.ivf_topk(df, q, k=5).toPandas())
+
+
+def test_approx_topk_routes_high_cos_to_lsh(spark):
+    """Planted near-duplicate clusters (kth-neighbor cos ~1): the router
+    must pick LSH (the regime it is actually good at) without warning."""
+    rng = np.random.default_rng(43)
+    base = rng.normal(0, 1, (3, 64))
+    rows = []
+    vid = 0
+    for b in base:
+        for _ in range(15):  # 15 copies per cluster -> kth(10) cos ~ 1
+            rows.append((vid, (b + rng.normal(0, 0.01, 64)).tolist()))
+            vid += 1
+    df = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["vec_id", "embedding"])
+    )
+    q = df.where(F.col("vec_id") < 3)
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        routed = S.approx_topk(df, q, k=10).toPandas()
+    assert not any("routing" in str(x.message) for x in w)
+    _assert_same_topk(
+        routed, S.lsh_bucketed_topk(df, q, k=10, n_tables=4).toPandas()
+    )
