@@ -3,8 +3,7 @@ token counting, document fingerprinting.
 
 All pure column expressions (whole-stage-codegen; zero Python), and every
 primitive is chosen to be reproducible in the DuckDB oracle:
-- hashes go through the portable md5-derived int64
-  (:func:`dedup.portable_word_hash`);
+- the document fingerprint is the md5 hex of the raw text;
 - ratios round(…, 6) at the emit boundary.
 
 The quality ladder mirrors the reference's deduction scoring
@@ -17,10 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from audio_feature_extraction_spark.operators.dedup import (
-    portable_word_hash,
-    words,
-)
+from audio_feature_extraction_spark.operators.dedup import words
 
 # tiny per-language marker lexicons (public stopwords); the heuristic is the
 # classic "most marker hits wins", deterministic tiebreak by list order
@@ -122,48 +118,6 @@ def lang_pick(hits: dict[str, Column]) -> Column:
     return F.when(gm == 0, F.lit("und")).otherwise(out)
 
 
-def lang_id(text_col: str) -> Column:
-    """Marker-lexicon language ID as a single Column — same winner semantics
-    as :func:`lang_pick` over :func:`lang_hits`. Queries use the
-    two-projection lang_hits→lang_pick plan (1.8 s vs 5.4 s here at sf1.0);
-    this single-Column form keeps the fold shape because inlining the hit
-    trees into the flat winner-CASE duplicates each tree ~7× (measured
-    15 s — worse than the fold's 5.4 s)."""
-    hit_cols = list(lang_hits(text_col).items())
-    best = None
-    best_lang = F.lit("und")
-    # reverse order so earlier langs win ties via >= (fold builds a when-chain)
-    for lang, hits in reversed(hit_cols):
-        if best is None:
-            best = hits
-            best_lang = F.when(hits > 0, F.lit(lang)).otherwise(F.lit("und"))
-        else:
-            best_lang = F.when((hits > 0) & (hits >= best), F.lit(lang)).otherwise(
-                best_lang
-            )
-            best = F.greatest(hits, best)
-    return best_lang
-
-
 def doc_fingerprint(text_col: str) -> Column:
     """Whole-document fingerprint: md5 of the raw text."""
     return F.md5(F.col(text_col))
-
-
-def min_shingle_fingerprint(text_col: str, n: int = 3) -> Column:
-    """Winnowing-lite content fingerprint: the minimum portable hash over the
-    doc's word n-gram shingles — stable under local edits elsewhere in the
-    doc (the 1-perm MinHash).
-
-    Short docs (< n words) return NULL. The guard is a ``when``, not
-    ``greatest(…, 0)``: ``sequence(1, 0)`` in Spark is the DESCENDING
-    ``[1, 0]`` and the 0 index crashes ``slice``."""
-    w = words(text_col)
-    grams = F.when(
-        F.size(w) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(w) - (n - 1)),
-            lambda i: F.array_join(F.slice(w, i, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_min(F.transform(grams, portable_word_hash))

@@ -3,10 +3,7 @@
 plus the per-source reference (right) side of the as-of join.
 
 Shared by ``__spark_entry__`` (the driver contract) and the spark-submit
-scaling job, so both run the identical flagship plan. ``replicate(ev, n)``
-scales the input n× with disjoint entity keys — used by the two-parallelism
-scaling benchmark so the job is long enough to amortize fixed overheads
-(partitions stay ≫ cores, keys grow with data, per-key work constant).
+scaling job, so both run the identical flagship plan.
 """
 
 from __future__ import annotations
@@ -24,24 +21,6 @@ def with_v(ev: DataFrame) -> DataFrame:
         F.when(F.col("value") > V_NULL_ABOVE, F.lit(None)).otherwise(
             F.col("value")
         ),
-    )
-
-
-def replicate(ev: DataFrame, n: int) -> DataFrame:
-    """n disjoint copies: user/event ids offset per replica so entity count
-    scales with data volume (work stays embarrassingly parallel across keys)."""
-    if n <= 1:
-        return ev
-    reps = ev.crossJoin(
-        ev.sparkSession.range(n).select(F.col("id").alias("__rep"))
-    )
-    return reps.select(
-        (F.col("event_id") + F.col("__rep") * F.lit(10**12)).alias("event_id"),
-        "ts",
-        (F.col("user_id") + F.col("__rep") * F.lit(10**7)).alias("user_id"),
-        "event_type",
-        "value",
-        "props",
     )
 
 

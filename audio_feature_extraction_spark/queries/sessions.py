@@ -112,12 +112,12 @@ def _q_session_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     gap-sessions (plus total overlap µs). The pair generation is the
     start-bucket ⋈ cover-bucket self-overlap join (operators/rangejoin.py
     interval_self_overlap_pairs, r07): candidates ≈ the true-pair floor
-    instead of the explode-both scheme's per-bucket quadratic (measured
-    sf1.0: 5.1B → 1.37B candidate evaluations for 1.21B true pairs), the
-    start side rides a broadcast so the exploded cover side is never
-    shuffled, and the probe stage is explicitly repartitioned to the
-    session's shuffle parallelism (AQE coalesces the tiny aggregated
-    session frame to a handful of partitions, which would serialize the
+    instead of a per-bucket quadratic (measured sf1.0: 5.1B → 1.37B
+    candidate evaluations for 1.21B true pairs), the start side rides a
+    broadcast so the exploded cover side is never shuffled, and the probe
+    stage is explicitly repartitioned by user to a parallelism derived
+    from the session count (AQE coalesces the tiny aggregated session
+    frame to a handful of partitions, which would serialize the
     billion-candidate probe onto as many cores). Exactly-once emission by
     the lexicographic (start, user) order — never a cross product, never
     a distinct; same-user pairs cannot overlap (gap-sessionized), the
@@ -143,10 +143,10 @@ def _q_session_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
-    # ONE eager stats job over the (persisted) session frame serves both
-    # plan-time decisions — the fan-out guard the old query ran inside the
-    # operator (max duration / bucket <= 512, same failure contract) and
-    # the pair-key packing probe below — and warms the persist cache.
+    # ONE eager stats job over the (persisted) session frame serves every
+    # plan-time decision — the fan-out guard (max duration / bucket <=
+    # 512), the probe parallelism and the pair-key packing probe below —
+    # and warms the persist cache.
     _BUCKET_SEC, _MAX_FANOUT = 1800.0, 512
     stats = sess.agg(
         F.max(F.col("e") - F.col("s")).alias("d"),
@@ -162,14 +162,14 @@ def _q_session_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"~{fanout} buckets at bucket_sec={_BUCKET_SEC}, exceeding "
             f"the {_MAX_FANOUT} fan-out cap — widen the bucket."
         )
-    # cover side hash-partitioned BY USER (not round-robin): every pair's
+    # the operator hash-partitions the cover side BY USER: every pair's
     # earlier-session row is probed in that user's task, so one pair's
     # overlaps land in at most TWO map tasks and the map-side partial
     # aggregate really combines (~5.4 rows/group at sf1.0) instead of
     # emitting ~1 row per group — the exchange carries ~0.23B rows, not
     # the full 1.21B pair stream (which, uncombined, either spilled 112 GB
     # through the map hash maps or had to bypass partial aggregation
-    # entirely; both measured slower this round).
+    # entirely; both measured slower).
     # scale-adaptive probe parallelism from the measured session count
     # (not a constant tuned to either scale): ~2k cover sessions per task
     # keeps the probe task's partial-agg hash map (task's cover users ×
@@ -184,7 +184,6 @@ def _q_session_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe_par = max(sp // 2, min(8 * sp, -(-n_sessions // 2000)))
     pairs = interval_self_overlap_pairs(
         sess, key="user_id", start="s", end="e", bucket_sec=_BUCKET_SEC,
-        partition_cover_by_key=True,
         parallelism=probe_par,
     ).where(F.col("user_id_a") != F.col("user_id_b"))
     # side a starts first (operator contract), so the overlap window is

@@ -302,64 +302,6 @@ def test_asof_nearest_matches_pandas(spark, lrows, rrows, tol, strategy):
     assert ((gv == ev) | (np.isnan(gv) & np.isnan(ev))).all()
 
 
-# --------------------------------------------------------------------------
-# interval overlap join vs brute force (randomized shapes + bucket widths)
-# --------------------------------------------------------------------------
-
-interval_strategy = st.lists(
-    st.tuples(
-        st.integers(min_value=-20_000_000, max_value=20_000_000),  # start us
-        st.integers(min_value=0, max_value=8_000_000),  # length us
-    ),
-    min_size=1,
-    max_size=25,
-)
-
-
-@SETTINGS
-@given(
-    left=interval_strategy,
-    right=interval_strategy,
-    bucket_sec=st.sampled_from([0.5, 1.0, 3.0, 7.0]),
-)
-def test_interval_overlap_join_random_vs_bruteforce(
-    spark, left, right, bucket_sec
-):
-    """Exactly-once pair emission for arbitrary interval sets (zero-length,
-    negative-epoch, bucket-edge) under several bucket widths."""
-    from audio_feature_extraction_spark.operators.rangejoin import (
-        interval_overlap_join,
-    )
-
-    lp = pd.DataFrame(
-        [(i, s, s + n) for i, (s, n) in enumerate(left)],
-        columns=["lid", "s1", "e1"],
-    )
-    rp = pd.DataFrame(
-        [(i, s, s + n) for i, (s, n) in enumerate(right)],
-        columns=["rid", "s2", "e2"],
-    )
-    got = (
-        interval_overlap_join(
-            spark.createDataFrame(lp),
-            spark.createDataFrame(rp),
-            "s1", "e1", "s2", "e2",
-            bucket_sec=bucket_sec,
-        )
-        .select("lid", "rid")
-        .toPandas()
-    )
-    want = {
-        (int(a.lid), int(b.rid))
-        for a in lp.itertuples()
-        for b in rp.itertuples()
-        if a.s1 <= b.e2 and b.s2 <= a.e1
-    }
-    gotset = set(map(tuple, got.values.tolist()))
-    assert len(got) == len(gotset), "duplicate pair emitted"
-    assert gotset == want
-
-
 # --------------------------------------------------- substring-run dedup
 
 docs_strategy = st.lists(

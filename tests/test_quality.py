@@ -126,7 +126,6 @@ def test_stratified_sample_deterministic_and_rates(spark):
 def test_short_doc_shingles_no_crash(spark):
     """Regression: docs shorter than n words must yield empty shingle sets,
     not a descending sequence(1,0) that crashes slice(start=0)."""
-    from audio_feature_extraction_spark.operators import text as T
     from audio_feature_extraction_spark.operators.dedup import shingles
 
     df = spark.createDataFrame(
@@ -134,12 +133,6 @@ def test_short_doc_shingles_no_crash(spark):
         "doc_id long, text string",
     )
     assert shingles(df, "doc_id", "text", n=3).count() == 1
-    fps = dict(
-        df.select(
-            "doc_id", T.min_shingle_fingerprint("text", 3).alias("fp")
-        ).collect()
-    )
-    assert fps[1] is None and fps[2] is None and fps[3] is not None
 
 
 def test_pow2_length_bucket(spark):
@@ -182,3 +175,49 @@ def test_stratified_sample_rate_threshold_rounds(spark):
     df = spark.createDataFrame([(edge, "s")], "k long, src string")
     out = Q.stratified_sample(df, "k", "src", {"s": 0.29}).collect()
     assert len(out) == 1
+
+
+def test_dataset_split_stable_under_growth(spark):
+    """The anti-contamination property: a doc's split assignment must not
+    change when the corpus doubles (hash-range assignment, not random)."""
+    from audio_feature_extraction_spark.operators.quality import (
+        dataset_split,
+    )
+
+    small = spark.range(100).select(F.col("id").alias("doc_id"))
+    big = spark.range(10_000).select(F.col("id").alias("doc_id"))
+    a = dataset_split(small, "doc_id").toPandas().set_index("doc_id")["split"]
+    b = dataset_split(big, "doc_id").toPandas().set_index("doc_id")["split"]
+    assert (a == b.loc[a.index]).all()
+    # fractions roughly respected on the large corpus
+    frac = b.value_counts(normalize=True)
+    assert abs(frac["train"] - 0.8) < 0.02
+    assert abs(frac["val"] - 0.1) < 0.02
+    assert abs(frac["test"] - 0.1) < 0.02
+
+
+def test_dataset_split_covers_every_row_and_validates(spark):
+    from audio_feature_extraction_spark.operators.quality import (
+        dataset_split,
+    )
+
+    df = spark.range(500).select(F.col("id").alias("doc_id"))
+    out = dataset_split(df, "doc_id", {"a": 0.5, "b": 0.5}).toPandas()
+    assert out.split.notna().all()  # the last range is closed at `buckets`
+    assert set(out.split) == {"a", "b"}
+    with pytest.raises(ValueError, match="sum"):
+        dataset_split(df, "doc_id", {"a": 0.5, "b": 0.3})
+
+
+def test_dataset_split_rejects_non_monotonic_fractions(spark):
+    """Negative or net-zero fractions that happen to sum to 1 must fail,
+    not silently produce unreachable splits."""
+    from audio_feature_extraction_spark.operators.quality import (
+        dataset_split,
+    )
+
+    df = spark.range(10).select(F.col("id").alias("doc_id"))
+    with pytest.raises(ValueError, match="must be in"):
+        dataset_split(df, "doc_id", {"a": 1.0, "b": 0.1, "c": -0.1})
+    with pytest.raises(ValueError, match="must be in"):
+        dataset_split(df, "doc_id", {"a": 0.5, "b": 0.0, "c": 0.5})

@@ -1,11 +1,12 @@
-"""r07 optimization tests: interval_self_overlap_pairs (the start-bucket ⋈
-cover-bucket self-overlap join that replaced the explode-both scheme in
-`session_overlap`) and the query's packed/unpacked pair-key branches."""
+"""interval_self_overlap_pairs (the start-bucket ⋈ cover-bucket
+self-overlap join behind `session_overlap`), the query's packed/unpacked
+pair-key branches and its plan-time fan-out guard."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from audio_feature_extraction_spark.operators.rangejoin import (
@@ -50,17 +51,6 @@ def test_self_overlap_pairs_vs_bruteforce(spark):
     gotset = set(map(tuple, got.astype("int64").values.tolist()))
     assert len(got) == len(gotset), "duplicate pair emitted"
     assert gotset == _brute_pairs(df)
-
-
-def test_self_overlap_guard_raises(spark):
-    df = pd.DataFrame({"k": [1, 2], "s": [0, 5], "e": [100_000_000, 6]})
-    import pytest
-
-    with pytest.raises(ValueError, match="fan-out|max_fanout|spans"):
-        interval_self_overlap_pairs(
-            spark.createDataFrame(df), key="k", start="s", end="e",
-            bucket_sec=1.0, max_fanout_per_row=4,
-        ).collect()
 
 
 def _overlap_report_pandas(ev: pd.DataFrame, gap_us: int) -> pd.DataFrame:
@@ -135,3 +125,32 @@ def test_session_overlap_packed_branch(spark, tmp_path):
 def test_session_overlap_unpacked_branch(spark, tmp_path):
     """User ids above 2^31 → the two-column fallback path, same report."""
     _run_overlap_case(spark, tmp_path, uid_base=1 << 33, subdir="big")
+
+
+def test_session_overlap_fanout_guard_raises(spark, tmp_path):
+    """One user whose events are never a gap apart forms one session
+    longer than 512 buckets × 1,800 s: the builder's stats job must
+    refuse it before any pair is generated."""
+    from audio_feature_extraction_spark.queries.common import EV_GAP_SEC
+    from audio_feature_extraction_spark.queries.sessions import (
+        _q_session_overlap,
+    )
+
+    step_s = 4 * 3600
+    assert step_s < EV_GAP_SEC
+    n_ev = 300 * 3600 // step_s + 1  # 300 h > 512 × 1,800 s = 256 h
+    ev = pd.DataFrame(
+        {
+            "event_id": np.arange(n_ev, dtype="int64"),
+            "ts": pd.to_datetime(np.arange(n_ev) * step_s, unit="s"),
+            "user_id": np.int64(7),
+            "event_type": "click",
+            "value": 1.0,
+            "props": "{}",
+        }
+    )
+    d = tmp_path / "long"
+    d.mkdir()
+    spark.createDataFrame(ev).write.parquet(str(d / "events.parquet"))
+    with pytest.raises(ValueError, match="fan-out cap"):
+        _q_session_overlap(spark, str(d))

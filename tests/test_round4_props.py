@@ -495,50 +495,6 @@ def test_bloom_probe_rows_preserved(spark):
     assert out[out.k == "a"].bloom_pass.all()
 
 
-def test_interval_overlap_join_exactly_once_vs_pandas(spark):
-    """Bucketed interval join == brute-force pandas overlap pairs, each
-    pair exactly once, with intervals spanning 0..many buckets and
-    endpoints crossing bucket edges (incl. negative epochs: floor, not
-    truncate, bucketing)."""
-    from audio_feature_extraction_spark.operators.rangejoin import (
-        interval_overlap_join,
-    )
-
-    rng = np.random.default_rng(7)
-    w_us = 1_000_000  # 1s buckets
-    n = 120
-    starts = rng.integers(-5 * w_us, 5 * w_us, n)
-    lengths = rng.integers(0, 4 * w_us, n)  # 0..4 buckets long
-    left = pd.DataFrame(
-        {"lid": range(n), "s1": starts, "e1": starts + lengths}
-    )
-    starts2 = rng.integers(-5 * w_us, 5 * w_us, n)
-    lengths2 = rng.integers(0, 4 * w_us, n)
-    right = pd.DataFrame(
-        {"rid": range(n), "s2": starts2, "e2": starts2 + lengths2}
-    )
-    got = (
-        interval_overlap_join(
-            spark.createDataFrame(left),
-            spark.createDataFrame(right),
-            "s1", "e1", "s2", "e2",
-            bucket_sec=1.0,
-        )
-        .select("lid", "rid")
-        .toPandas()
-    )
-    # brute force
-    want = {
-        (int(a.lid), int(b.rid))
-        for a in left.itertuples()
-        for b in right.itertuples()
-        if a.s1 <= b.e2 and b.s2 <= a.e1
-    }
-    gotset = set(map(tuple, got.values.tolist()))
-    assert len(got) == len(gotset), "duplicate pair emitted"
-    assert gotset == want
-
-
 def test_drift_psi_matches_independent_numpy(spark, tmp_path):
     """Engine PSI == an independently-coded numpy PSI (same fixed bins /
     split / epsilon convention) on synthetic drifted + stable types."""
