@@ -13,7 +13,8 @@ idiomatic Spark DataFrame plans:
 - ``operators.backfill``   LOCF / backfill / fill strategies
 - ``operators.windows``    lag/lead deltas, width-9 regression delta, rolling
                            stats, Savitzky-Golay, cumulative ops, pre-emphasis
-- ``operators.binpack``    n_tok-aware payload-balanced repartitioning
+- ``operators.binpack``    n_tok-aware payload-balanced bin ids per group,
+                           packed token batches, seeded epoch order keys
 - ``operators.dedup``      exact / MinHash-LSH / SimHash / n-gram Jaccard /
                            cross-doc substring-run (ExactSubstr) dedup
 - ``operators.similarity`` exact Arrow/BLAS top-k + LSH-bucketed + IVF

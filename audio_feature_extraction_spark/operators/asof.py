@@ -19,7 +19,7 @@ strategies, same semantics (equivalence is tested):
                 ``cluster_on`` subset) feeds the window.
 
 ``salted``      the window partition key is extended with a salt: left rows
-                get pmod(xxhash64(salt_on), S); right rows are replicated to
+                get pmod(xxhash64(ts), S); right rows are replicated to
                 all S salts. Use when the equi key is coarse and skewed (one
                 hot ``source``) — a single window partition would otherwise
                 serialize the hot key on one task.
@@ -65,32 +65,31 @@ def _union_frames(
     left: DataFrame,
     right: DataFrame,
     on: list[str],
-    left_ts: str,
-    right_ts: str,
+    ts: str,
     right_payload: list[str],
 ):
     lcols = left.columns
     l = left.select(
         *lcols,
-        F.col(left_ts).alias(_TS),
+        F.col(ts).alias(_TS),
         F.lit(0).alias(_MARK),
         *[F.lit(None).cast(right.schema[c].dataType).alias(f"__r_{c}") for c in right_payload],
-        F.lit(None).cast(right.schema[right_ts].dataType).alias("__r_ts"),
+        F.lit(None).cast(right.schema[ts].dataType).alias("__r_ts"),
     )
     r = right.select(
         *[
             F.col(c).alias(c) if c in on else F.lit(None).cast(left.schema[c].dataType).alias(c)
             for c in lcols
         ],
-        F.col(right_ts).alias(_TS),
+        F.col(ts).alias(_TS),
         F.lit(1).alias(_MARK),
         *[F.col(c).alias(f"__r_{c}") for c in right_payload],
-        F.col(right_ts).alias("__r_ts"),
+        F.col(ts).alias("__r_ts"),
     )
     return l.unionByName(r)
 
 
-def _finish(matched: DataFrame, left_cols, left_ts, right_payload, tolerance_sec, direction):
+def _finish(matched: DataFrame, left_cols, right_payload, tolerance_sec, direction):
     # a NULL left-ts row has no position in time and never matches (pandas
     # merge_asof parity; also the broadcast strategy's behavior). Without
     # this, the forward window's desc sort (NULLS LAST) exposes EVERY right
@@ -120,17 +119,16 @@ def asof_join(
     right: DataFrame,
     on: list[str],
     left_ts: str = "ts",
-    right_ts: str | None = None,
     tolerance_sec: float | None = None,
     direction: str = "backward",
     strategy: str = "window",
     salt_buckets: int = 8,
-    salt_on: list[str] | None = None,
     cluster_on: list[str] | None = None,
 ) -> DataFrame:
     """As-of join; returns all left columns + ``matched_ts`` + right payload
     columns (NULL when no match within tolerance — the left-outer /
-    missing-partner case, `dtw_alignment.py:1443-1472`).
+    missing-partner case, `dtw_alignment.py:1443-1472`). Both sides carry
+    their event time in the column named ``left_ts``.
 
     ``cluster_on``: optional strict subset/prefix of ``on`` to hash-partition
     the union by (strategy="window" only). Hash partitioning on a subset of
@@ -168,21 +166,19 @@ def asof_join(
             f"cluster_on {cluster_on} must be a subset of the equi keys {on} "
             "and needs strategy='window'"
         )
-    right_ts = right_ts or left_ts
-    right_payload = [c for c in right.columns if c not in set(on) | {right_ts}]
+    right_payload = [c for c in right.columns if c not in set(on) | {left_ts}]
 
     if strategy == "broadcast":
         return _broadcast_asof(
-            left, right, on, left_ts, right_ts, right_payload, tolerance_sec, direction
+            left, right, on, left_ts, right_payload, tolerance_sec, direction
         )
 
-    u = _union_frames(left, right, on, left_ts, right_ts, right_payload)
+    u = _union_frames(left, right, on, left_ts, right_payload)
     nparts = int(u.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
     part_keys = list(on)
     if strategy == "salted":
-        salt_on = salt_on or [left_ts]
-        salt = F.pmod(F.xxhash64(*salt_on), F.lit(salt_buckets)).cast("int")
+        salt = F.pmod(F.xxhash64(left_ts), F.lit(salt_buckets)).cast("int")
         # left rows pick one salt; right rows are replicated to every salt so
         # each salt cell sees the complete right side for its key
         l_salted = u.where(F.col(_MARK) == 0).withColumn(_SALT, salt)
@@ -255,15 +251,14 @@ def asof_join(
         *[F.col(f"__m.{c}").alias(f"__m___r_{c}") for c in right_payload],
         F.col("__m.ts").alias("__m___r_ts"),
     )
-    return _finish(matched, left.columns, left_ts, right_payload, tolerance_sec, direction)
+    return _finish(matched, left.columns, right_payload, tolerance_sec, direction)
 
 
 def _broadcast_asof(
     left: DataFrame,
     right: DataFrame,
     on: list[str],
-    left_ts: str,
-    right_ts: str,
+    ts: str,
     right_payload: list[str],
     tolerance_sec: float | None,
     direction: str,
@@ -277,7 +272,7 @@ def _broadcast_asof(
     refs = right.groupBy(*on).agg(
         F.array_sort(
             F.collect_list(
-                F.struct(F.col(right_ts).alias("ts"), *[F.col(c) for c in right_payload])
+                F.struct(F.col(ts).alias("ts"), *[F.col(c) for c in right_payload])
             )
         ).alias("__refs")
     )
@@ -295,7 +290,7 @@ def _broadcast_asof(
         *[f"__k_{k}" for k in on]
     )
 
-    lts = F.col(left_ts)
+    lts = F.col(ts)
     # try_element_at: NULL on empty candidate array (a left row with no
     # in-tolerance partner) — element_at throws under ANSI mode (Spark 4
     # default), and NULL is exactly the intended missing-partner semantics.
@@ -310,9 +305,9 @@ def _broadcast_asof(
     if tolerance_sec is not None:
         tol = F.lit(tol_us(tolerance_sec))
         lag = (
-            ts_micros(left_ts) - ts_micros(m_ts)
+            ts_micros(ts) - ts_micros(m_ts)
             if direction == "backward"
-            else ts_micros(m_ts) - ts_micros(left_ts)
+            else ts_micros(m_ts) - ts_micros(ts)
         )
         ok = m_ts.isNotNull() & (lag <= tol)
     else:

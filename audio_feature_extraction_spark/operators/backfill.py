@@ -39,11 +39,6 @@ def backfill(col: str, w: WindowSpec, default: float | None = None) -> Column:
     return F.coalesce(filled, F.lit(default))
 
 
-def locf_then_backfill(col: str, w: WindowSpec) -> Column:
-    """pandas ffill().bfill() analog for offline gold tables."""
-    return F.coalesce(locf(col, w, default=None), backfill(col, w, default=None))
-
-
 def clip(col: str, lo: float, hi: float) -> Column:
     """np.clip analog (`04_…/feature_extraction.py:125-139`). NaN stays NaN
     as in numpy — Spark sorts NaN above every double, so a bare

@@ -1,28 +1,23 @@
 """n_tok-aware bin-packing of token payloads (SURVEY.md §4.2).
 
-Problem: repartitioning sequences by row count balances *rows*, but the
-shuffle payload is the ``tokens`` arrays — docs vary 10-1000× in n_tok, so
-row-balanced partitions are byte-skewed, and the slowest (fattest) partition
-gates every stage that follows. The reference has the same issue in
-file-batch form (batch_size=20 regardless of file length,
+Problem: batching sequences by row count balances *rows*, but the payload
+is the ``tokens`` arrays — docs vary 10-1000× in n_tok, so row-balanced
+batches are byte-skewed. The reference has the same issue in file-batch
+form (batch_size=20 regardless of file length,
 `05_dtw_alignment_experiment/dtw_alignment.py:44-45`).
 
-Strategy (fully distributed, two light shuffles, no driver collect of data):
+Strategy (fully distributed, one window, no driver collect of data):
 
-1. running payload total per ordering key — one window over a cheap
-   deterministic order (``order_cols``);
-2. ``bin_id = floor(cum_payload / target_bytes_per_bin)`` — consecutive rows
-   pack greedily into bins of ~equal *payload*, not equal row count;
-3. ``repartition(num_bins, bin_id)`` — hash exchange on the computed bin.
+1. running payload total per group (``group_cols``, e.g. ``source``) in a
+   cheap deterministic order (``order_cols``) — the classic prefix-scan
+   window, parallel across groups;
+2. ``bin_id = floor(cum_payload / target_payload_per_bin)`` — consecutive
+   rows pack greedily into bins of ~equal *payload*, not equal row count.
+   Bin ids are local to their group: (group, bin) names a bin.
 
-The window in step 1 is global-ordered *per group* (default: per ``source``)
-so the sort parallelizes across groups; within a group the running sum is the
-classic prefix-scan window. For truly single-group inputs, pass
-``salt_groups > 1`` to pre-split the scan (bins remain balanced because the
-split is payload-blind).
-
-Determinism: bin assignment is a pure function of (order_cols, payload), so
-two runs at different parallelism produce identical bin contents — tested.
+Determinism: bin assignment is a pure function of (group, order_cols,
+payload), so two runs at different parallelism produce identical bin
+contents — tested.
 """
 
 from __future__ import annotations
@@ -32,114 +27,35 @@ from pyspark.sql import functions as F
 
 BIN_COL = "__bin_id"
 
-# ungrouped default: pre-split the prefix scan so it never plans a single-task
-# global window. A fixed constant (not the session's shuffle partitions) keeps
-# bin assignment identical across parallelism levels — the determinism contract.
-DEFAULT_SCAN_SALTS = 32
-
 
 def with_bin_id(
     df: DataFrame,
+    group_cols: list[str],
     payload_col: str = "n_tok",
     order_cols: list[str] | None = None,
-    group_cols: list[str] | None = None,
     target_payload_per_bin: int = 4_000_000,
-    salt_groups: int | None = None,
     out: str = BIN_COL,
-    mix: bool = True,
 ) -> DataFrame:
-    """Assign a payload-balanced bin id.
+    """Assign a payload-balanced bin id, local to each ``group_cols`` group.
 
     ``target_payload_per_bin`` is in payload units (tokens ≈ 4 bytes each for
     int32, so 4M tokens ≈ 16 MiB shuffle blocks — small enough to never spill,
-    large enough to amortize task overhead).
-
-    ``salt_groups=None`` (default) resolves to 1 when ``group_cols`` already
-    parallelize the scan, else to ``DEFAULT_SCAN_SALTS`` — no code path plans
-    ``Window.orderBy`` without ``partitionBy`` unless explicitly forced with
-    ``salt_groups=1``."""
+    large enough to amortize task overhead)."""
     order_cols = order_cols or ["doc_id", "seq"]
-    group_cols = list(group_cols) if group_cols else []
-    gcols = group_cols.copy()
-    if salt_groups is None:
-        salt_groups = 1 if gcols else DEFAULT_SCAN_SALTS
-    if salt_groups > 1:
-        # payload-blind split of a single giant group; xxhash64 of the order
-        # key is deterministic across runs and partitionings
-        df = df.withColumn(
-            "__scan_salt",
-            F.pmod(F.xxhash64(*order_cols), F.lit(salt_groups)).cast("int"),
-        )
-        gcols.append("__scan_salt")
-
-    w = Window.partitionBy(*gcols).orderBy(*order_cols) if gcols else Window.orderBy(
-        *order_cols
-    )
+    w = Window.partitionBy(*group_cols).orderBy(*order_cols)
     # coalesce: NULL payloads count as 0 (a NULL in the running sum would
     # poison every later row's bin to NULL); greatest(cum-1, 0): leading
     # zero-payload rows have cum=0 and would otherwise floor to a stray
-    # bin -1 (negative ids collide across salts after the salt mix)
+    # bin -1
     cum = F.sum(F.coalesce(F.col(payload_col).cast("long"), F.lit(0))).over(
         w.rowsBetween(Window.unboundedPreceding, 0)
     )
-    df = df.withColumn(
+    return df.withColumn(
         out,
         F.floor(
             F.greatest(cum - F.lit(1), F.lit(0))
             / F.lit(int(target_payload_per_bin))
         ).cast("int"),
-    )
-    if salt_groups > 1:
-        # disambiguate bins across scan salts, then drop the helper
-        df = df.withColumn(
-            out, F.col(out) * F.lit(salt_groups) + F.col("__scan_salt")
-        ).drop("__scan_salt")
-    if group_cols and mix:
-        # bins are per-group; make the id globally unique via a hash mix
-        # (mix=False keeps the per-group local bin index — used where the
-        # assignment itself is the observable output, e.g. the oracle-gated
-        # binpack query)
-        df = df.withColumn(
-            out,
-            F.pmod(
-                F.xxhash64(F.concat_ws("\x00", *group_cols), F.col(out)),
-                F.lit(2**31 - 1),
-            ).cast("int"),
-        )
-    return df
-
-
-def repartition_by_payload(
-    df: DataFrame,
-    payload_col: str = "n_tok",
-    order_cols: list[str] | None = None,
-    group_cols: list[str] | None = None,
-    target_payload_per_bin: int = 4_000_000,
-    num_partitions: int | None = None,
-    salt_groups: int | None = None,
-) -> DataFrame:
-    """Bin-pack then exchange: returns the same rows, partitioned so each
-    task's token-payload is ~target_payload_per_bin."""
-    binned = with_bin_id(
-        df,
-        payload_col=payload_col,
-        order_cols=order_cols,
-        group_cols=group_cols,
-        target_payload_per_bin=target_payload_per_bin,
-        salt_groups=salt_groups,
-    )
-    nparts = num_partitions or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    return binned.repartition(nparts, F.col(BIN_COL)).drop(BIN_COL)
-
-
-def partition_payload_stats(df: DataFrame, payload_col: str = "n_tok") -> DataFrame:
-    """Observability: per-partition (rows, payload) — feeds the skew check in
-    tests and the lineage manifest."""
-    return df.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.col(payload_col).cast("long")).alias("payload"),
     )
 
 
@@ -173,39 +89,12 @@ def epoch_order_key(seed: int, *cols) -> F.Column:
     return portable_word_hash(F.concat(*parts))
 
 
-def epoch_shuffle(
-    df: DataFrame,
-    seed: int,
-    batch_cols: list[str],
-    num_partitions: int | None = None,
-    out: str = "epoch_key",
-) -> DataFrame:
-    """Deterministic global shuffle for training order WITHOUT a global
-    sort: tag every batch with :func:`epoch_order_key`, range-exchange on
-    the key and sort within partitions — the write-ordered-by plan
-    (RangePartitioning + local sorts; no single-node stage, unlike a bare
-    orderBy that a consumer then repartitions away). Reading partitions
-    in index order replays the epoch's exact permutation; the key rides
-    along in ``out`` so manifests can record it next to the pack
-    fingerprints (see ``queries/tokensq.py::_q_packed_tokens``).
-
-    Two epochs differ only by ``seed``; batches never move between
-    epochs' bins, so the permutation is a pure re-read order — zero
-    re-packing cost."""
-    key = epoch_order_key(seed, *batch_cols)
-    tagged = df.withColumn(out, key)
-    parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    return tagged.repartitionByRange(parts, F.col(out)).sortWithinPartitions(
-        out, *batch_cols
-    )
-
-
 def pack_sequences(
     df: DataFrame,
+    group_cols: list[str],
     tokens_col: str = "tokens",
     payload_col: str = "n_tok",
     order_cols: list[str] | None = None,
-    group_cols: list[str] | None = None,
     target_payload_per_bin: int = 4_000_000,
     out_bin: str = BIN_COL,
 ) -> DataFrame:
@@ -241,10 +130,9 @@ def pack_sequences(
         order_cols=order_cols,
         group_cols=group_cols,
         target_payload_per_bin=target_payload_per_bin,
-        mix=False,
         out=out_bin,
     )
-    keys = list(group_cols or []) + [out_bin]
+    keys = list(group_cols) + [out_bin]
     w = Window.partitionBy(*keys).orderBy(*order_cols)
     cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     with_off = packed.withColumn(

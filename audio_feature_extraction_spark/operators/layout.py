@@ -3,8 +3,8 @@
 Writing a 100 TB table sorted by a Z-order key over (entity, time) makes
 BOTH per-entity and per-time-range scans touch few files, where a linear
 (row-major) sort serves only its leading column — the standard
-Delta/Iceberg `ZORDER BY` layout optimization, here as a pure column
-expression any engine reproduces: interleave the low ``bits`` of two
+Delta/Iceberg `ZORDER BY` layout optimization, here as portable SQL
+text any engine evaluates: interleave the low ``bits`` of two
 non-negative ints, a in the even positions, b in the odd.
 
 Built as ONE generated SQL expression (sum of shifted bit terms) rather
@@ -18,8 +18,6 @@ speaker/session dirs) is a 1-D layout; this is its 2-D scale answer.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 
 def zorder_key_sql(a_expr: str, b_expr: str, bits: int = 10) -> str:
@@ -35,6 +33,3 @@ def zorder_key_sql(a_expr: str, b_expr: str, bits: int = 10) -> str:
         terms.append(f"(((({b_expr}) >> {i}) & 1) << {2 * i + 1})")
     return "(" + " + ".join(terms) + ")"
 
-
-def zorder_key(a_expr: str, b_expr: str, bits: int = 10) -> Column:
-    return F.expr(zorder_key_sql(a_expr, b_expr, bits))

@@ -12,9 +12,10 @@ Scale notes (100 TB):
 - the repetition report (:func:`repetition_stats`) is one posexplode +
   lead-window exchange on hash(doc); the trigram→bigram→unigram rollups and
   per-doc joins all reuse that partitioning (zero further exchanges). The
-  per-row array formulation (:func:`duplicate_ngram_fraction`) is kept as
-  the column-level API but higher-order lambdas are interpreted in Spark —
-  prefer the explode plan in bulk paths.
+  per-row formulations (:func:`duplicate_ngram_fraction`,
+  :func:`top_word_stats`) are kept as the references tests compare it
+  against; their higher-order lambdas are interpreted in Spark, so no
+  bulk path uses them.
 - contamination is an inverted-index equi-join on shingle hashes with the
   (small) benchmark side broadcast — never an all-pairs comparison; per-doc
   overlap counts come from one more keyed agg.
@@ -37,22 +38,6 @@ from audio_feature_extraction_spark.operators.dedup import (
     portable_word_hash,
     words,
 )
-
-__all__ = [
-    "duplicate_ngram_fraction",
-    "repetition_stats",
-    "top_word_stats",
-    "contamination_overlap",
-    "hash_bucket",
-    "stratified_sample",
-    "take_per_stratum",
-    "pow2_length_bucket",
-    "dyadic_pow",
-    "source_mixture_rates",
-    "source_mixture_resample",
-    "split_decontamination",
-]
-
 
 def duplicate_ngram_fraction(text_col: str, n: int) -> Column:
     """Fraction of the doc's word n-grams that are repeats of an earlier
@@ -482,90 +467,6 @@ def dyadic_pow_sql(x_sql: str, exponent: float) -> str:
             rest -= level
         level /= 2
     return " * ".join(terms)
-
-
-def source_mixture_rates(
-    df: DataFrame,
-    source_col: str,
-    alpha: float,
-    buckets: int = 10_000,
-) -> DataFrame:
-    """Per-source deterministic acceptance thresholds for temperature
-    resampling: target mixture q_s ∝ p_s^alpha (p_s = natural share), the
-    standard multi-source reweighting of LLM data pipelines (alpha = 1
-    keeps the natural mix; alpha → 0 flattens toward uniform).
-
-    Downsampling only (no duplication): the scale is chosen so the most
-    upweighted source — the SMALLEST, for alpha < 1 — keeps 100%:
-
-        r_s = (q_s / p_s) / max_t (q_t / p_t) = (n_min / n_s)^(1 - alpha)
-
-    and the kept counts k_s = r_s * n_s ∝ n_s^alpha hit the target mixture
-    exactly (up to bucket quantization). Returns one row per source:
-    (source, n_rows, accept_threshold) with threshold = floor(r_s *
-    buckets) — a row is kept iff ``hash_bucket(key) < accept_threshold``.
-
-    Engine-portable by construction: for dyadic alpha the rate is a
-    nested-sqrt product (:func:`dyadic_pow` — every step correctly
-    rounded, so Spark and DuckDB floor the SAME double). One tiny
-    aggregate (n_sources rows) + a single-row broadcast of n_min; the
-    corpus itself is NOT scanned twice by this helper — callers join the
-    returned frame back broadcast.
-
-    Reference analog: per-category corpus composition,
-    `04_feature_extraction_experiment/feature_extractor.py:728-745`.
-    """
-    counts = df.groupBy(F.col(source_col).alias("source")).agg(
-        F.count(F.lit(1)).alias("n_rows")
-    )
-    nmin = counts.agg(F.min("n_rows").alias("_nmin"))
-    rate = dyadic_pow(
-        F.col("_nmin").cast("double") / F.col("n_rows").cast("double"),
-        1.0 - alpha,
-    )
-    return (
-        counts.crossJoin(F.broadcast(nmin))
-        .select(
-            "source",
-            "n_rows",
-            F.floor(rate * F.lit(float(buckets)))
-            .cast("long")
-            .alias("accept_threshold"),
-        )
-    )
-
-
-def source_mixture_resample(
-    df: DataFrame,
-    key_col: str,
-    source_col: str,
-    alpha: float,
-    buckets: int = 10_000,
-) -> DataFrame:
-    """Temperature resampling: keep each row iff its key's md5 bucket
-    falls below its source's acceptance threshold (see
-    :func:`source_mixture_rates`). Deterministic (pure hash, no RNG,
-    partition-layout independent) and MONOTONE in the rate: raising a
-    source's rate only ADDS rows, never reshuffles the kept set — so when
-    the corpus grows and the thresholds move, only rows at the threshold
-    margin flip, unlike RNG sampling where the whole sample changes.
-
-    Plan shape: one count aggregate over (source) — column-pruned to a
-    single column at scan — then a broadcast join back on source and a
-    zero-shuffle hash filter. Composes with ``binpack.pack_batches``:
-    resample first, pack the survivors, and packed batches hit the target
-    mixture in expectation."""
-    rates = source_mixture_rates(df, source_col, alpha, buckets)
-    b = hash_bucket(F.col(key_col), buckets)
-    return (
-        df.withColumn("_b", b)
-        .join(
-            F.broadcast(rates.withColumnRenamed("source", "_mix_src")),
-            F.col(source_col) == F.col("_mix_src"),
-        )
-        .where(F.col("_b") < F.col("accept_threshold"))
-        .drop("_b", "_mix_src", "n_rows", "accept_threshold")
-    )
 
 
 def split_decontamination(

@@ -44,11 +44,11 @@ def session_bounds(
     keys: list[str],
     ts: str = "ts",
     sid: str = "session_id",
-    min_duration_sec: float | None = None,
     min_rows: int | None = None,
 ) -> DataFrame:
     """Collapse rows → one row per session with bounds and counts, then apply
-    the reference's merge-then-filter short-session drop."""
+    the reference's merge-then-filter short-session drop (sessions with
+    fewer than ``min_rows`` rows)."""
     agg = df_with_sid.groupBy(*keys, sid).agg(
         F.min(ts).alias("session_start"),
         F.max(ts).alias("session_end"),
@@ -56,8 +56,6 @@ def session_bounds(
     )
     dur = (ts_micros("session_end") - ts_micros("session_start")).cast("double") / 1e6
     agg = agg.withColumn("duration_sec", dur)
-    if min_duration_sec is not None:
-        agg = agg.where(F.col("duration_sec") >= F.lit(float(min_duration_sec)))
     if min_rows is not None:
         agg = agg.where(F.col("n_rows") >= F.lit(int(min_rows)))
     return agg

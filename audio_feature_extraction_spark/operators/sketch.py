@@ -1,8 +1,8 @@
 """Deterministic, engine-portable sketches for cardinality & frequency at
 scale: HyperLogLog approximate distinct-count and a Count-Min frequency
-sketch, both mergeable and both built ONLY from exact integer register
-math over the portable md5-60 hash, so any SQL engine reproduces the
-estimates bit-for-bit. HLL register derivation:
+sketch, both built ONLY from exact integer register math over the
+portable md5-60 hash, so any SQL engine reproduces the estimates
+bit-for-bit. HLL register derivation:
 
 - hash: the engine-wide portable md5-derived 60-bit int64
   (:func:`~audio_feature_extraction_spark.operators.dedup.portable_word_hash`);
@@ -101,8 +101,7 @@ def cms_registers(
     groupBy(group, _row, _idx) count partial-aggregates map-side to at most
     ``d*w`` cells per task, so the single shuffle carries a fixed-size
     frame per group regardless of row count — the same bounded-exchange
-    property as :func:`hll_registers`. Mergeable: union + SUM per cell
-    (:func:`cms_merge`), exactly additive because counters are exact."""
+    property as :func:`hll_registers`."""
     rows = df.select(*group_cols, value.cast("string").alias("_v"))
     exploded = rows.select(
         *group_cols,
@@ -124,22 +123,6 @@ def cms_registers(
     )
 
 
-def cms_merge(
-    *register_frames: DataFrame,
-    group_cols: list[str],
-) -> DataFrame:
-    """Merge CMS register tables from DISJOINT inputs: union + per-cell SUM
-    (counters are exact counts, so the merge is exactly the sketch of the
-    concatenated input). Unlike :func:`hll_merge`, overlapping inputs
-    double-count — CMS is a linear sketch."""
-    out = register_frames[0]
-    for f in register_frames[1:]:
-        out = out.unionByName(f)
-    return out.groupBy(*group_cols, "_row", "_idx").agg(
-        F.sum("_cnt").alias("_cnt")
-    )
-
-
 def cms_lookup(
     registers: DataFrame,
     probes: DataFrame,
@@ -153,7 +136,7 @@ def cms_lookup(
     the counter at that key's cell (0 for an empty cell). The CMS
     guarantee: never an undercount, overcount bounded by ~2N/w per row
     with probability 1 - 2^-d (property-tested in
-    tests/test_round4_props.py).
+    tests/test_sketch.py).
 
     Plan shape: probes explode d-ways then join the FIXED-size register
     frame (≤ d*w rows per group) broadcast-hash — the probe side, however
@@ -271,12 +254,11 @@ def qsketch_registers(
     hi: float,
     n_bins: int = 512,
 ) -> DataFrame:
-    """Mergeable quantile sketch: exact counts over ``n_bins`` equal-width
+    """Quantile sketch: exact counts over ``n_bins`` equal-width
     bins of the clamped domain [lo, hi) — (group_cols..., _bin, _cnt),
     at most ``n_bins`` rows per group whatever the input size. Out-of-range
     values clamp into the edge bins (the estimate degrades gracefully at
-    the tails instead of erroring). Linear sketch: disjoint-split merge is
-    union + per-bin SUM (:func:`qsketch_merge`), exactly additive.
+    the tails instead of erroring).
 
     This is the bounded-state answer to exact ``percentile()`` at 100 TB:
     the exact version shuffles every distinct value; the sketch shuffles
@@ -292,19 +274,6 @@ def qsketch_registers(
         df.select(*group_cols, clamped.alias("_bin"))
         .groupBy(*group_cols, "_bin")
         .agg(F.count(F.lit(1)).alias("_cnt"))
-    )
-
-
-def qsketch_merge(
-    *register_frames: DataFrame,
-    group_cols: list[str],
-) -> DataFrame:
-    """Merge register tables from DISJOINT inputs: union + per-bin SUM."""
-    out = register_frames[0]
-    for f in register_frames[1:]:
-        out = out.unionByName(f)
-    return out.groupBy(*group_cols, "_bin").agg(
-        F.sum("_cnt").alias("_cnt")
     )
 
 
@@ -347,23 +316,6 @@ def qsketch_quantiles(
         name = f"q_{str(q).replace('.', '_')}"
         aggs.append(F.max(F.when(crossing, est)).alias(name))
     return r.groupBy(*group_cols).agg(*aggs)
-
-
-def hll_merge(
-    *register_frames: DataFrame,
-    group_cols: list[str],
-) -> DataFrame:
-    """Merge register tables from disjoint (or overlapping) inputs into one:
-    union + per-(group, idx) max. Because max is idempotent/commutative/
-    associative, merging partial sketches gives EXACTLY the registers of the
-    combined input — the property that lets 1000 executors (or 1000 daily
-    partitions) sketch independently and fold the fixed-size register
-    tables, never re-reading raw data (tested in
-    tests/test_round4_props.py::test_hll_merge_is_lossless)."""
-    out = register_frames[0]
-    for f in register_frames[1:]:
-        out = out.unionByName(f)
-    return out.groupBy(*group_cols, "_idx").agg(F.max("_rank").alias("_rank"))
 
 
 def hll_estimate(

@@ -31,10 +31,6 @@ LANG_MARKERS: dict[str, list[str]] = {
 BPE_ISH_PATTERN = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"
 
 
-def whitespace_token_count(text_col: str) -> Column:
-    return F.size(words(text_col))
-
-
 def bpe_ish_token_count(text_col: str) -> Column:
     """Count of GPT-2-style pre-tokenizer matches (letters runs / digit runs /
     single punctuation) — the standard cheap token estimate."""

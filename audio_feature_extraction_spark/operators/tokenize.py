@@ -22,10 +22,6 @@ rounds as unrolled window CTEs and must agree bit for bit):
     adjacent occurrences (``aaa`` under (a, a) → ``aa a``);
   * the loop stops early when no adjacent pair is left.
 
-Encoding (:func:`bpe_encode_words`) replays learned merges per word with
-the same rule, so it runs per batch in a ``mapInPandas`` and needs no
-single task.
-
 No reference analog (the reference corpus is audio); this is the
 standard subword-vocabulary construction of an LLM pipeline.
 """
@@ -35,12 +31,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-__all__ = [
-    "bpe_word_counts",
-    "bpe_learn",
-    "bpe_encode_words",
-]
 
 _MERGE_COLS = ["merge_round", "left_sym", "right_sym", "merged", "pair_count"]
 _MERGE_SCHEMA = (
@@ -149,24 +139,3 @@ def bpe_learn(
 
     return mdf, one.applyInPandas(symbols_kernel, _SYM_SCHEMA)
 
-
-def bpe_encode_words(
-    wc: DataFrame, merges: list[tuple[str, str]]
-) -> DataFrame:
-    """Apply an already-learned merge list to a (word, cnt) table — the
-    ENCODE side of the tokenizer: new/foreign words tokenize under the
-    frozen vocabulary by replaying the merges in learning order (the
-    standard BPE inference rule). Returns (word, cnt, pos, s) with s the
-    subword tokens in position order. Per word, so it runs per batch."""
-    merges = [(a, b) for a, b in merges]
-
-    def encode(batches):
-        for pdf in batches:
-            syms = [list(w) for w in pdf["word"]]
-            for a, b in merges:
-                syms = [_merge(s, a, b) for s in syms]
-            yield _symbol_rows(pdf, syms)
-
-    return wc.select("word", F.col("cnt").cast("long")).mapInPandas(
-        encode, _SYM_SCHEMA
-    )

@@ -39,13 +39,14 @@ def _history(w: WindowSpec) -> WindowSpec:
 # ---------------------------------------------------------------- W3: lag/lead
 
 
-def delta1(col: str, w: WindowSpec, fill: float = 0.0) -> Column:
-    """First difference, np.diff analog (04_…/feature_extractor.py:293)."""
-    return F.coalesce(F.col(col) - F.lag(col, 1).over(w), F.lit(fill))
+def delta1(col: str, w: WindowSpec) -> Column:
+    """First difference, np.diff analog (04_…/feature_extractor.py:293);
+    the first row of each entity gets 0.0."""
+    return F.coalesce(F.col(col) - F.lag(col, 1).over(w), F.lit(0.0))
 
 
-def lead_delta(col: str, w: WindowSpec, fill: float = 0.0) -> Column:
-    return F.coalesce(F.lead(col, 1).over(w) - F.col(col), F.lit(fill))
+def lead_delta(col: str, w: WindowSpec) -> Column:
+    return F.coalesce(F.lead(col, 1).over(w) - F.col(col), F.lit(0.0))
 
 
 # ------------------------------------------------- W2: width-9 regression delta
@@ -94,7 +95,6 @@ def delta2_trailing(
     order: list[str],
     half: int = 4,
     out: str = "d2",
-    keep_d1: str | None = None,
 ) -> DataFrame:
     """Δ² (delta-delta): :func:`delta_trailing` applied to its own output —
     the reference stacks Δ and Δ² onto every feature
@@ -104,10 +104,9 @@ def delta2_trailing(
     by both passes; edge replication composes (the Δ² pad reads the
     edge-replicated Δ, exactly like librosa's repeated pad-and-convolve)."""
     w = entity_window(keys, order)
-    d1 = keep_d1 or "__d1"
-    df = df.withColumn(d1, delta_trailing(col, w, half))
-    df = df.withColumn(out, delta_trailing(d1, w, half))
-    return df if keep_d1 else df.drop(d1)
+    df = df.withColumn("__d1", delta_trailing(col, w, half))
+    df = df.withColumn(out, delta_trailing("__d1", w, half))
+    return df.drop("__d1")
 
 
 def delta_centered(col: str, w: WindowSpec, half: int = 4) -> Column:

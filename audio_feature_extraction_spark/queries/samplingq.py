@@ -133,9 +133,18 @@ FROM documents GROUP BY 1
 _MIX_ALPHAS = (0.5, 0.75)
 
 def _q_source_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature resampling report (quality.source_mixture_rates): per
-    (source, alpha) the deterministic md5-bucket acceptance threshold,
-    kept counts, realized mixture share and the p_s^alpha target share.
+    """Temperature resampling report: per (source, alpha) the deterministic
+    md5-bucket acceptance threshold, kept counts, realized mixture share
+    and the p_s^alpha target share.
+
+    Downsampling only: the smallest source keeps 100%, so source s keeps
+    at rate r_s = (n_min / n_s)^(1 - alpha) and the kept counts
+    k_s = r_s * n_s ∝ n_s^alpha hit the target mixture up to bucket
+    quantization. ``accept_threshold = floor(r_s * 10 000)``; a doc is
+    kept iff ``hash_bucket(doc_id) < accept_threshold`` — deterministic
+    and monotone in the rate (a higher rate only adds docs). For dyadic
+    alpha the rate is a nested-sqrt product (``quality.dyadic_pow``),
+    so Spark and DuckDB floor the same double.
 
     Plan shape (ADVICE r06 wording fix, measured r07): the bounded
     per-(source, bucket) histogram (≤ n_sources × 10 000 rows, map-side

@@ -58,7 +58,6 @@ def _q_binpack_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_cols=["doc_id"],
         group_cols=["lang"],
         target_payload_per_bin=BIN_CAP,
-        mix=False,
         out="bin_id",
     )
     return out.select("doc_id", "lang", "bin_id")
@@ -82,7 +81,6 @@ def _q_packed_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_cols=["doc_id"],
         group_cols=["lang"],
         target_payload_per_bin=BIN_CAP,
-        mix=False,
         out="bin_id",
     )
     return packed.groupBy("lang", "bin_id").agg(
@@ -130,7 +128,6 @@ def _q_packed_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_cols=["doc_id", "seq"],
         group_cols=["source"],
         target_payload_per_bin=PACK_CAP,
-        mix=False,
         out="bin_id",
     )
     csv = F.array_join(F.col("tokens").cast("array<string>"), ",")
@@ -287,7 +284,6 @@ def _q_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_cols=["doc_id", "seq"],
         group_cols=["source"],
         target_payload_per_bin=PACK_CAP,
-        mix=False,
         out="bin_id",
     )
     batches = packed.groupBy("source", "bin_id").agg(

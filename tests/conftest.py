@@ -45,3 +45,21 @@ def assert_feature_match(eng: pd.DataFrame, gold: pd.DataFrame):
         assert xa.dtype in (np.dtype("int32"), np.dtype("int64"))
         assert np.array_equal(xa.astype(np.int64), np.asarray(y).astype(np.int64))
     assert (eng.session_id.to_numpy() == gold.session_id.to_numpy()).all()
+
+
+def write_table(spark, tmp_path, name: str, pdf: pd.DataFrame) -> str:
+    """Write ``pdf`` as ``<tmp_path>/<name>.parquet`` and return the
+    directory — a one-table stand-in for a testdata scale-factor dir that
+    the query builders read."""
+    spark.createDataFrame(pdf).coalesce(1).write.mode("overwrite").parquet(
+        str(tmp_path / f"{name}.parquet")
+    )
+    return str(tmp_path)
+
+
+def md5_60(s: str) -> int:
+    """Independent copy of the engine's portable 60-bit hash (hashlib,
+    not Spark): int64 of the first 15 hex chars of md5."""
+    import hashlib
+
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)

@@ -186,14 +186,14 @@ def test_null_left_ts_never_matches_any_strategy(spark):
     )
     right = spark.createDataFrame(
         [("a", "2024-01-01 00:00:05", 1.0), ("a", "2024-01-01 00:00:15", 2.0)],
-        "k string, rts string, rv double",
-    ).select("k", F.col("rts").cast("timestamp").alias("rts"), "rv")
+        "k string, ts string, rv double",
+    ).select("k", F.col("ts").cast("timestamp").alias("ts"), "rv")
     for strat in STRATEGIES:
         for d in ["backward", "forward", "nearest"]:
             if d == "nearest" and strat == "broadcast":
                 continue
             row = asof_join(
-                left, right, on=["k"], left_ts="ts", right_ts="rts",
+                left, right, on=["k"], left_ts="ts",
                 direction=d, strategy=strat,
             ).collect()[0]
             assert row["matched_ts"] is None and row["rv"] is None, (strat, d)

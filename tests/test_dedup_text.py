@@ -1,5 +1,7 @@
 """Dedup + text operators vs single-process python oracles on the driver
-testdata (documents @ sf0.001, which contains planted near-duplicates)."""
+testdata (documents @ sf0.001, which contains planted near-duplicates), and
+the text-family queries (BM25, tf-idf, bigram LM) vs independent pandas /
+Counter implementations on tiny synthetic corpora."""
 
 import hashlib
 import itertools
@@ -11,6 +13,7 @@ from pyspark.sql import functions as F
 
 from audio_feature_extraction_spark.operators import dedup as D
 from audio_feature_extraction_spark.operators import text as T
+from tests.conftest import md5_60, write_table
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -113,7 +116,7 @@ def test_simhash_portable_hash(spark):
     got = D.simhash(df, "doc_id", "text").collect()[0].simhash
     sums = np.zeros(D.SIMHASH_BITS)
     for w in txt.split(" "):
-        h = int(hashlib.md5(w.encode()).hexdigest()[:15], 16)
+        h = md5_60(w)
         for i in range(D.SIMHASH_BITS):
             sums[i] += 1 if (h >> i) & 1 else -1
     want = sum(1 << i for i in range(D.SIMHASH_BITS) if sums[i] > 0)
@@ -123,14 +126,12 @@ def test_simhash_portable_hash(spark):
 def test_token_counts_and_quality(docs, docs_pdf):
     got = docs.select(
         "doc_id",
-        T.whitespace_token_count("text").alias("wc"),
         T.bpe_ish_token_count("text").alias("bc"),
         F.round(T.quality_score("text"), 6).alias("q"),
         T.lang_pick(T.lang_hits("text")).alias("lang_pred"),
         T.doc_fingerprint("text").alias("fp"),
     ).toPandas().sort_values("doc_id").reset_index(drop=True)
     pdf = docs_pdf.sort_values("doc_id").reset_index(drop=True)
-    assert (got.wc.to_numpy() == pdf.text.map(lambda t: len(t.split(" "))).to_numpy()).all()
     import re
 
     pat = re.compile(T.BPE_ISH_PATTERN)
@@ -411,3 +412,145 @@ def test_substring_runs_merge_adjacent_and_gap_split(spark):
     assert len(d0) == 2, got
     assert d0.run_start.tolist() == [0, 28]
     assert d0.span_tokens.tolist() == [18, 18]
+
+
+def test_bm25_matches_pandas_reference(spark, tmp_path):
+    """Engine BM25 == a from-scratch pandas implementation of the Lucene
+    formula on a small synthetic corpus (atol bounded by the engine's
+    1e-6 floor-round)."""
+    from audio_feature_extraction_spark.queries.textq import (
+        BM25_B,
+        BM25_K1,
+        BM25_TERMS,
+        _q_bm25_scores,
+    )
+
+    texts = [
+        "spark join stream spark spark",
+        "join join table scan",
+        "stream stream stream spark filter",
+        "table scan filter agg window",
+        "spark",
+    ]
+    pdf = pd.DataFrame(
+        {
+            "doc_id": range(len(texts)),
+            "text": texts,
+            "lang": ["en"] * len(texts),
+            "source": ["s"] * len(texts),
+            "n_chars": [len(t) for t in texts],
+        }
+    )
+    write_table(spark, tmp_path, "documents", pdf)
+    got = (
+        _q_bm25_scores(spark, str(tmp_path))
+        .toPandas()
+        .set_index("doc_id")
+        .sort_index()
+    )
+
+    docs = [t.split(" ") for t in texts]
+    N = len(docs)
+    avgdl = sum(len(d) for d in docs) / N
+    for i, words in enumerate(docs):
+        score = 0.0
+        for t in BM25_TERMS:
+            tf = words.count(t)
+            df = sum(1 for d in docs if t in d)
+            idf = np.log((N - df + 0.5) / (df + 0.5) + 1.0)
+            score += idf * (
+                tf * (BM25_K1 + 1.0)
+                / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * len(words) / avgdl))
+            )
+        assert got.loc[i, "dl"] == len(words)
+        assert abs(got.loc[i, "bm25"] - score) <= 1e-6 + 1e-12, (
+            i, got.loc[i, "bm25"], score,
+        )
+
+
+def test_tfidf_topterms_against_pandas(spark, tmp_path):
+    """Top-term SELECTION (not just scores) must match an independent
+    pandas tf-idf ranking with the same tiebreak."""
+    from audio_feature_extraction_spark.queries.textq import _q_tfidf_topterms
+
+    texts = [
+        "apple apple banana cherry",
+        "banana banana banana date",
+        "cherry date egg egg egg apple",
+    ]
+    pdf = pd.DataFrame(
+        {
+            "doc_id": range(len(texts)),
+            "text": texts,
+            "lang": ["en"] * 3,
+            "source": ["s"] * 3,
+            "n_chars": [len(t) for t in texts],
+        }
+    )
+    write_table(spark, tmp_path, "documents", pdf)
+    got = _q_tfidf_topterms(spark, str(tmp_path)).toPandas()
+
+    docs = [t.split(" ") for t in texts]
+    N = len(docs)
+    for i, words in enumerate(docs):
+        scores = {}
+        for t in set(words):
+            df = sum(1 for d in docs if t in d)
+            scores[t] = np.floor(
+                words.count(t) * np.log(N / df) * 1e6 + 0.5
+            ) / 1e6
+        want = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:3]
+        sub = got[got.doc_id == i].sort_values("rank")
+        assert list(sub.term) == [t for t, _ in want], (i, list(sub.term), want)
+        assert np.allclose(sub.tfidf.to_numpy(), [s for _, s in want])
+
+
+def test_bigram_lm_matches_independent_counter(spark, tmp_path):
+    """bigram_lm == an independently-coded collections.Counter bigram LM
+    (same add-k formula) on a tiny synthetic corpus."""
+    from collections import Counter
+
+    from audio_feature_extraction_spark.queries.textq import (
+        _LM_K,
+        _q_bigram_lm,
+    )
+
+    docs = pd.DataFrame(
+        {
+            "doc_id": [1, 2, 3],
+            "text": [
+                "the cat sat on the mat",
+                "the cat ran and the dog sat",
+                "a dog sat on a mat and the cat sat",
+            ],
+            "lang": "en",
+            "source": "t",
+            "n_chars": 0,
+        }
+    )
+    write_table(spark, tmp_path, "documents", docs)
+    got = _q_bigram_lm(spark, str(tmp_path)).toPandas()
+
+    bi = Counter()
+    for t in docs.text:
+        ws = t.split(" ")
+        bi.update(zip(ws, ws[1:]))
+    cw = Counter()
+    for (w1, _), c in bi.items():
+        cw[w1] += c
+    v = len({w2 for (_, w2) in bi})
+    top10 = sorted(cw.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
+    for rank, (w1, tot) in enumerate(top10, 1):
+        conts = sorted(
+            ((w2, c) for (a, w2), c in bi.items() if a == w1),
+            key=lambda kv: (-kv[1], kv[0]),
+        )[:3]
+        for r2, (w2, c) in enumerate(conts, 1):
+            row = got[(got.w1 == w1) & (got.w2 == w2)]
+            assert len(row) == 1, (w1, w2)
+            row = row.iloc[0]
+            assert (row.w1_rank, row.w2_rank, row.c) == (rank, r2, c)
+            want_p = (c + _LM_K) / (tot + _LM_K * v)
+            import math
+
+            assert abs(row.p - math.floor(want_p * 1e6 + 0.5) / 1e6) < 1e-12

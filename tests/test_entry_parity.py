@@ -9,6 +9,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as em
+from tests.conftest import write_table
 from tools.check_entry import TABLES, compare
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -99,9 +100,7 @@ def test_pre1970_floor_bucketing(spark, tmp_path):
             "props": ["{}"] * 8,
         }
     )
-    spark.createDataFrame(pdf).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "events.parquet")
-    )
+    write_table(spark, tmp_path, "events", pdf)
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW events AS SELECT * FROM "

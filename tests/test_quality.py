@@ -1,15 +1,23 @@
 """Unit tests for operators/quality.py — repetition signals, contamination,
-deterministic stratified sampling, power-of-two length buckets.
+deterministic stratified and weighted sampling, power-of-two length
+buckets, dataset splits and cross-split decontamination, dyadic powers and
+the source-mixture thresholds of the ``source_mixture`` query.
 
 Hand-computed expectations on tiny literal frames (the reference's test
-style, SURVEY.md §5.2): every value asserted is derivable on paper.
+style, SURVEY.md §5.2): every value asserted is derivable on paper, or
+re-derived by an independent pandas/hashlib implementation.
 """
 
+import math
+
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from audio_feature_extraction_spark.operators import quality as Q
+from audio_feature_extraction_spark.queries.samplingq import _q_source_mixture
+from tests.conftest import md5_60, write_table
 
 
 @pytest.fixture(scope="module")
@@ -166,12 +174,7 @@ def test_stratified_sample_rate_threshold_rounds(spark):
     """Regression (review-found): 0.29 * 10000 floats to 2899.999…; int()
     would under-sample by one bucket. A key hashing exactly into bucket 2899
     must be kept at rate 0.29."""
-    import hashlib
-
-    def bucket(k: int) -> int:
-        return int(hashlib.md5(str(k).encode()).hexdigest()[:15], 16) % 10000
-
-    edge = next(k for k in range(100_000) if bucket(k) == 2899)
+    edge = next(k for k in range(100_000) if md5_60(str(k)) % 10000 == 2899)
     df = spark.createDataFrame([(edge, "s")], "k long, src string")
     out = Q.stratified_sample(df, "k", "src", {"s": 0.29}).collect()
     assert len(out) == 1
@@ -221,3 +224,249 @@ def test_dataset_split_rejects_non_monotonic_fractions(spark):
         dataset_split(df, "doc_id", {"a": 1.0, "b": 0.1, "c": -0.1})
     with pytest.raises(ValueError, match="must be in"):
         dataset_split(df, "doc_id", {"a": 0.5, "b": 0.0, "c": 0.5})
+
+
+def test_weighted_sample_matches_independent_pandas(spark, tmp_path):
+    """A-ES weighted draw == an independent pandas implementation (hashlib
+    uniform, numpy log, nsmallest-free sort) on every stratum; zero and
+    negative weights are never drawn."""
+    from audio_feature_extraction_spark.operators.quality import (
+        weighted_sample_per_stratum,
+    )
+
+    rng = np.random.default_rng(7)
+    n = 400
+    pdf = pd.DataFrame(
+        {
+            "doc_id": [f"d{i:04d}" for i in range(n)],
+            "w": np.concatenate(
+                [rng.integers(1, 10_000, n - 20), np.zeros(10), -np.ones(10)]
+            ).astype(np.int64),
+            "s": rng.choice(["a", "b", "c"], n),
+        }
+    )
+    sdf = spark.createDataFrame(pdf)
+    got = (
+        weighted_sample_per_stratum(sdf, "doc_id", "w", "s", 4)
+        .select("s", "draw_rank", "doc_id")
+        .toPandas()
+        .sort_values(["s", "draw_rank"])
+        .reset_index(drop=True)
+    )
+
+    live = pdf[pdf.w > 0].copy()
+    u = live.doc_id.map(lambda d: (md5_60(d) + 1) / float(1 << 60))
+    live["wkey"] = np.log(u) / live.w.astype(np.float64)
+    want = (
+        live.sort_values(["wkey", "doc_id"], ascending=[False, True])
+        .groupby("s")
+        .head(4)
+        .sort_values(["s", "wkey"], ascending=[True, False])
+    )
+    want["draw_rank"] = want.groupby("s").cumcount() + 1
+    want = want[["s", "draw_rank", "doc_id"]].reset_index(drop=True)
+    pd.testing.assert_frame_equal(
+        got.astype({"draw_rank": "int64"}), want.astype({"draw_rank": "int64"})
+    )
+    assert not set(got.doc_id) & set(pdf[pdf.w <= 0].doc_id)
+
+
+def test_weighted_sample_inclusion_tracks_weight(spark):
+    """Statistical sanity on the A-ES property itself: over 40 disjoint
+    hash-perturbed repetitions, a 9x-heavier item is drawn ~9x as often
+    as a unit item (binomial tolerance), i.e. inclusion probability is
+    genuinely weight-proportional, not just deterministic."""
+    from audio_feature_extraction_spark.operators.quality import (
+        weighted_sample_per_stratum,
+    )
+
+    reps = 40
+    rows = []
+    for r in range(reps):
+        for i in range(40):
+            rows.append((f"r{r}-heavy-{i}", 9, f"s{r}"))
+            rows.append((f"r{r}-light-{i}", 1, f"s{r}"))
+    sdf = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "w", "s"]))
+    got = weighted_sample_per_stratum(sdf, "doc_id", "w", "s", 8).toPandas()
+    heavy = got.doc_id.str.contains("heavy").sum()
+    light = got.doc_id.str.contains("light").sum()
+    assert heavy + light == reps * 8
+    # E[heavy draw] with 9:1 weights and half the items heavy is ~0.9/draw;
+    # 320 draws, sigma ~ 5.4 — allow 5 sigma
+    assert heavy > 0.9 * reps * 8 - 30, (heavy, light)
+
+
+def test_dyadic_pow_matches_python_pow(spark):
+    """The nested-sqrt product equals x**e bit-for-bit for dyadic e (each
+    factor is a correctly-rounded sqrt chain; the only extra op is an
+    IEEE-exact multiply — equality at 0 ulp is too strict for the
+    multi-term products, so pin <= 1 ulp AND exactness for pure powers
+    of two)."""
+    xs = [0.017, 0.25, 0.5, 0.99, 1.0, 3.7, 1234.5]
+    exps = [0.5, 0.25, 0.75, 0.375, 0.0, 1.0]
+    df = spark.createDataFrame(pd.DataFrame({"x": xs}))
+    for e in exps:
+        got = [
+            r["y"]
+            for r in df.select(
+                Q.dyadic_pow(F.col("x"), e).alias("y")
+            ).collect()
+        ]
+        for x, g in zip(xs, got):
+            want = x ** e
+            assert g == pytest.approx(want, rel=1e-15), (x, e)
+            if e in (0.0, 0.5, 0.25, 1.0):  # single chain: exact
+                if e == 0.25:
+                    want = math.sqrt(math.sqrt(x))
+                elif e == 0.5:
+                    want = math.sqrt(x)
+                assert g == want, (x, e)
+
+
+def test_dyadic_pow_rejects_non_dyadic():
+    with pytest.raises(ValueError, match="dyadic"):
+        Q.dyadic_pow(F.lit(2.0), 0.7)
+    with pytest.raises(ValueError, match="dyadic"):
+        Q.dyadic_pow_sql("x", 1 / 3)
+    with pytest.raises(ValueError, match="in \\[0, 1\\]"):
+        Q.dyadic_pow(F.lit(2.0), 1.5)
+
+
+def _mixture(spark, tmp_path, sizes: dict[str, int]):
+    """Write a corpus of ``sizes[source]`` docs per source and run the
+    source_mixture query over it: (documents frame, query rows)."""
+    rows = [
+        (f"{src}-doc{i:07d}", src) for src, n in sizes.items() for i in range(n)
+    ]
+    d = write_table(
+        spark, tmp_path, "documents",
+        pd.DataFrame(rows, columns=["doc_id", "source"]),
+    )
+    docs = spark.read.parquet(f"{d}/documents.parquet")
+    return docs, _q_source_mixture(spark, d).toPandas()
+
+
+def _kept(docs, rates: pd.DataFrame, alpha: float) -> set[str]:
+    """The resample the thresholds stand for: keep a doc iff its md5
+    bucket is below its source's ``accept_threshold`` at ``alpha``."""
+    t = docs.sparkSession.createDataFrame(
+        rates[rates.alpha == alpha][["source", "accept_threshold"]]
+    )
+    kept = docs.join(F.broadcast(t), "source").where(
+        Q.hash_bucket(F.col("doc_id")) < F.col("accept_threshold")
+    )
+    return {r["doc_id"] for r in kept.select("doc_id").collect()}
+
+
+def test_source_mixture_realized_proportions_converge(spark, tmp_path):
+    """The realized mixture k_s ∝ n_s^alpha: on a 100:10:1 skewed corpus
+    the shares kept by the query's thresholds must match the temperature
+    target within bucket quantization + hash noise (relative error < 5%
+    per source), and the query's kept counts equal the filter's."""
+    sizes = {"web": 20_000, "books": 2_000, "code": 200}
+    docs, rates = _mixture(spark, tmp_path, sizes)
+    for alpha in (0.5, 0.75):
+        kept = pd.Series(sorted(_kept(docs, rates, alpha))).str.split("-").str[0]
+        kept = kept.value_counts()
+        q = rates[rates.alpha == alpha].set_index("source")
+        assert (q.kept_docs == kept.reindex(q.index)).all(), alpha
+        t = {s: n ** alpha for s, n in sizes.items()}
+        tot_t = sum(t.values())
+        tot_k = kept.sum()
+        for s, n in sizes.items():
+            target_share = t[s] / tot_t
+            realized_share = kept[s] / tot_k
+            assert abs(realized_share - target_share) / target_share < 0.05, (
+                alpha, s, realized_share, target_share
+            )
+
+
+def test_source_mixture_monotone_and_stable_under_growth(spark, tmp_path):
+    """Determinism contracts: (a) the kept set is identical across
+    partition layouts; (b) growth of ANOTHER source can only shrink a
+    source's threshold smoothly — and because acceptance is bucket <
+    threshold, the kept set for any source is NESTED across threshold
+    moves (monotone), never reshuffled."""
+    docs, rates = _mixture(spark, tmp_path / "small", {"web": 5_000, "code": 500})
+    kept1 = _kept(docs.repartition(1), rates, 0.5)
+    kept7 = _kept(docs.repartition(7), rates, 0.5)
+    assert kept1 == kept7
+
+    # grow web 4x: code is still the smallest source and keeps everything;
+    # web's rate falls -> web's kept set must be a SUBSET of its old kept
+    # set, code's unchanged
+    docs_big, rates_big = _mixture(
+        spark, tmp_path / "big", {"web": 20_000, "code": 500}
+    )
+    kept_big = _kept(docs_big, rates_big, 0.5)
+    old_web = {d for d in kept1 if d.startswith("web")}
+    new_web_among_old_corpus = {
+        d for d in kept_big if d.startswith("web") and int(d[-7:]) < 5_000
+    }
+    assert new_web_among_old_corpus <= old_web
+    assert {d for d in kept1 if d.startswith("code")} == {
+        d for d in kept_big if d.startswith("code") and int(d[-7:]) < 500
+    }
+
+
+def test_source_mixture_smallest_source_keeps_all(spark, tmp_path):
+    _, rates = _mixture(spark, tmp_path, {"a": 3_000, "b": 300})
+    rates = rates[rates.alpha == 0.5].set_index("source")
+    assert rates.loc["b", "accept_threshold"] == 10_000  # keeps 100%
+    # a's rate = sqrt(300/3000) = 0.31622... -> floor(3162.2) = 3162
+    assert rates.loc["a", "accept_threshold"] == math.floor(
+        math.sqrt(300 / 3000) * 10_000
+    )
+
+
+def test_split_decontamination_planted_leak(spark):
+    """A long span planted in one train doc and one val/test doc must come
+    back as a contaminated pair with the exact distinct-shingle count;
+    clean docs must not appear."""
+    from audio_feature_extraction_spark.operators.quality import (
+        dataset_split,
+        split_decontamination,
+    )
+
+    leak = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    # enough docs that the 80/10/10 hash split lands some on each side
+    rows = [(f"doc{i}", f"w{i}a w{i}b w{i}c w{i}d w{i}e w{i}f") for i in range(60)]
+    df0 = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
+    sp = dataset_split(df0, "doc_id").toPandas().set_index("doc_id")["split"]
+    train_doc = next(d for d, s in sp.items() if s == "train")
+    eval_doc = next(d for d, s in sp.items() if s != "train")
+    rows = [
+        (d, leak + " " + t if d in (train_doc, eval_doc) else t)
+        for d, t in rows
+    ]
+    df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
+    out = split_decontamination(
+        df, "doc_id", "text", n=5, min_overlap=2
+    ).toPandas()
+    assert len(out) == 1
+    r = out.iloc[0]
+    assert r["eval_doc_id"] == eval_doc
+    assert r["train_doc_id"] == train_doc
+    assert r["eval_split"] == sp[eval_doc]
+    # the planted 10-word span yields 6 distinct 5-gram shingles; the
+    # junction shingles (leak tail + per-doc words) differ between the
+    # two docs so exactly 6 are shared
+    assert r["shared_shingles"] == 6
+
+
+def test_split_decontamination_df_cap_drops_boilerplate(spark):
+    """A shingle present in more than df_cap train docs is boilerplate:
+    with the cap it must not create pairs on its own."""
+    from audio_feature_extraction_spark.operators.quality import (
+        split_decontamination,
+    )
+
+    boiler = "lorem ipsum dolor sit amet consectetur"
+    rows = [(f"d{i}", boiler) for i in range(40)]
+    df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
+    uncapped = split_decontamination(df, "doc_id", "text", n=5, min_overlap=1)
+    assert uncapped.count() > 0
+    capped = split_decontamination(
+        df, "doc_id", "text", n=5, min_overlap=1, df_cap=2
+    )
+    assert capped.count() == 0
