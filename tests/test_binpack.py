@@ -64,23 +64,6 @@ def test_binpack_leading_zero_and_null_payload(spark):
     assert out.bin_id.notna().all()
 
 
-def test_with_bin_id_matches_formula(spark):
-    df = spark.createDataFrame(
-        [("g", i, 40) for i in range(10)], "g string, doc_id int, n_tok int"
-    )
-    out = with_bin_id(
-        df,
-        ["g"],
-        payload_col="n_tok",
-        order_cols=["doc_id"],
-        target_payload_per_bin=100,
-        out="bin",
-    )
-    got = {r.doc_id: r.bin for r in out.collect()}
-    # cumsum 40,80,120,...,400 → floor((cum-1)/100): 0,0,1,1,1,2,2,3,3,3
-    assert [got[i] for i in range(10)] == [0, 0, 1, 1, 1, 2, 2, 3, 3, 3]
-
-
 def test_pack_sequences_matches_pandas_reference(spark):
     """The concrete packed batch: flattened tokens + member start offsets
     equal an independent pandas packing at any parallelism."""

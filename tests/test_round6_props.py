@@ -1,4 +1,7 @@
-"""tools/hostcond.py: the bench host-condition window flags noisy runs."""
+"""tools/hostcond.py: the bench host-condition window flags noisy runs.
+
+The last round-6 tests; the rest of that file now lives in its operator
+family modules."""
 
 from __future__ import annotations
 

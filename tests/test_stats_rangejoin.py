@@ -90,6 +90,25 @@ def test_histogram_clamps_out_of_range(spark):
     assert got == {0: 3, 1: 1, 9: 2}  # -5 clamps to 0; 250 clamps to 9
 
 
+def test_binpack_mix_false_matches_formula(spark):
+    from audio_feature_extraction_spark.operators.binpack import with_bin_id
+
+    df = spark.createDataFrame(
+        [("g", i, 40) for i in range(10)], "g string, doc_id int, n_tok int"
+    )
+    out = with_bin_id(
+        df,
+        ["g"],
+        payload_col="n_tok",
+        order_cols=["doc_id"],
+        target_payload_per_bin=100,
+        out="bin",
+    )
+    got = {r.doc_id: r.bin for r in out.collect()}
+    # cumsum 40,80,120,...,400 → floor((cum-1)/100): 0,0,1,1,1,2,2,3,3,3
+    assert [got[i] for i in range(10)] == [0, 0, 1, 1, 1, 2, 2, 3, 3, 3]
+
+
 def test_cosine_neardup_finds_planted_pairs(spark):
     from audio_feature_extraction_spark.operators.similarity import (
         cosine_neardup_pairs,
