@@ -73,14 +73,8 @@ def shingles(
     consumers (MinHash: min() over permuted hashes ignores multiplicity)."""
     from pyspark.sql import Window
 
-    # NOTE r07: an ensure_min_parallelism_by(id) pre-exchange (split the
-    # text off the few-row-group scan before exploding) was A/B-measured
-    # here and REVERTED: interleaved min-of-5 at sf0.1 showed 1.46-1.83x
-    # LOSSES across the shingle consumers (dedup_minhash_lsh, doc_repetition,
-    # contamination) and ~neutral (0.93-1.03x) at sf1.0 — the explode is
-    # cheap relative to the window+agg that follows, and the probe/plan
-    # overhead (~0.1 s per construction) plus the extra exchange outweigh
-    # the scan-stage parallelism it buys.
+    # No exchange before the explode: one by id measured 1.46-1.83x slower
+    # at sf0.1 across the shingle consumers and neutral at sf1.0.
     wdf = df.select(
         F.col(id_col), F.posexplode(words(text_col)).alias("_i", "_w0")
     )
@@ -110,8 +104,7 @@ def positioned_shingles(
     position contributes exactly one row by construction)."""
     from pyspark.sql import Window
 
-    # (same r07 A/B note as shingles(): the pre-exchange guard lost at
-    # sf0.1 and was neutral at sf1.0 — reverted)
+    # No exchange before the explode, for the measured loss in shingles().
     wdf = df.select(
         F.col(id_col), F.posexplode(words(text_col)).alias("_i", "_w0")
     )
@@ -134,7 +127,6 @@ def duplicated_substring_runs(
     text_col: str,
     k: int = 8,
     min_span_tokens: int = 16,
-    df_cap: int | None = None,
 ) -> DataFrame:
     """Substring-level CROSS-document dedup (the Lee et al. 'Deduplicating
     Training Data Makes Language Models Better' primitive, VERDICT r04 #7):
@@ -157,10 +149,7 @@ def duplicated_substring_runs(
     semi-join back.
 
     At 100 TB: the (id, pos, hash) frame is the same inverted-index shape
-    as the jaccard/containment family; ``df_cap`` drops hashes whose doc
-    frequency exceeds the cap (boilerplate floods carry dedup signal but
-    quadratic-join risk lives in the SEMI-join fan-in here, so the cap is
-    cheap insurance, not correctness); a hash collision (2^-60 per pair)
+    as the jaccard/containment family; a hash collision (2^-60 per pair)
     can only ADD a spurious shingle to the duplicated set.
 
     No reference analog (the reference corpus is audio); this is the
@@ -179,10 +168,7 @@ def duplicated_substring_runs(
     dup = sh.groupBy("_h").agg(
         F.count_distinct(F.col(id_col)).alias("_nd")
     )
-    dup = dup.where(
-        (F.col("_nd") >= 2)
-        & (F.lit(True) if df_cap is None else (F.col("_nd") <= df_cap))
-    )
+    dup = dup.where(F.col("_nd") >= 2)
     kept = sh.join(dup.select("_h"), "_h", "left_semi")
     from pyspark.sql import Window
 
@@ -423,8 +409,7 @@ def simhash(
     """(id, simhash long): bit i of the signature is the sign of
     Σ_words (±1 by bit i of the portable word hash). Word multiplicity
     weights naturally (no distinct)."""
-    # (r07 A/B: the pre-exchange parallelism guard lost at sf0.1, neutral
-    # at sf1.0 — reverted; see shingles())
+    # No exchange before the explode: one lost at sf0.1, neutral at sf1.0.
     w = df.select(F.col(id_col), F.explode(words(text_col)).alias("w"))
     h = portable_word_hash(F.col("w"))
     w = w.withColumn("h", h)

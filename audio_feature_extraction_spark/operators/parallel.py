@@ -1,11 +1,11 @@
-"""Scan-parallelism guard shared by CPU-heavy operators.
+"""Scan spreading shared by CPU-heavy operators.
 
-The bench/driver input tables are single-file, few-row-group parquet (the
-shipped sf0.1 tables are ONE row group of 600k rows; a linear generator at
-sf1.0 stays at 1-6 groups), and a Parquet row group is the atomic scan
-split — so any operator whose first stage does real per-row work (md5
-probes, IVF argmin, interpreted cosines, Arrow kernels) runs on 1-2 cores
-of a 32-core session unless the frame is explicitly redistributed.
+The bench/driver input tables are single-file parquet with one row group
+per table (sf0.001 to sf0.1, and every perfbench table), and a Parquet row
+group is the atomic scan split (Jigsaw, SIGMOD 2021) — so any operator
+whose first stage does real per-row work (md5 probes, IVF argmin,
+interpreted cosines, Arrow kernels) runs on one core of a multi-core
+session unless the frame is explicitly redistributed.
 """
 
 from __future__ import annotations
@@ -13,30 +13,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def ensure_min_parallelism(df: DataFrame) -> DataFrame:
-    """Round-robin repartition a CPU-heavy frame up to the session's core
-    count when its scan is parallelism-starved (guide §2.5/§6: a ~10 MB
-    single-row-group parquet file scans as 1-2 tasks, which serializes the
-    per-row kernels onto as many cores; measured 1.34 s → 0.49 s on the
-    sf1.0 20k-vector IVF assignment). Scale-adaptive, not a constant: at
-    real scale the scan already has ≥ cores partitions and this is a
-    no-op — the exchange is only paid when the input is small enough for
-    it to be trivially cheap. Select only the needed columns BEFORE
-    calling (the exchange carries every column you pass)."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        return df.repartition(par)
-    return df
-
-
-def ensure_min_parallelism_by(df: DataFrame, *keys: str) -> DataFrame:
-    """Like :func:`ensure_min_parallelism` but hash-partitions by ``keys``
-    so a downstream window/groupBy keyed the same way REUSES the exchange
-    (guide §2.4): the explode/split work moves to the distributed side of
-    the one exchange the consumer needed anyway, and the exchange carries
-    the compact pre-explode rows instead of the exploded stream. No-op
-    when the scan already has enough partitions."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        return df.repartition(*keys)
-    return df
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin repartition a CPU-heavy frame to the session's default
+    parallelism, so the per-row kernels above it run on every core instead
+    of the one task a single-row-group scan gives (measured 1.34 s → 0.49 s
+    on the sf1.0 20k-vector IVF assignment). Always repartitions, decided
+    statically: at multi-row-group scale, where the scan is already
+    parallel, the cost is one exchange of the columns passed in. Select
+    only the needed columns BEFORE calling."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)

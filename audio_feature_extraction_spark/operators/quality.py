@@ -76,8 +76,8 @@ def repetition_stats(
     per-doc joins add ZERO further exchanges. The per-row alternative (array
     ``transform`` lambdas) is CodegenFallback-interpreted in Spark and
     measured ~10× slower despite doing no shuffle at all."""
-    # (r07 A/B: the ensure_min_parallelism_by pre-exchange was reverted —
-    # 1.76x slower at sf0.1, neutral at sf1.0; see operators/dedup.shingles)
+    # No exchange before the explode: one by id measured 1.76x slower at
+    # sf0.1 and neutral at sf1.0.
     wdf = df.select(
         F.col(id_col), F.posexplode(words(text_col)).alias("i", "w0")
     )

@@ -25,9 +25,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from audio_feature_extraction_spark.operators.parallel import (
-    ensure_min_parallelism,
-)
+from audio_feature_extraction_spark.operators.parallel import spread
 
 # Hard cap on the number of rows a "small by contract" side may have before
 # we collect it to the driver for broadcast. At 64-dim float64 + id this is
@@ -35,6 +33,10 @@ from audio_feature_extraction_spark.operators.parallel import (
 # sized accordingly (spark.driver.memory >= 4g); size the cap DOWN for a
 # default 1g driver.
 MAX_DRIVER_COLLECT_ROWS = 2_000_000
+
+EMB_DIM = 64  # vector length of the embeddings table
+# hyperplanes per LSH table; table t draws them with seed LSH_SEED + 101*t
+LSH_PLANES, LSH_SEED = 8, 7
 
 
 def collect_guarded(df: DataFrame, side: str, cap: int):
@@ -114,9 +116,9 @@ def _dot_lit_sql(v_sql: str, xs: list[float]) -> str:
     )
 
 
-def _bucket_sql(v_sql: str, n_planes: int, dim: int, seed: int) -> str:
+def _bucket_sql(v_sql: str, seed: int) -> str:
     """LSH signature as a SQL snippet: bit p = (v · plane_p) > 0."""
-    planes = _plane_literals(n_planes, dim, seed)
+    planes = _plane_literals(LSH_PLANES, EMB_DIM, seed)
     bits = [
         f"(CASE WHEN {_dot_lit_sql(v_sql, plane)} > 0 "
         f"THEN {1 << p} ELSE 0 END)"
@@ -125,42 +127,30 @@ def _bucket_sql(v_sql: str, n_planes: int, dim: int, seed: int) -> str:
     return "CAST(" + " + ".join(bits) + " AS INT)"
 
 
-def with_lsh_bucket(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 7,
-    out: str = "bucket",
-) -> DataFrame:
-    """Random-hyperplane signature: bit p = (v · plane_p) > 0."""
+def with_lsh_bucket(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
+    """Random-hyperplane signature ``bucket``: bit p = (v · plane_p) > 0."""
     v_sql = f"CAST({vec_col} AS ARRAY<DOUBLE>)"
-    return df.withColumn(out, F.expr(_bucket_sql(v_sql, n_planes, dim, seed)))
+    return df.withColumn("bucket", F.expr(_bucket_sql(v_sql, LSH_SEED)))
 
 
-def cosine_neardup_pairs(
-    df: DataFrame,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 7,
-) -> DataFrame:
+def cosine_neardup_pairs(df: DataFrame, threshold: float = 0.9) -> DataFrame:
     """Embedding-cosine near-duplicate detection (the embedding analog of
     minhash-LSH text dedup): bucket by random-hyperplane signature, generate
     candidate pairs ONLY within a bucket (self-join on the bucket id — the
     shuffle is per-bucket, never the full cross product), then exact-cosine
-    verify. Returns (id_a, id_b, cos) with id_a < id_b and cos >= threshold.
+    verify over (vec_id, embedding) with 8 seed-7 hyperplanes of dim 64.
+    Returns (id_a, id_b, cos) with id_a < id_b and cos >= threshold.
 
     Recall note: a pair is found iff no hyperplane separates it; at
     cos >= 0.9 and 8 planes the per-plane split probability is
     arccos(0.9)/pi ≈ 0.14, so expected recall ≈ 0.86^... — raise recall by
-    unioning several plane seeds (``seed`` variants) at scale. The DuckDB
-    oracle replicates the same bucketing, making the check exact."""
+    unioning several plane seeds at scale. The DuckDB oracle replicates the
+    same bucketing, making the check exact."""
     v = with_lsh_bucket(
-        df.select(F.col(id_col).alias("id"), _to_double(vec_col).alias("_v")),
-        "_v", n_planes, dim, seed,
+        df.select(
+            F.col("vec_id").alias("id"), _to_double("embedding").alias("_v")
+        ),
+        "_v",
     )
     a = v.select(
         F.col("id").alias("id_a"), F.col("_v").alias("_va"), "bucket"
@@ -205,31 +195,20 @@ def _cell_structs_sql(v_sql: str, centroids: list[list[float]]) -> str:
 
 
 def with_ivf_cell(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    n_cells: int = 16,
-    dim: int = 64,
-    seed: int = 11,
-    out: str = "cell",
-    centroids: list[list[float]] | None = None,
+    df: DataFrame, vec_col: str, centroids: list[list[float]]
 ) -> DataFrame:
-    """IVF coarse assignment: nearest centroid id (ties -> lowest id).
-    ``centroids`` overrides the seeded synthetic quantizer — pass the
-    output of :func:`fit_ivf_centroids` for data-fitted cells."""
-    if centroids is None:
-        centroids = _centroid_literals(n_cells, dim, seed)
+    """IVF coarse assignment ``cell``: nearest centroid id (ties -> lowest
+    id) among ``centroids`` (:func:`_centroid_literals` or the output of
+    :func:`fit_ivf_centroids`)."""
     arr = _cell_structs_sql(f"CAST({vec_col} AS ARRAY<DOUBLE>)", centroids)
-    return df.withColumn(out, F.expr(f"array_min({arr}).c"))
+    return df.withColumn("cell", F.expr(f"array_min({arr}).c"))
 
 
 FIT_ROUND_DECIMALS = 6
 
 
 def data_init_centroids(
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_cells: int = 16,
+    corpus: DataFrame, n_cells: int = 16
 ) -> list[list[float]]:
     """Deterministic data-point initial centroids: the ``n_cells`` vectors
     whose portable md5 id-hash sorts lowest (cell i = i-th lowest hash) —
@@ -247,11 +226,11 @@ def data_init_centroids(
 
     rows = (
         corpus.select(
-            F.col(id_col),
-            _to_double(vec_col).alias("_v"),
-            portable_word_hash(F.col(id_col).cast("string")).alias("_h"),
+            F.col("vec_id"),
+            _to_double("embedding").alias("_v"),
+            portable_word_hash(F.col("vec_id").cast("string")).alias("_h"),
         )
-        .orderBy("_h", id_col)
+        .orderBy("_h", "vec_id")
         .limit(n_cells)
         .collect()
     )
@@ -265,13 +244,11 @@ def data_init_centroids(
 
 def fit_ivf_centroids(
     corpus: DataFrame,
-    vec_col: str = "embedding",
     n_cells: int = 16,
     dim: int = 64,
     seed: int = 11,
     rounds: int = 2,
     init: str = "seeded",
-    id_col: str = "vec_id",
 ) -> list[list[float]]:
     """Lloyd k-means on Spark (VERDICT r04 #2 — the fitting path the
     synthetic `_centroid_literals` docstring promised): starting from the
@@ -303,15 +280,14 @@ def fit_ivf_centroids(
     the coarse→fine iterative refinement of
     `05_dtw_alignment_experiment/dtw_alignment.py:737-787`."""
     if init == "data":
-        cents = data_init_centroids(corpus, vec_col, id_col, n_cells)
+        cents = data_init_centroids(corpus, n_cells)
     elif init == "seeded":
         cents = _centroid_literals(n_cells, dim, seed)
     else:
         raise ValueError(f"init must be 'seeded' or 'data', got {init!r}")
-    v_sql = f"CAST({vec_col} AS ARRAY<DOUBLE>)"
-    # the per-round argmin is CPU-bound per row; don't let a small parquet
-    # file serialize it onto 1-2 scan tasks (r07, guide §2.5)
-    corpus = ensure_min_parallelism(corpus)
+    v_sql = "CAST(embedding AS ARRAY<DOUBLE>)"
+    # the per-round argmin is CPU-bound per row
+    corpus = spread(corpus)
     for _ in range(rounds):
         arr = _cell_structs_sql(v_sql, cents)
         assigned = corpus.select(
@@ -343,11 +319,8 @@ def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_cells: int = 16,
     nprobe: int = 4,
-    dim: int = 64,
     seed: int = 11,
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
@@ -357,16 +330,16 @@ def ivf_topk(
     top-k combine. ``centroids`` overrides the seeded synthetic quantizer
     (pass :func:`fit_ivf_centroids` output)."""
     if centroids is None:
-        centroids = _centroid_literals(n_cells, dim, seed)
+        centroids = _centroid_literals(n_cells, EMB_DIM, seed)
     c = with_ivf_cell(
-        ensure_min_parallelism(
-            corpus.select(F.col(id_col).alias("neighbor_id"),
-                          _to_double(vec_col).alias("_cv"))
+        spread(
+            corpus.select(F.col("vec_id").alias("neighbor_id"),
+                          _to_double("embedding").alias("_cv"))
         ),
-        "_cv", n_cells, dim, seed, centroids=centroids,
+        "_cv", centroids=centroids,
     )
-    qv = queries.select(F.col(id_col).alias("query_id"), _to_double(vec_col)
-                        .alias("_qv"))
+    qv = queries.select(F.col("vec_id").alias("query_id"),
+                        _to_double("embedding").alias("_qv"))
     arr = _cell_structs_sql("_qv", centroids)
     probes = F.expr(f"slice(array_sort({arr}), 1, {nprobe})")
     q = qv.select(
@@ -380,19 +353,12 @@ def ivf_topk(
 
 
 def lsh_bucketed_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 7,
-    n_tables: int = 1,
+    corpus: DataFrame, queries: DataFrame, k: int = 10, n_tables: int = 1
 ) -> DataFrame:
     """Approximate top-k: candidates share the query's LSH bucket, or one at
     hamming distance 1 (multi-probe), in ANY of ``n_tables`` independent
-    hash tables (OR-amplification — table t uses plane seed ``seed + 101*t``).
+    hash tables (OR-amplification — table t uses plane seed
+    ``LSH_SEED + 101*t``).
     Exact cosine re-rank within the deduped candidate union.
 
     Recall economics (measured on the sf0.01 embeddings, whose brute-force
@@ -415,7 +381,7 @@ def lsh_bucketed_topk(
         buckets = F.expr(
             "array("
             + ", ".join(
-                _bucket_sql(vc, n_planes, dim, seed + 101 * t)
+                _bucket_sql(vc, LSH_SEED + 101 * t)
                 for t in range(n_tables)
             )
             + ")"
@@ -425,17 +391,18 @@ def lsh_bucketed_topk(
         )
 
     corp = _tb(
-        ensure_min_parallelism(
+        spread(
             corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                _to_double(vec_col).alias("_cv"),
+                F.col("vec_id").alias("neighbor_id"),
+                _to_double("embedding").alias("_cv"),
             )
         ),
         "neighbor_id", "_cv",
     )
     q = _tb(
         queries.select(
-            F.col(id_col).alias("query_id"), _to_double(vec_col).alias("_qv")
+            F.col("vec_id").alias("query_id"),
+            _to_double("embedding").alias("_qv"),
         ),
         "query_id", "_qv",
     )
@@ -443,7 +410,7 @@ def lsh_bucketed_topk(
         F.col("bucket"),
         *[
             F.col("bucket").bitwiseXOR(F.lit(1 << p)).cast("int")
-            for p in range(n_planes)
+            for p in range(LSH_PLANES)
         ],
     )
     q = q.select(
@@ -464,11 +431,10 @@ def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_query_rows: int = MAX_DRIVER_COLLECT_ROWS,
 ) -> DataFrame:
-    """Exact cosine top-k per query: (query_id, neighbor_id, rank, cos).
+    """Exact cosine top-k per query over (vec_id, embedding):
+    (query_id, neighbor_id, rank, cos).
     Self-matches (same id) are excluded.
 
     An interpreted zip_with cosine costs one dim-length loop per PAIR. Here
@@ -479,14 +445,16 @@ def brute_force_topk(
     top-k **with a 1e-6 cosine margin** (so the final rounded-cosine
     ranking can never lose a boundary tie the batch cut dropped), and the
     global exact top-k is a per-query window over ≤ (k+ties) × n_batches
-    candidate rows. The corpus is never shuffled."""
+    candidate rows. The corpus is never shuffled: a round-robin spread of
+    it measured 2-3x slower (median 0.92 vs 0.30 s at sf0.1, 0.94 vs
+    0.45 s at a single-row-group sf1.0)."""
     import pandas as pd
 
     qp = collect_guarded(
-        queries.select(id_col, vec_col), "query", max_query_rows
+        queries.select("vec_id", "embedding"), "query", max_query_rows
     )
-    Q = np.stack(qp[vec_col].to_numpy()).astype(np.float64)
-    qids = qp[id_col].to_numpy().astype(np.int64)
+    Q = np.stack(qp["embedding"].to_numpy()).astype(np.float64)
+    qids = qp["vec_id"].to_numpy().astype(np.int64)
     Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
     bq = corpus.sparkSession.sparkContext.broadcast((qids, Qn))
 
@@ -495,10 +463,10 @@ def brute_force_topk(
         for pdf in batches:
             if not len(pdf):
                 continue
-            C = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            C = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
             S = Cn @ q_mat.T  # (n_batch, n_queries)
-            nids = pdf[id_col].to_numpy().astype(np.int64)
+            nids = pdf["vec_id"].to_numpy().astype(np.int64)
             qs, ns, cs = [], [], []
             for j in range(S.shape[1]):
                 col = S[:, j].copy()
@@ -524,7 +492,7 @@ def brute_force_topk(
                     }
                 )
 
-    cand = ensure_min_parallelism(corpus.select(id_col, vec_col)).mapInPandas(
+    cand = corpus.select("vec_id", "embedding").mapInPandas(
         score, schema="query_id long, neighbor_id long, cos double"
     )
     return _rank_topk(cand, k)
@@ -536,11 +504,7 @@ LSH_MIN_REGIME_COS = 0.75  # below this, LSH recall is poor (measured)
 
 
 def estimate_topk_cos(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    corpus: DataFrame, queries: DataFrame, k: int = 10
 ) -> float:
     """Median (over the 3 lowest-id queries) of the k-th-neighbor cosine —
     the WEAKEST member of the true top-k, i.e. the similarity level an
@@ -549,9 +513,9 @@ def estimate_topk_cos(
     size — an index-selection decision made once per corpus, not per query
     batch. Deterministic: the cosines are the round(cos,6) values the
     serving paths rank on."""
-    sample = queries.orderBy(id_col).limit(3)
+    sample = queries.orderBy("vec_id").limit(3)
     kth = (
-        brute_force_topk(corpus, sample, k=k, id_col=id_col, vec_col=vec_col)
+        brute_force_topk(corpus, sample, k=k)
         .where(F.col("rank") == k)
         .select("cos")
         .collect()
@@ -566,19 +530,14 @@ def approx_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
     n_cells: int = 16,
     nprobe: int = 4,
     ivf_seed: int = 11,
-    n_planes: int = 8,
-    lsh_seed: int = 7,
-    n_tables: int = 4,
 ) -> DataFrame:
     """Routed ANN entry point: samples the true k-th-neighbor cosine
-    (:func:`estimate_topk_cos`) and routes to LSH only when the regime is
-    high-similarity (median kth-cos >= ``LSH_MIN_REGIME_COS``), else to IVF.
+    (:func:`estimate_topk_cos`) and routes to 4-table LSH only when the
+    regime is high-similarity (median kth-cos >= ``LSH_MIN_REGIME_COS``),
+    else to IVF.
 
     Measured on the benchmark corpus (kth-cos 0.24-0.49, the weak-neighbor
     regime): 4-table multiprobe LSH recall@10 = 0.37 at ~16% of the corpus
@@ -594,12 +553,9 @@ def approx_topk(
     Output schema matches :func:`brute_force_topk`."""
     import warnings
 
-    est = estimate_topk_cos(corpus, queries, k=k, id_col=id_col, vec_col=vec_col)
+    est = estimate_topk_cos(corpus, queries, k=k)
     if est >= LSH_MIN_REGIME_COS:
-        return lsh_bucketed_topk(
-            corpus, queries, k=k, id_col=id_col, vec_col=vec_col,
-            n_planes=n_planes, dim=dim, seed=lsh_seed, n_tables=n_tables,
-        )
+        return lsh_bucketed_topk(corpus, queries, k=k, n_tables=4)
     warnings.warn(
         f"approx_topk: sampled k-th-neighbor cosine {est:.3f} < "
         f"{LSH_MIN_REGIME_COS} — LSH recall would be poor in this "
@@ -608,6 +564,5 @@ def approx_topk(
         stacklevel=2,
     )
     return ivf_topk(
-        corpus, queries, k=k, id_col=id_col, vec_col=vec_col,
-        n_cells=n_cells, nprobe=nprobe, dim=dim, seed=ivf_seed,
+        corpus, queries, k=k, n_cells=n_cells, nprobe=nprobe, seed=ivf_seed
     )

@@ -36,18 +36,12 @@ def sequences_from_events(ev: DataFrame) -> DataFrame:
     tokens = [1..n_tok] int32, deterministic in event_id — bit-identity of
     the array through the pipeline is assertable in closed form.
 
-    r07 shape: the compact pre-token columns are hash-repartitioned by
-    doc_id FIRST when the events scan is few-row-group-starved, and the
-    tokens arrays are generated after that exchange — the downstream
-    window/sessionize chain is partitioned by doc_id and reuses it (no
-    extra shuffle), the exchange written by the 1-2 scan tasks carries
-    ~30-byte rows instead of the materialized token arrays, and the
-    array generation runs on every core. No-op at real scale (guard in
-    operators/parallel.py)."""
-    from audio_feature_extraction_spark.operators.parallel import (
-        ensure_min_parallelism_by,
-    )
-
+    The compact pre-token columns are hash-repartitioned by doc_id and the
+    tokens arrays are generated after that exchange: the downstream
+    window/sessionize chain is partitioned by doc_id and reuses it, the
+    exchange carries ~30-byte rows instead of the token arrays, and the
+    array generation runs on every core (median 19.0 s vs 22.2 s without
+    it for the six flagship-input queries at a single-row-group sf1.0)."""
     ev = with_v(ev) if "v" not in ev.columns else ev
     n_tok = n_tok_of("event_id")
     base = ev.select(
@@ -58,8 +52,7 @@ def sequences_from_events(ev: DataFrame) -> DataFrame:
         "ts",
         F.col("v").alias("value"),
     )
-    base = ensure_min_parallelism_by(base, "doc_id")
-    return base.select(
+    return base.repartition("doc_id").select(
         "doc_id",
         "seq",
         F.sequence(F.lit(1), F.col("n_tok")).cast("array<int>").alias("tokens"),

@@ -18,12 +18,10 @@ def _sequences_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _reference_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return reference_from_events(_t(spark, sf_dir, "events"))
 
-def _pipeline(spark: SparkSession, sf_dir: str, strategy: str = "window") -> DataFrame:
+def _pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     seq = _sequences_from_events(spark, sf_dir)
     ref = _reference_from_events(spark, sf_dir)
-    return feature_pipeline(
-        seq, ref, asof_strategy=strategy, gap_sec=EV_GAP_SEC, tol_sec=EV_TOL_SEC
-    )
+    return feature_pipeline(seq, ref, gap_sec=EV_GAP_SEC, tol_sec=EV_TOL_SEC)
 
 def _pipeline_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _pipeline(spark, sf_dir)

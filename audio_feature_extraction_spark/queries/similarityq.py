@@ -8,9 +8,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from audio_feature_extraction_spark.operators import multimodal as _M
 from audio_feature_extraction_spark.operators import similarity as _S
-from audio_feature_extraction_spark.operators.parallel import (
-    ensure_min_parallelism,
-)
+from audio_feature_extraction_spark.operators.parallel import spread
 from .common import _t
 
 
@@ -171,7 +169,7 @@ def _q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column decode plumbing over synthesized payloads (no media
     codecs in this container; deterministic md5-derived fake decoder, real
     Arrow mapInPandas path — the oracle reproduces the features in SQL)."""
-    d = ensure_min_parallelism(
+    d = spread(
         _t(spark, sf_dir, "documents").select(
             "doc_id", F.encode("text", "utf-8").alias("payload")
         )
@@ -369,7 +367,7 @@ def _q_ann_recall_fitted(spark: SparkSession, sf_dir: str) -> DataFrame:
     as ann_recall (method='ivf_fit_np{n}')."""
     emb = _t(spark, sf_dir, "embeddings")
     cents = _S.fit_ivf_centroids(
-        emb, "embedding", n_cells=IVF_CELLS, dim=64, seed=IVF_SEED,
+        emb, n_cells=IVF_CELLS, dim=64, seed=IVF_SEED,
         rounds=IVF_FIT_ROUNDS, init="data",
     )
     queries = emb.where(F.col("vec_id") < 10)
@@ -644,11 +642,8 @@ def _clustered_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The centers are collected once (one bounded job, CLUSTER_CENTERS rows)
     and inlined as double literals, so the corpus is a projection of the
-    scan with no exchange: the scan-parallelism probe of every consumer
-    (fit, exact scorer, ivf_topk) then runs no job, where a broadcast join
-    here would be re-executed by each of those probes and collects.
-    Bit-identical in DuckDB (a float32 widened to double round-trips
-    through repr; double mul/add only)."""
+    scan with no exchange. Bit-identical in DuckDB (a float32 widened to
+    double round-trips through repr; double mul/add only)."""
     emb = _t(spark, sf_dir, "embeddings")
     centers = (
         emb.where(F.col("vec_id") < CLUSTER_CENTERS)
@@ -682,7 +677,7 @@ def _q_ann_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     this pins BOTH ends of the IVF answer-quality story."""
     embc = _clustered_corpus(spark, sf_dir)
     cents = _S.fit_ivf_centroids(
-        embc, "embedding", n_cells=IVF_CELLS, dim=64, seed=IVF_SEED,
+        embc, n_cells=IVF_CELLS, dim=64, seed=IVF_SEED,
         rounds=IVF_FIT_ROUNDS, init="data",
     )
     queries = embc.where(F.col("vec_id") < 10)
@@ -692,7 +687,7 @@ def _q_ann_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = embc.agg(F.count(F.lit(1)).cast("double").alias("n"))
     cell_counts = (
         _S.with_ivf_cell(
-            ensure_min_parallelism(embc), "embedding", centroids=cents
+            spread(embc), "embedding", centroids=cents
         )
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("cc"))

@@ -28,11 +28,9 @@ def _q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     registers and the same double, so this is an EXACT correctness gate
     over an approximate algorithm."""
     e = _t(spark, sf_dir, "events")
-    # NOTE r07: a round-robin pre-exchange ahead of the register hashing
-    # was A/B-measured and REVERTED (1.57x slower at sf1.0, 2.73x at
-    # sf0.1): the md5/minute-floor per-row work is cheap relative to
-    # shuffling the rows, and BOTH consumers partial-agg in the scan
-    # stage (registers collapse to 2^p rows, exact-distinct to its keys).
+    # No exchange before the register hashing: one measured 1.57x slower
+    # at sf1.0 and 2.73x at sf0.1, as both consumers partial-agg in the
+    # scan stage.
     base = e.select("event_type", "user_id", "ts").select(
         "event_type",
         F.concat_ws(
@@ -194,9 +192,7 @@ def _q_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     is visibly nonzero at test scale; the whole filter build is one
     bounded distinct (<= m rows) and the probe side crosses only
     broadcast joins."""
-    from audio_feature_extraction_spark.operators.parallel import (
-        ensure_min_parallelism,
-    )
+    from audio_feature_extraction_spark.operators.parallel import spread
 
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders")
@@ -209,7 +205,7 @@ def _q_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # §2.3/§2.5: 4 md5 hashes × 1.5M rows on 1-2 scan tasks was ~3 s of
     # single-core work; the narrow exchange is far cheaper)
     probed = _SK.bloom_might_contain(
-        ensure_min_parallelism(o.select("o_custkey", "o_orderpriority")),
+        spread(o.select("o_custkey", "o_orderpriority")),
         bits, "o_custkey", m_bits=_BLOOM_M, k=_BLOOM_K,
     )
     flagged = probed.join(

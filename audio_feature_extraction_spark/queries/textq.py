@@ -262,11 +262,8 @@ def _q_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     json_object, both engines print compact key-insertion-order JSON)."""
     ev = _t(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("long")
-    # NOTE r07: a round-robin pre-exchange ahead of the JSON parse was
-    # A/B-measured and REVERTED (1.19x slower at sf0.1, 1.30x at sf1.0):
-    # the ~1 µs/row get_json_object is cheaper than shuffling the props
-    # strings, and the map-side partial agg already collapses the scan
-    # stage's output to 5 rows.
+    # No exchange before the JSON parse: one measured 1.19x slower at
+    # sf0.1 and 1.30x at sf1.0, as the partial agg leaves 5 rows per task.
     src = ev.select("event_type", "props")
     agg = src.select("event_type", k.alias("k")).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -568,8 +565,8 @@ def _q_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = _t(spark, sf_dir, "documents")
-    # (r07 A/B: the pre-exchange parallelism guard was reverted — 1.19x
-    # slower at BOTH sf0.1 and sf1.0; see operators/dedup.shingles)
+    # No exchange before the explode: one measured 1.19x slower at both
+    # sf0.1 and sf1.0.
     w = docs.select("doc_id", "text").select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "w1")
     )
@@ -671,8 +668,8 @@ def _q_doc_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = _t(spark, sf_dir, "documents")
-    # (r07 A/B: the pre-exchange parallelism guard was reverted — mixed
-    # 1.2x/0.93x across scales, inside noise; see operators/dedup.shingles)
+    # No exchange before the explode: one measured 1.2x slower at sf0.1
+    # and 0.93x at sf1.0, inside noise.
     w = docs.select("doc_id", "text").select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "w1")
     )

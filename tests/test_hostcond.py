@@ -1,7 +1,4 @@
-"""tools/hostcond.py: the bench host-condition window flags noisy runs.
-
-The last round-6 tests; the rest of that file now lives in its operator
-family modules."""
+"""tools/hostcond.py: the bench host-condition window flags noisy runs."""
 
 from __future__ import annotations
 

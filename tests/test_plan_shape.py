@@ -54,24 +54,22 @@ def test_pipeline_single_exchange_on_parquet(spark):
     s = sequences_from_events(seq)
     r = reference_from_events(seq)
     plan = _plan(feature_pipeline(s, r))
-    # r07: when the parquet scan is few-row-group-starved,
     # sequences_from_events inserts a SLIM doc_id repartition (pre-token
     # columns only) and materializes the token arrays between it and the
-    # as-of union's own repartition — so there are now up to two doc_id
-    # exchanges, but the FAT token rows still cross exactly one (the
-    # as-of REPARTITION_BY_NUM). The invariant under test is the
-    # fat-rows-cross-once rule, asserted structurally: the single
-    # sequence(...) materialization sits BELOW the fat exchange and ABOVE
-    # the slim one in the plan tree (tree print order: parents first).
+    # as-of union's own repartition — so there are two doc_id exchanges,
+    # but the FAT token rows cross exactly one (the as-of
+    # REPARTITION_BY_NUM). The fat-rows-cross-once rule is asserted
+    # structurally: the single sequence(...) materialization sits BELOW
+    # the fat exchange and ABOVE the slim one in the plan tree (tree print
+    # order: parents first).
     doc_exchanges = re.findall(r"Exchange hashpartitioning\(doc_id#\d+, \d+\)", plan)
-    assert 1 <= len(doc_exchanges) <= 2, plan
+    assert len(doc_exchanges) == 2, plan
     assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 3, plan
     assert plan.count("sequence(1,") == 1, plan
-    if "REPARTITION_BY_COL" in plan:
-        i_fat = plan.index("REPARTITION_BY_NUM")
-        i_tok = plan.index("sequence(1,")
-        i_slim = plan.index("REPARTITION_BY_COL")
-        assert i_fat < i_tok < i_slim, plan
+    i_fat = plan.index("REPARTITION_BY_NUM")
+    i_tok = plan.index("sequence(1,")
+    i_slim = plan.index("REPARTITION_BY_COL")
+    assert i_fat < i_tok < i_slim, plan
 
 
 def test_filter_pushdown_and_column_pruning(spark):
@@ -242,6 +240,17 @@ def test_bloom_prune_single_bounded_exchange(spark):
     assert "BroadcastNestedLoopJoin" in plan
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
+
+
+@pytest.mark.parametrize(
+    "qname", ["bloom_prune", "media_features", "ann_ivf_topk"]
+)
+def test_cpu_heavy_scans_spread_round_robin(spark, qname):
+    """Each single-row-group scan feeding a per-row kernel (the Bloom md5
+    probe, the media decode, the IVF argmin) is spread round-robin before
+    the kernel, so the kernel does not run on the scan's one task."""
+    plan = _plan(em.queries()[qname](spark, SF_DIR))
+    assert "Exchange RoundRobinPartitioning" in plan, plan
 
 
 def test_drift_psi_single_exchange(spark):

@@ -114,7 +114,10 @@ def test_ivf_topk_finds_planted_neighbors(spark):
 def test_ivf_cells_partition_corpus(emb):
     """Every vector gets exactly one cell in [0, n_cells); probing all cells
     degrades IVF to exact brute force — top-1 must then match brute force."""
-    cells = S.with_ivf_cell(emb.select("vec_id", "embedding")).toPandas()
+    cells = S.with_ivf_cell(
+        emb.select("vec_id", "embedding"), "embedding",
+        S._centroid_literals(16, 64, 11),
+    ).toPandas()
     assert cells.cell.between(0, 15).all()
     assert len(cells) == cells.vec_id.nunique()
 
@@ -255,9 +258,9 @@ def test_fit_ivf_centroids_partitioning_invariant(spark):
     """The 6dp rounding contract: fitted centroids must be identical
     whatever the input partitioning (summation-order noise absorbed)."""
     _, df = _gaussian_frame(spark, 31, 300, 16)
-    c1 = S.fit_ivf_centroids(df.repartition(1), "embedding", n_cells=4,
+    c1 = S.fit_ivf_centroids(df.repartition(1), n_cells=4,
                              dim=16, seed=5, rounds=2)
-    c2 = S.fit_ivf_centroids(df.repartition(13), "embedding", n_cells=4,
+    c2 = S.fit_ivf_centroids(df.repartition(13), n_cells=4,
                              dim=16, seed=5, rounds=2)
     assert c1 == c2
 
@@ -267,7 +270,7 @@ def test_fit_ivf_centroids_reduces_quantization_error(spark):
     distance to the assigned centroid after fitting <= before (strict <
     on gaussian data vs gaussian random centroids)."""
     X, df = _gaussian_frame(spark, 37, 500, 16)
-    fitted = S.fit_ivf_centroids(df, "embedding", n_cells=4, dim=16, seed=5,
+    fitted = S.fit_ivf_centroids(df, n_cells=4, dim=16, seed=5,
                                  rounds=3)
     before = _sse(X, S._centroid_literals(4, 16, 5))
     after = _sse(X, fitted)
@@ -282,7 +285,7 @@ def test_fit_ivf_empty_cells_keep_previous_centroid(spark):
     )
     df = spark.createDataFrame(pdf)
     init = S._centroid_literals(8, 2, 5)
-    fitted = S.fit_ivf_centroids(df, "embedding", n_cells=8, dim=2, seed=5,
+    fitted = S.fit_ivf_centroids(df, n_cells=8, dim=2, seed=5,
                                  rounds=2)
     assert len(fitted) == 8
     changed = sum(1 for a, b in zip(init, fitted) if a != b)
@@ -300,7 +303,7 @@ def test_fit_ivf_on_hash_sample_still_improves(spark):
     sample = df.where(hash_bucket(F.col("vec_id"), 100) < 50)
     n_sample = sample.count()
     assert 200 < n_sample < 400  # the md5 split is roughly half
-    fitted = S.fit_ivf_centroids(sample, "embedding", n_cells=4, dim=16,
+    fitted = S.fit_ivf_centroids(sample, n_cells=4, dim=16,
                                  seed=5, rounds=3)
     assert _sse(X, fitted) < _sse(X, S._centroid_literals(4, 16, 5))
 
