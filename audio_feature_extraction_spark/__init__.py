@@ -18,8 +18,7 @@ idiomatic Spark DataFrame plans:
 - ``operators.dedup``      exact / MinHash-LSH / SimHash / n-gram Jaccard /
                            cross-doc substring-run (ExactSubstr) dedup
 - ``operators.similarity`` exact Arrow/BLAS top-k + LSH-bucketed + IVF
-                           cell-pruned ANN; Lloyd centroid fitting,
-                           regime-routed approx_topk
+                           cell-pruned ANN; Lloyd centroid fitting
 - ``operators.dtw``        exact banded weighted-step DTW kernel (one batched
                            mapInArrow, anti-diagonal DP vectorized across pairs)
 - ``operators.text``       language-ID, quality scoring, token counting,

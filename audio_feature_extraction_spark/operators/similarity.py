@@ -7,7 +7,7 @@ One exact scorer and two candidate generators, one output shape
   (small, by contract) query set is collected once and broadcast, each
   corpus batch is one BLAS matmul, and the corpus is never shuffled.
 - :func:`ivf_topk` — candidates are the corpus vectors in the query's
-  ``nprobe`` nearest coarse cells (seeded or :func:`fit_ivf_centroids`).
+  ``nprobe`` nearest coarse cells (literal or :func:`fit_ivf_centroids`).
 - :func:`lsh_bucketed_topk` — candidates share a random-hyperplane bucket,
   or one at hamming distance 1, in any of ``n_tables`` tables.
 
@@ -172,9 +172,9 @@ def _centroid_literals(n_cells: int, dim: int, seed: int) -> list[list[float]]:
     the -2·v·c+|c|² argmin collapse assignments onto the few small-norm
     centroids (3 of 16 cells populated on the benchmark corpus), so
     'pruned' scans read most of the data and recall looks perfect for the
-    wrong reason. For real pruning fit with
-    :func:`fit_ivf_centroids(..., init='data')` — balanced cells, honest
-    recall curve published by the gated `ann_recall_fitted`."""
+    wrong reason. For real pruning fit with :func:`fit_ivf_centroids`
+    (data-point init) — balanced cells, honest recall curve published by
+    the gated `ann_recall_fitted`."""
     return _plane_literals(n_cells, dim, seed)
 
 
@@ -243,22 +243,19 @@ def data_init_centroids(
 
 
 def fit_ivf_centroids(
-    corpus: DataFrame,
-    n_cells: int = 16,
-    dim: int = 64,
-    seed: int = 11,
-    rounds: int = 2,
-    init: str = "seeded",
+    corpus: DataFrame, n_cells: int = 16, rounds: int = 2
 ) -> list[list[float]]:
     """Lloyd k-means on Spark (VERDICT r04 #2 — the fitting path the
-    synthetic `_centroid_literals` docstring promised): starting from the
-    seeded centroids, each round (a) assigns every corpus vector to its
-    nearest centroid with the SAME literal-expression argmin the serving
-    path uses, (b) recomputes each centroid as the per-dimension mean via
-    ONE groupBy(cell) carrying ``dim`` element-wise avg aggregates — no
-    explode (a posexplode shape re-evaluates the interpreted assignment
-    expression per exploded row after projection collapse: measured 64×
-    the cost), map-side partial combine, and a driver collect of at most
+    synthetic `_centroid_literals` docstring promised): starting from
+    :func:`data_init_centroids` (balanced cells — see that docstring for
+    why seeded gaussians mis-balance), each round (a) assigns every corpus
+    vector to its nearest centroid with the SAME literal-expression argmin
+    the serving path uses, (b) recomputes each centroid as the
+    per-dimension mean via ONE groupBy(cell) carrying one avg aggregate
+    per dimension — no explode (a posexplode shape re-evaluates the
+    interpreted assignment expression per exploded row after projection
+    collapse: measured 64× the cost), map-side partial combine, and a
+    driver collect of at most
     ``n_cells`` rows, bounded BY CONSTRUCTION whatever the corpus size.
     Cells that end a round empty keep their previous centroid (standard
     Lloyd fallback).
@@ -269,22 +266,13 @@ def fit_ivf_centroids(
     unless a mean sits within 5e-7 of a rounding boundary, so the DuckDB
     oracle's unrolled-CTE twin reproduces the fitted centroids exactly.
 
-    ``init='data'`` starts from :func:`data_init_centroids` (balanced
-    cells — see that docstring for why the seeded gaussians mis-balance);
-    ``init='seeded'`` keeps the synthetic start (the oracle-simplest
-    form, and the right A/B baseline).
-
     At 100 TB: pass a hash-sampled frame (the md5-bucket filter of
     `quality.stratified_sample`) — k-means needs a sample, not the corpus;
     the per-round cost is then one scan of the sample. Reference analog:
     the coarse→fine iterative refinement of
     `05_dtw_alignment_experiment/dtw_alignment.py:737-787`."""
-    if init == "data":
-        cents = data_init_centroids(corpus, n_cells)
-    elif init == "seeded":
-        cents = _centroid_literals(n_cells, dim, seed)
-    else:
-        raise ValueError(f"init must be 'seeded' or 'data', got {init!r}")
+    cents = data_init_centroids(corpus, n_cells)
+    dim = len(cents[0])
     v_sql = "CAST(embedding AS ARRAY<DOUBLE>)"
     # the per-round argmin is CPU-bound per row
     corpus = spread(corpus)
@@ -318,19 +306,15 @@ def fit_ivf_centroids(
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
+    centroids: list[list[float]],
     k: int = 10,
-    n_cells: int = 16,
     nprobe: int = 4,
-    seed: int = 11,
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: corpus vectors live in their nearest-centroid
-    cell; each query probes its ``nprobe`` nearest cells; exact cosine re-rank
-    within the probed candidates. The only wide exchange is the per-query
-    top-k combine. ``centroids`` overrides the seeded synthetic quantizer
-    (pass :func:`fit_ivf_centroids` output)."""
-    if centroids is None:
-        centroids = _centroid_literals(n_cells, EMB_DIM, seed)
+    cell among ``centroids`` (:func:`_centroid_literals` or
+    :func:`fit_ivf_centroids` output); each query probes its ``nprobe``
+    nearest cells; exact cosine re-rank within the probed candidates. The
+    only wide exchange is the per-query top-k combine."""
     c = with_ivf_cell(
         spread(
             corpus.select(F.col("vec_id").alias("neighbor_id"),
@@ -368,8 +352,8 @@ def lsh_bucketed_topk(
     (cos ≥ 0.9, per-plane split prob arccos(.9)/π ≈ 0.14) per-table recall
     is already 0.86^planes and tables multiply toward 1. The gated
     `ann_recall` query reports the measured number instead of assuming it;
-    :func:`approx_topk` routes this regime to IVF (whose fitted-balanced
-    curve is 0.53@25% / 0.81@50% — `ann_recall_fitted`).
+    in this weak-neighbor regime IVF is the index to use (its
+    fitted-balanced curve is 0.53@25% / 0.81@50% — `ann_recall_fitted`).
 
     Plan shape: ALL tables' buckets are computed in ONE projection and
     posexploded to (table_id, bucket) rows, so the corpus is scanned once
@@ -428,10 +412,7 @@ def lsh_bucketed_topk(
 
 
 def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    max_query_rows: int = MAX_DRIVER_COLLECT_ROWS,
+    corpus: DataFrame, queries: DataFrame, k: int = 10
 ) -> DataFrame:
     """Exact cosine top-k per query over (vec_id, embedding):
     (query_id, neighbor_id, rank, cos).
@@ -439,8 +420,8 @@ def brute_force_topk(
 
     An interpreted zip_with cosine costs one dim-length loop per PAIR. Here
     the query set is collected once (one bounded job, capped at
-    ``max_query_rows``), L2-normalized into a float64 matrix and broadcast;
-    each corpus Arrow batch becomes one BLAS matmul
+    ``MAX_DRIVER_COLLECT_ROWS``), L2-normalized into a float64 matrix and
+    broadcast; each corpus Arrow batch becomes one BLAS matmul
     (batch × dim) @ (dim × n_queries), per-batch candidates are cut to the
     top-k **with a 1e-6 cosine margin** (so the final rounded-cosine
     ranking can never lose a boundary tie the batch cut dropped), and the
@@ -451,7 +432,9 @@ def brute_force_topk(
     import pandas as pd
 
     qp = collect_guarded(
-        queries.select("vec_id", "embedding"), "query", max_query_rows
+        queries.select("vec_id", "embedding"),
+        "query",
+        MAX_DRIVER_COLLECT_ROWS,
     )
     Q = np.stack(qp["embedding"].to_numpy()).astype(np.float64)
     qids = qp["vec_id"].to_numpy().astype(np.int64)
@@ -497,72 +480,3 @@ def brute_force_topk(
     )
     return _rank_topk(cand, k)
 
-
-# ------------------------------------------------------------------ routing
-
-LSH_MIN_REGIME_COS = 0.75  # below this, LSH recall is poor (measured)
-
-
-def estimate_topk_cos(
-    corpus: DataFrame, queries: DataFrame, k: int = 10
-) -> float:
-    """Median (over the 3 lowest-id queries) of the k-th-neighbor cosine —
-    the WEAKEST member of the true top-k, i.e. the similarity level an
-    approximate index must still be able to find. Runs the exact scorer
-    for the sample, so the cost is ONE corpus scan regardless of query-set
-    size — an index-selection decision made once per corpus, not per query
-    batch. Deterministic: the cosines are the round(cos,6) values the
-    serving paths rank on."""
-    sample = queries.orderBy("vec_id").limit(3)
-    kth = (
-        brute_force_topk(corpus, sample, k=k)
-        .where(F.col("rank") == k)
-        .select("cos")
-        .collect()
-    )
-    vals = sorted(r["cos"] for r in kth)
-    if not vals:
-        return 0.0
-    return float(vals[len(vals) // 2])
-
-
-def approx_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_cells: int = 16,
-    nprobe: int = 4,
-    ivf_seed: int = 11,
-) -> DataFrame:
-    """Routed ANN entry point: samples the true k-th-neighbor cosine
-    (:func:`estimate_topk_cos`) and routes to 4-table LSH only when the
-    regime is high-similarity (median kth-cos >= ``LSH_MIN_REGIME_COS``),
-    else to IVF.
-
-    Measured on the benchmark corpus (kth-cos 0.24-0.49, the weak-neighbor
-    regime): 4-table multiprobe LSH recall@10 = 0.37 at ~16% of the corpus
-    scored — LSH physically cannot find weak neighbors (no hyperplane
-    pattern separates cos≈0.3 pairs from the bulk), so in that regime it is
-    never the right index and the router refuses it with a warning. IVF
-    with fitted+balanced cells measures 0.53 at nprobe=4 (~25% scored) and
-    0.81 at nprobe=8 (~50%) — the gated `ann_recall_fitted` curve; the
-    synthetic-literal default reports 1.00 only because its gaussian
-    centroids collapse to 3 populated cells and the 'pruned' scan reads
-    most of the corpus.
-
-    Output schema matches :func:`brute_force_topk`."""
-    import warnings
-
-    est = estimate_topk_cos(corpus, queries, k=k)
-    if est >= LSH_MIN_REGIME_COS:
-        return lsh_bucketed_topk(corpus, queries, k=k, n_tables=4)
-    warnings.warn(
-        f"approx_topk: sampled k-th-neighbor cosine {est:.3f} < "
-        f"{LSH_MIN_REGIME_COS} — LSH recall would be poor in this "
-        "regime (measured 0.37 on the benchmark corpus); routing "
-        "to IVF.",
-        stacklevel=2,
-    )
-    return ivf_topk(
-        corpus, queries, k=k, n_cells=n_cells, nprobe=nprobe, seed=ivf_seed
-    )

@@ -162,18 +162,20 @@ def rolling_median(col: str, w: WindowSpec, n: int) -> Column:
 # ---------------------------------------------- W5/W7: fixed-coefficient smooth
 
 
-def savgol_coeffs(window: int = 11, polyorder: int = 3) -> list[float]:
-    """Savitzky-Golay smoothing coefficients via LS polynomial fit
-    (04_…/feature_extractor.py:290,430). Pure numpy at plan-build time."""
-    import numpy as np
-
-    assert window % 2 == 1, f"window must be odd, got {window}"
-    half = window // 2
-    x = np.arange(-half, half + 1, dtype=np.float64)
-    a = np.vander(x, polyorder + 1, increasing=True)
-    # projection row for the smoothed value at the window center
-    coeffs = np.linalg.pinv(a)[0]
-    return [float(c) for c in coeffs]
+# Savitzky-Golay smoothing coefficients, window 11, polyorder 3: the
+# projection row for the window center of the least-squares cubic fit
+# (04_…/feature_extractor.py:290,430), exactly (-36, 9, 44, 69, 84, 89,
+# …)/429.
+# Kept as literals because the oracle text embeds them: np.linalg.pinv sets
+# their last bits by the BLAS kernel chosen for the host CPU, which would
+# make the oracle text host-dependent. These are the Core2 OpenBLAS values,
+# each within 1.1e-16 of the exact rational.
+SAVGOL_11_3 = [
+    -0.08391608391608396, 0.02097902097902097, 0.10256410256410264,
+    0.16083916083916086, 0.1958041958041958, 0.20745920745920746,
+    0.1958041958041958, 0.1608391608391608, 0.10256410256410253,
+    0.02097902097902093, -0.08391608391608402,
+]
 
 
 def gaussian_coeffs(window: int = 9, sigma: float = 2.0) -> list[float]:

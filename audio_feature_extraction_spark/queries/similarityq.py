@@ -121,12 +121,15 @@ IVF_CELLS, IVF_NPROBE, IVF_SEED = 16, 4, 11
 def _ivf_topk(emb: DataFrame) -> DataFrame:
     queries = emb.where(F.col("vec_id") < 10)
     return _S.ivf_topk(
-        emb, queries, k=10, n_cells=IVF_CELLS, nprobe=IVF_NPROBE, seed=IVF_SEED
+        emb, queries, _S._centroid_literals(IVF_CELLS, _S.EMB_DIM, IVF_SEED),
+        k=10, nprobe=IVF_NPROBE,
     )
 
 def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF coarse-quantizer ANN (the scale path beside LSH): corpus pruned to
-    the query's nprobe nearest cells, exact cosine re-rank inside."""
+    the query's nprobe nearest cells, exact cosine re-rank inside.
+    ``ann_ivf_topk`` and ``ann_auto_topk`` are two registry names for this
+    one plan, with the same oracle text."""
     return _ivf_topk(_t(spark, sf_dir, "embeddings"))
 
 def _sql_ann_ivf() -> str:
@@ -341,7 +344,7 @@ FROM g LEFT JOIN h ON g.method = h.method AND g.query_id = h.query_id
 
 
 # --------------------------------------------------------------------------
-# fitted IVF (VERDICT r04 #2) and routed ANN (VERDICT r04 #3)
+# fitted IVF (VERDICT r04 #2)
 # --------------------------------------------------------------------------
 
 IVF_FIT_ROUNDS = 2
@@ -366,19 +369,13 @@ def _q_ann_recall_fitted(spark: SparkSession, sf_dir: str) -> DataFrame:
     r04 suspected, now measured instead of suspected. Same output shape
     as ann_recall (method='ivf_fit_np{n}')."""
     emb = _t(spark, sf_dir, "embeddings")
-    cents = _S.fit_ivf_centroids(
-        emb, n_cells=IVF_CELLS, dim=64, seed=IVF_SEED,
-        rounds=IVF_FIT_ROUNDS, init="data",
-    )
+    cents = _S.fit_ivf_centroids(emb, n_cells=IVF_CELLS, rounds=IVF_FIT_ROUNDS)
     queries = emb.where(F.col("vec_id") < 10)
     gt = _ann_topk(emb).select("query_id", "neighbor_id")
     parts = [
         _recall_at_k(
             gt,
-            _S.ivf_topk(
-                emb, queries, k=10, n_cells=IVF_CELLS, nprobe=np_,
-                seed=IVF_SEED, centroids=cents,
-            ),
+            _S.ivf_topk(emb, queries, cents, k=10, nprobe=np_),
         ).select(F.lit(f"ivf_fit_np{np_}").alias("method"), "*")
         for np_ in IVF_FIT_NPROBES
     ]
@@ -476,26 +473,6 @@ base AS (SELECT query_id, COUNT(*) AS k FROM gt GROUP BY 1),
 """
 
 
-def _q_ann_auto_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ROUTED ANN entry point end-to-end: approx_topk samples the true
-    k-th-neighbor cosine (≈0.3 on this corpus, far below the 0.75 LSH
-    regime floor) and deterministically routes to IVF — so
-    the oracle is the IVF SQL, and a routing regression (accidentally
-    serving LSH's 0.37-recall neighbors) is a driver-gate FAILURE, not a
-    silent quality loss. The steering warning is expected here and
-    suppressed (the query itself is the regime measurement)."""
-    import warnings
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 10)
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        return _S.approx_topk(
-            emb, queries, k=10,
-            n_cells=IVF_CELLS, nprobe=IVF_NPROBE, ivf_seed=IVF_SEED,
-        )
-
-
 def _q_emb_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup CLUSTERS: the modality composition the text side
     already has — cosine_neardup_pairs (LSH-bucketed pair generation, exact
@@ -547,15 +524,15 @@ FROM lab l JOIN sizes s USING (cluster_id)
 NEARDUP_K = 3
 
 def _q_ann_recall_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH recall in the regime it is actually FOR — completing the
-    routing evidence: ann_recall measures the weak-neighbor regime (LSH
-    0.37, the reason approx_topk refuses it there); this measures the
-    high-cos near-duplicate regime on planted ground truth (each planted
-    vector's true neighbor is its cos≈1.0 source). A cos≈1 pair is split
-    by a hyperplane with prob arccos(1)/π ≈ 0, so recall should be ≈1
-    even single-table — now a driver-gated number per table count instead
-    of a docstring formula. Output: (method, n_queries, n_hit, recall) —
-    exact small-int division, identical doubles on both engines."""
+    """LSH recall in the regime it is actually FOR: ann_recall measures
+    the weak-neighbor regime (LSH 0.37, where IVF is the index to use);
+    this measures the high-cos near-duplicate regime on planted ground
+    truth (each planted vector's true neighbor is its cos≈1.0 source).
+    A cos≈1 pair is split by a hyperplane with prob arccos(1)/π ≈ 0, so
+    recall should be ≈1 even single-table — now a driver-gated number per
+    table count instead of a docstring formula. Output: (method,
+    n_queries, n_hit, recall) — exact small-int division, identical doubles
+    on both engines."""
     emb = _emb_with_planted(spark, sf_dir)
     queries = emb.where(F.col("vec_id") >= 100_000)
     nq = queries.agg(F.count(F.lit(1)).alias("n_queries"))
@@ -677,8 +654,7 @@ def _q_ann_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     this pins BOTH ends of the IVF answer-quality story."""
     embc = _clustered_corpus(spark, sf_dir)
     cents = _S.fit_ivf_centroids(
-        embc, n_cells=IVF_CELLS, dim=64, seed=IVF_SEED,
-        rounds=IVF_FIT_ROUNDS, init="data",
+        embc, n_cells=IVF_CELLS, rounds=IVF_FIT_ROUNDS
     )
     queries = embc.where(F.col("vec_id") < 10)
     gt = _S.brute_force_topk(embc, queries, k=10).select(
@@ -697,10 +673,7 @@ def _q_ann_recall_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     parts = []
     for np_ in CLUSTER_NPROBES:
-        fit = _S.ivf_topk(
-            embc, queries, k=10, n_cells=IVF_CELLS, nprobe=np_,
-            seed=IVF_SEED, centroids=cents,
-        )
+        fit = _S.ivf_topk(embc, queries, cents, k=10, nprobe=np_)
         probes = queries.select(
             F.col("vec_id").alias("query_id"),
             F.explode(
@@ -812,9 +785,8 @@ QUERIES = {
     "ann_topk_arrow": (_q_ann_topk, _SQL_ANN_TOPK_ARROW),
     "ann_recall": (_q_ann_recall, _sql_ann_recall()),
     "ann_recall_fitted": (_q_ann_recall_fitted, _sql_ann_recall_fitted()),
-    # auto routes to IVF on this corpus (sampled kth-cos ~0.3 < 0.75),
-    # so the IVF SQL IS the oracle — a routing regression hash-fails
-    "ann_auto_topk": (_q_ann_auto_topk, _sql_ann_ivf()),
+    # kept under its pinned name: a second name for the ann_ivf_topk plan
+    "ann_auto_topk": (_q_ivf_topk, _sql_ann_ivf()),
     "emb_dedup_clusters": (_q_emb_dedup_clusters, _sql_emb_dedup_clusters()),
     "ann_recall_neardup": (_q_ann_recall_neardup, _sql_ann_recall_neardup()),
     "ann_recall_clustered": (

@@ -126,17 +126,14 @@ FROM events
 def _q_savgol(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     w = _uw()
-    coeffs = W.savgol_coeffs(11, 3)
-    return ev.select(
-        "event_id", F.round(W.weighted_window("value", w, coeffs), 6).alias("smooth")
-    )
+    smooth = W.weighted_window("value", w, W.SAVGOL_11_3)
+    return ev.select("event_id", F.round(smooth, 6).alias("smooth"))
 
 def _sql_savgol() -> str:
-    coeffs = W.savgol_coeffs(11, 3)
-    n = len(coeffs)
+    n = len(W.SAVGOL_11_3)
     terms = "".join(
         f"\n    + ({c!r}) * {_duck_edge_lag('value', n - 1 - i)}"
-        for i, c in enumerate(coeffs)
+        for i, c in enumerate(W.SAVGOL_11_3)
     )
     return f"SELECT event_id, ROUND((0.0{terms}), 6) AS smooth FROM events"
 

@@ -314,28 +314,34 @@ def test_cc_raises_when_not_converged(spark):
         connected_components(e, nodes, max_iter=1)
 
 
-# Build jobs of dedup_clusters at sf0.001: 1 schema read, 9 for the
-# in-universe pair checkpoint, then 4 per star round (2 rounds here).
-# CC rounds are data-dependent, so this bound holds for this data only.
-DEDUP_CLUSTERS_BUILD_JOBS = 18
+# Build jobs at sf0.001. dedup_clusters: 1 schema read, 9 for the
+# in-universe pair checkpoint, then 4 per star round (2 rounds here); CC
+# rounds are data-dependent, so this bound holds for this data only.
+# ann_auto_topk: the schema read only, since IVF routing is static.
+BUILD_JOB_BUDGETS = [
+    pytest.param("dedup_clusters", 18, id="dedup_clusters"),
+    pytest.param("ann_auto_topk", 1, id="ann_auto_topk"),
+]
 
 
-def test_dedup_clusters_build_job_budget(spark):
+@pytest.mark.parametrize("qname, budget", BUILD_JOB_BUDGETS)
+def test_dedup_clusters_build_job_budget(spark, qname, budget):
     """Each star round is one checkpoint whose convergence fingerprint is
     observed in that same job: a separate fingerprint aggregate, or a
-    checkpoint per phase, pushes the builder over its budget."""
+    checkpoint per phase, pushes the builder over its budget. The ANN
+    builder runs no exact scorer or other eager job at build time."""
     import __spark_entry__ as em
 
     sc = spark.sparkContext
-    group = "dedup-clusters-builder"
-    sc.setJobGroup(group, "dedup_clusters build-job budget")
+    group = f"{qname}-builder"
+    sc.setJobGroup(group, f"{qname} build-job budget")
     try:
-        em.queries()["dedup_clusters"](spark, SF_DIR)
+        em.queries()[qname](spark, SF_DIR)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert 0 < n_jobs <= DEDUP_CLUSTERS_BUILD_JOBS, n_jobs
+    assert 0 < n_jobs <= budget, n_jobs
 
 
 def test_substring_runs_recover_planted_spans(spark):

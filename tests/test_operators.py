@@ -111,7 +111,9 @@ def test_weighted_window_savgol(df):
     w = wspec()
     d = df.withColumn("v", locf("x", w))
     v = np.array([3, 3, 1, 1, 1, 4, -2, -2.0])
-    coeffs = W.savgol_coeffs(window=5, polyorder=2)
+    # SG (5, 2): projection row for the window center of the LS quadratic
+    x = np.arange(-2, 3, dtype=np.float64)
+    coeffs = np.linalg.pinv(np.vander(x, 3, increasing=True))[0].tolist()
     # moving-average check: uniform weights == trailing mean with edge pad
     uni = [0.2] * 5
     got = col_np(d, W.weighted_window("v", w, uni))
@@ -126,6 +128,11 @@ def test_weighted_window_savgol(df):
     got_sg = col_np(qdf, W.weighted_window("v", wspec(), coeffs))
     # for t >= 4 the window holds q[t-4..t]; center value is q[t-2]
     assert np.allclose(got_sg[4:], q[2:18])
+    # the shipped (11, 3) literals are that same projection row, to the ulp
+    x11 = np.arange(-5, 6, dtype=np.float64)
+    row = np.linalg.pinv(np.vander(x11, 4, increasing=True))[0]
+    assert np.max(np.abs(np.array(W.SAVGOL_11_3) - row)) < 1e-15
+    assert abs(sum(W.SAVGOL_11_3) - 1.0) < 1e-15
 
 
 def test_sign_change_rate(df):

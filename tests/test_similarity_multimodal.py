@@ -1,5 +1,3 @@
-import warnings
-
 import numpy as np
 import pandas as pd
 import pytest
@@ -7,8 +5,11 @@ from pyspark.sql import functions as F
 
 from audio_feature_extraction_spark.operators import multimodal as M
 from audio_feature_extraction_spark.operators import similarity as S
+from tests.conftest import md5_60
 
 SF_DIR = "/root/testdata/sf0.001"
+# the synthetic 16-cell quantizer of the registry's ann_ivf_topk
+CELLS_16 = S._centroid_literals(16, 64, 11)
 
 
 @pytest.fixture(scope="module")
@@ -105,7 +106,7 @@ def test_ivf_topk_finds_planted_neighbors(spark):
         rows.append((1000 + j, [float(x) for x in rng.normal(0, 1, 64)]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     queries = df.where(F.col("vec_id") < 5)
-    got = S.ivf_topk(df, queries, k=3).toPandas()
+    got = S.ivf_topk(df, queries, CELLS_16, k=3).toPandas()
     for qi in range(5):
         g1 = got[(got.query_id == qi) & (got["rank"] == 1)]
         assert len(g1) == 1 and int(g1.neighbor_id.iloc[0]) == 100 + qi
@@ -115,15 +116,14 @@ def test_ivf_cells_partition_corpus(emb):
     """Every vector gets exactly one cell in [0, n_cells); probing all cells
     degrades IVF to exact brute force — top-1 must then match brute force."""
     cells = S.with_ivf_cell(
-        emb.select("vec_id", "embedding"), "embedding",
-        S._centroid_literals(16, 64, 11),
+        emb.select("vec_id", "embedding"), "embedding", CELLS_16
     ).toPandas()
     assert cells.cell.between(0, 15).all()
     assert len(cells) == cells.vec_id.nunique()
 
     queries = emb.where(F.col("vec_id") < 3)
     exact = S.brute_force_topk(emb, queries, k=1).toPandas()
-    full_probe = S.ivf_topk(emb, queries, k=1, n_cells=16, nprobe=16).toPandas()
+    full_probe = S.ivf_topk(emb, queries, CELLS_16, k=1, nprobe=16).toPandas()
     e = exact.sort_values("query_id").neighbor_id.tolist()
     f = full_probe.sort_values("query_id").neighbor_id.tolist()
     assert e == f
@@ -197,7 +197,11 @@ def test_topk_rank_partitioning_invariant(emb):
     identical under different partitionings (a rounding-boundary tie under
     exact-double ordering would be summation-order / plan dependent)."""
     queries = emb.where(F.col("vec_id") < 3)
-    for fn in (S.ivf_topk, S.lsh_bucketed_topk, S.brute_force_topk):
+
+    def ivf_topk(corpus, queries, k):
+        return S.ivf_topk(corpus, queries, CELLS_16, k=k)
+
+    for fn in (ivf_topk, S.lsh_bucketed_topk, S.brute_force_topk):
         a = (
             fn(emb.repartition(1), queries, k=10)
             .toPandas()
@@ -218,7 +222,7 @@ def test_arrow_topk_driver_collect_guard(emb):
     """The 'small by contract' query side is enforced: a fat query set must
     fail fast with the remedy named, not OOM the driver."""
     with pytest.raises(ValueError, match="Split the query set"):
-        S.brute_force_topk(emb, emb, k=2, max_query_rows=10)
+        S.collect_guarded(emb, "query", 10)
 
 
 def test_lsh_recall_monotone_in_tables(emb):
@@ -258,98 +262,55 @@ def test_fit_ivf_centroids_partitioning_invariant(spark):
     """The 6dp rounding contract: fitted centroids must be identical
     whatever the input partitioning (summation-order noise absorbed)."""
     _, df = _gaussian_frame(spark, 31, 300, 16)
-    c1 = S.fit_ivf_centroids(df.repartition(1), n_cells=4,
-                             dim=16, seed=5, rounds=2)
-    c2 = S.fit_ivf_centroids(df.repartition(13), n_cells=4,
-                             dim=16, seed=5, rounds=2)
+    c1 = S.fit_ivf_centroids(df.repartition(1), n_cells=4, rounds=2)
+    c2 = S.fit_ivf_centroids(df.repartition(13), n_cells=4, rounds=2)
     assert c1 == c2
 
 
 def test_fit_ivf_centroids_reduces_quantization_error(spark):
     """Lloyd rounds must not make the coarse quantizer worse: mean squared
-    distance to the assigned centroid after fitting <= before (strict <
-    on gaussian data vs gaussian random centroids)."""
+    distance to the assigned centroid after fitting < at the data-point
+    init the fit starts from."""
     X, df = _gaussian_frame(spark, 37, 500, 16)
-    fitted = S.fit_ivf_centroids(df, n_cells=4, dim=16, seed=5,
-                                 rounds=3)
-    before = _sse(X, S._centroid_literals(4, 16, 5))
+    fitted = S.fit_ivf_centroids(df, n_cells=4, rounds=3)
+    before = _sse(X, S.data_init_centroids(df, 4))
     after = _sse(X, fitted)
     assert after < before, (before, after)
 
 
 def test_fit_ivf_empty_cells_keep_previous_centroid(spark):
-    """Fewer vectors than cells: the unpopulated cells must keep their
-    seed centroids (no NaNs, no drops)."""
-    pdf = pd.DataFrame(
-        {"vec_id": [0, 1], "embedding": [[1.0, 0.0], [0.9, 0.1]]}
+    """A cell that ends a round empty keeps its centroid (no NaNs, no
+    drops). Planted: the two lowest-hash ids, i.e. data init's cells 0 and
+    1, carry the same vector; argmin ties go to the lowest cell, so cell 1
+    gets no vectors while cell 0 takes its near neighbours and moves."""
+    ids = sorted(range(10), key=lambda i: md5_60(str(i)))
+    vecs = [
+        [1.0, 0.0], [1.0, 0.0], [0.0, 1.0], [-1.0, 0.0],  # the 4 init cells
+        [1.0, 0.3], [0.2, 1.0], [-1.0, 0.2], [0.9, -0.2], [0.0, 0.8],
+        [-0.8, -0.1],
+    ]
+    df = spark.createDataFrame(
+        pd.DataFrame({"vec_id": ids, "embedding": vecs})
     )
-    df = spark.createDataFrame(pdf)
-    init = S._centroid_literals(8, 2, 5)
-    fitted = S.fit_ivf_centroids(df, n_cells=8, dim=2, seed=5,
-                                 rounds=2)
-    assert len(fitted) == 8
-    changed = sum(1 for a, b in zip(init, fitted) if a != b)
-    assert 1 <= changed <= 2  # only the populated cell(s) moved
+    init = S.data_init_centroids(df, 4)
+    assert init[0] == init[1] == [1.0, 0.0]
+    fitted = S.fit_ivf_centroids(df, n_cells=4, rounds=1)
+    assert len(fitted) == 4
+    assert fitted[1] == init[1]  # empty in the round: kept
+    assert fitted[0] != init[0]  # populated: moved to its members' mean
     assert all(all(np.isfinite(x) for x in c) for c in fitted)
 
 
 def test_fit_ivf_on_hash_sample_still_improves(spark):
     """The 100 TB fitting contract (pass a hash-sampled frame): centroids
-    fitted on a deterministic ~50% md5 sample must still beat the seed
-    centroids on the FULL corpus' quantization error."""
+    fitted on a deterministic ~50% md5 sample must still beat the
+    sample's data-point init on the FULL corpus' quantization error."""
     from audio_feature_extraction_spark.operators.quality import hash_bucket
 
     X, df = _gaussian_frame(spark, 53, 600, 16)
     sample = df.where(hash_bucket(F.col("vec_id"), 100) < 50)
     n_sample = sample.count()
     assert 200 < n_sample < 400  # the md5 split is roughly half
-    fitted = S.fit_ivf_centroids(sample, n_cells=4, dim=16,
-                                 seed=5, rounds=3)
-    assert _sse(X, fitted) < _sse(X, S._centroid_literals(4, 16, 5))
+    fitted = S.fit_ivf_centroids(sample, n_cells=4, rounds=3)
+    assert _sse(X, fitted) < _sse(X, S.data_init_centroids(sample, 4))
 
-
-# ----------------------------------------------------------------- routing
-
-def _assert_same_topk(got, want):
-    key = ["query_id", "rank"]
-    pd.testing.assert_frame_equal(
-        got.sort_values(key).reset_index(drop=True),
-        want.sort_values(key).reset_index(drop=True),
-    )
-
-
-def test_approx_topk_routes_low_cos_to_ivf_with_warning(spark):
-    """On a weak-neighbor corpus the router must serve the IVF result
-    (row-equal) and emit the steering warning: the API actively steers
-    users off LSH in this regime."""
-    _, df = _gaussian_frame(spark, 41, 200, 64)
-    q = df.where(F.col("vec_id") < 3)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        routed = S.approx_topk(df, q, k=5).toPandas()
-    assert any("routing" in str(x.message) for x in w), [str(x.message) for x in w]
-    _assert_same_topk(routed, S.ivf_topk(df, q, k=5).toPandas())
-
-
-def test_approx_topk_routes_high_cos_to_lsh(spark):
-    """Planted near-duplicate clusters (kth-neighbor cos ~1): the router
-    must pick LSH (the regime it is actually good at) without warning."""
-    rng = np.random.default_rng(43)
-    base = rng.normal(0, 1, (3, 64))
-    rows = []
-    vid = 0
-    for b in base:
-        for _ in range(15):  # 15 copies per cluster -> kth(10) cos ~ 1
-            rows.append((vid, (b + rng.normal(0, 0.01, 64)).tolist()))
-            vid += 1
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["vec_id", "embedding"])
-    )
-    q = df.where(F.col("vec_id") < 3)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        routed = S.approx_topk(df, q, k=10).toPandas()
-    assert not any("routing" in str(x.message) for x in w)
-    _assert_same_topk(
-        routed, S.lsh_bucketed_topk(df, q, k=10, n_tables=4).toPandas()
-    )
