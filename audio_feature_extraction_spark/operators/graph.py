@@ -16,7 +16,9 @@ chain of near-duplicates costs a few more rounds, not one round per hop.
 Each round ends in one localCheckpoint, so the plan does not grow with
 iterations; the convergence fingerprint (edge count + bit_xor) is an
 Observation on that checkpoint, so it costs no job of its own and no data
-collect.
+collect. Once a round's checkpoint is materialized, the round before it is
+released: nothing reads it any more, so only the returned plan's own
+checkpoint stays on the executors.
 """
 
 from __future__ import annotations
@@ -49,6 +51,11 @@ def _checkpoint(edges: DataFrame) -> tuple[DataFrame, tuple]:
     ).localCheckpoint(eager=True)
     row = obs.get
     return e, (row["n"], row["h"])
+
+
+def _release(checkpointed: DataFrame) -> None:
+    """Drop the blocks of a localCheckpoint that nothing reads any more."""
+    checkpointed._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def connected_components(
@@ -111,7 +118,9 @@ def connected_components(
         small = large.withColumn("m", F.min("lo").over(by_hi)).select(
             F.explode(F.array("lo", "hi")).alias("hi"), F.col("m").alias("lo")
         )
+        prev = e
         e, nfp = _checkpoint(_canonical(small))
+        _release(prev)
         if nfp == fp:
             converged = True
             break

@@ -5,16 +5,22 @@ consecutive speech segments are merged while the gap ≤ min_silence_duration,
 *then* sessions shorter than min_speech_duration are dropped — merge first,
 filter second; order matters and is preserved here.
 
-Batch implementation is the classic three-step window plan (one shuffle on the
-entity key, both windows share it):
-  1. gap[t]   = ts[t] - lag(ts)[t]
-  2. new[t]   = gap > threshold
-  3. session  = running_sum(new)    -- cumulative count of session breaks
+The session rule is declared once, as two column helpers over one ordered
+entity window (one shuffle on the entity key, both windows share it):
+  1. :func:`session_break` -- new[t] = 1 if ts[t] - lag(ts)[t] > threshold,
+     else 0 (the first row of an entity is 0);
+  2. :func:`session_index` -- session[t] = running_sum(new)[t], the
+     cumulative count of session breaks.
+
+:func:`with_session_id` nests the two in one column. A caller that already
+runs windows over the same spec computes the flag in its first window layer
+and the running sum in its second, so the rule adds no Window node of its
+own (the flagship pipeline does this).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from audio_feature_extraction_spark.operators.timeutil import ts_micros
@@ -29,14 +35,24 @@ def with_session_id(
     out: str = "session_id",
 ) -> DataFrame:
     """Add a 0-based per-entity session id column."""
-    order = order or [ts]
-    w = Window.partitionBy(*keys).orderBy(*order)
-    hist = w.rowsBetween(Window.unboundedPreceding, 0)
+    w = Window.partitionBy(*keys).orderBy(*(order or [ts]))
+    return df.withColumn(out, session_index(session_break(ts, w, gap_sec), w))
+
+
+def session_break(ts: str, w: WindowSpec, gap_sec: float) -> Column:
+    """1 where the row opens a new session (more than ``gap_sec`` after the
+    previous row of ``w``), else 0. Exact int64 µs comparison."""
     gap_us = ts_micros(ts) - F.lag(ts_micros(ts), 1).over(w)
-    is_new = F.when(
+    return F.when(
         gap_us > F.lit(int(round(gap_sec * 1_000_000))), F.lit(1)
     ).otherwise(F.lit(0))
-    return df.withColumn(out, F.sum(is_new).over(hist).cast("long"))
+
+
+def session_index(breaks: Column | str, w: WindowSpec) -> Column:
+    """0-based session id: the running sum of :func:`session_break` flags
+    over ``w``'s history frame."""
+    hist = w.rowsBetween(Window.unboundedPreceding, 0)
+    return F.sum(breaks).over(hist).cast("long")
 
 
 def session_bounds(

@@ -10,13 +10,24 @@ For every row of the input sequences table:
 Must match ``oracle.oracle_features`` (np.allclose on feature_vector,
 bit-identical int32 tokens) — see tests/test_pipeline_oracle.py.
 
-Physical shape: ONE hash exchange total. The as-of runs first with its union
-clustered on hash(doc_id) — a strict subset of the as-of window keys
-(source, doc_id), which still satisfies the window's ClusteredDistribution —
-and every subsequent feature window partitions by doc_id, so Spark reuses the
-same partitioning and plans sort-only for the rest of the pipeline. The fat
-token rows cross the wire exactly once. No pandas UDF anywhere — the whole
-plan is JVM window exec + projections, whole-stage-codegen eligible.
+Physical shape: ONE hash exchange, two sorts and three Window nodes. The
+as-of runs first with its union clustered on hash(doc_id) -- a strict subset
+of the as-of window keys (source, doc_id), which still satisfies the window's
+ClusteredDistribution -- and every feature window partitions by doc_id in
+(ts, seq) order, so Spark reuses that partitioning and sorts once more. The
+features are two window layers over that one spec, each a single ``select``
+(one Window node each):
+
+  layer 1 reads only input columns: the LOCF fill ``last(value)``, the
+          running token total, and the session break flag (``lag(ts)``);
+  layer 2 reads layer 1: lag-1 delta, width-9 delta, the rolling mean and
+          std of the filled value, and the session id (running sum of the
+          break flags).
+
+A chain of ``withColumn`` calls would put one Window node per dependent
+step over the fat token rows (five, plus the as-of one). The fat token rows
+cross the wire exactly once. No pandas UDF anywhere -- the whole plan is JVM
+window exec + projections, whole-stage-codegen eligible.
 """
 
 from __future__ import annotations
@@ -32,7 +43,10 @@ from audio_feature_extraction_spark.oracle import (
 from audio_feature_extraction_spark.operators import windows as W
 from audio_feature_extraction_spark.operators.asof import asof_join
 from audio_feature_extraction_spark.operators.backfill import locf
-from audio_feature_extraction_spark.operators.sessionize import with_session_id
+from audio_feature_extraction_spark.operators.sessionize import (
+    session_break,
+    session_index,
+)
 from audio_feature_extraction_spark.operators.timeutil import ts_micros
 
 
@@ -59,22 +73,28 @@ def feature_pipeline(
 
     w = Window.partitionBy("doc_id").orderBy("ts", "seq")
 
-    # point-in-time backfill + windowed features (no further exchange)
-    df = matched.withColumn("v_filled", locf("value", w, default=0.0))
-    df = df.withColumn("delta1", W.delta1("v_filled", w))
-    df = df.withColumn("delta9", W.delta_trailing("v_filled", w, half=4))
-    df = df.withColumn("roll_mean", W.rolling_mean("v_filled", w, ROLL_WINDOW))
-    df = df.withColumn("roll_std", W.rolling_std_pop("v_filled", w, ROLL_WINDOW))
-    df = df.withColumn("cum_tokens", W.running_sum(F.col("n_tok").cast("long"), w))
-    matched = with_session_id(
-        df, keys=["doc_id"], ts="ts", order=["ts", "seq"], gap_sec=gap_sec
+    # point-in-time backfill + windowed features (no further exchange), as
+    # two window layers: each select over the one spec is one Window node
+    layer1 = matched.select(
+        "*",
+        locf("value", w, default=0.0).alias("v_filled"),
+        W.running_sum(F.col("n_tok").cast("long"), w).alias("cum_tokens"),
+        session_break("ts", w, gap_sec).alias("__break"),
+    )
+    layer2 = layer1.select(
+        "*",
+        W.delta1("v_filled", w).alias("delta1"),
+        W.delta_trailing("v_filled", w, half=4).alias("delta9"),
+        W.rolling_mean("v_filled", w, ROLL_WINDOW).alias("roll_mean"),
+        W.rolling_std_pop("v_filled", w, ROLL_WINDOW).alias("roll_std"),
+        session_index("__break", w).alias("session_id"),
     )
 
     # exact µs subtraction first, one double division after (oracle parity)
     lag_sec = (
         (ts_micros("ts") - ts_micros("matched_ts")).cast("double") / 1e6
     )
-    out = matched.select(
+    out = layer2.select(
         "doc_id",
         "seq",
         "ts",

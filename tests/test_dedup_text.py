@@ -314,6 +314,44 @@ def test_cc_raises_when_not_converged(spark):
         connected_components(e, nodes, max_iter=1)
 
 
+def _cc_chain(spark):
+    from audio_feature_extraction_spark.operators.graph import (
+        connected_components,
+    )
+
+    n = 64
+    e = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, n)], "id_a long, id_b long"
+    )
+    nodes = spark.createDataFrame([(i,) for i in range(1, n + 1)], "id long")
+    return connected_components(e, nodes)
+
+
+@pytest.mark.parametrize("case", ["chain", "dedup_clusters"])
+def test_cc_keeps_only_its_final_checkpoint(spark, case):
+    """Each star round's localCheckpoint is released once the next one is
+    materialized: of the RDDs registered while building and collecting,
+    only the returned plan's own checkpoint is still persistent, and it
+    stays readable. RDD ids above the pre-query maximum are tracked, not
+    the persistent count: the ContextCleaner may free RDDs of earlier
+    plans meanwhile."""
+    import __spark_entry__ as em
+
+    sc = spark.sparkContext
+    floor = sc.emptyRDD()._jrdd.id()
+    if case == "chain":
+        df = _cc_chain(spark)
+    else:
+        df = em.queries()[case](spark, SF_DIR)
+    rows = df.collect()
+    kept = [i for i in sc._jsc.getPersistentRDDs().keys() if i > floor]
+    assert len(kept) == 1, kept
+    if case == "chain":
+        assert len(rows) == 64 and all(r["cluster_id"] == 1 for r in rows)
+    else:
+        assert rows
+
+
 # Build jobs at sf0.001. dedup_clusters: 1 schema read, 9 for the
 # in-universe pair checkpoint, then 4 per star round (2 rounds here); CC
 # rounds are data-dependent, so this bound holds for this data only.

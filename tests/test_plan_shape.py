@@ -2,7 +2,10 @@
 plan shape, so lock it in:
 
 - the flagship pipeline does exactly ONE exchange of the fat token rows
-  (the as-of union clustered on doc_id; every feature window reuses it);
+  (the as-of union clustered on doc_id; every feature window reuses it),
+  and its features are two Window nodes over one sort;
+- a ``get_spark`` session builds plans without pyspark's per-call
+  DataFrame-debugging capture, and runtime errors still raise;
 - filters reach the parquet scan (PushedFilters) and unused columns are
   pruned (ReadSchema);
 - the dimension side of the equi-join chain broadcasts (no shuffle of the
@@ -42,6 +45,28 @@ def test_pipeline_single_exchange(tiny_df):
     # createDataFrame inputs are local scans; the one exchange is the
     # doc_id-clustered repartition feeding the as-of window + all features
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
+
+
+def test_pipeline_three_windows_two_sorts(tiny_df):
+    """The as-of window plus two feature window layers (one ``select``
+    each), all over the one hash(doc_id) exchange: the as-of sort and one
+    (doc_id, ts, seq) sort that both feature layers share."""
+    seq, ref = tiny_df
+    plan = _plan(feature_pipeline(seq, ref))
+    assert len(re.findall(r"\bWindow \[", plan)) == 3, plan
+    assert len(re.findall(r"\bSort \[", plan)) == 2, plan
+    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
+
+
+def test_session_debugging_off_errors_still_raise(spark):
+    """The per-call call-site capture is off; an ANSI runtime error in a
+    built plan still raises, with its error class."""
+    from pyspark.errors import ArithmeticException
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    df = spark.range(3).select((F.lit(1) / (F.col("id") - F.lit(1))).alias("q"))
+    with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+        df.collect()
 
 
 def test_pipeline_single_exchange_on_parquet(spark):

@@ -1,6 +1,6 @@
 """The engine's Python worker daemon: its path filter, the light package
-import it relies on, and the import path the workers of a ``get_spark``
-session really see."""
+import it relies on, and the import path and preloaded modules the workers
+of a ``get_spark`` session really see."""
 
 from __future__ import annotations
 
@@ -8,6 +8,8 @@ import json
 import os
 import subprocess
 import sys
+
+import pytest
 
 from audio_feature_extraction_spark.worker_daemon import worker_path
 
@@ -72,6 +74,7 @@ import pandas as pd
 from audio_feature_extraction_spark.session import get_spark
 
 def probe(batches):
+    import os
     import zipimport
     import pyspark
     for _ in batches:
@@ -80,8 +83,15 @@ def probe(batches):
         imp.archive for imp in sys.path_importer_cache.values()
         if isinstance(imp, zipimport.zipimporter)
     }})
+    # the daemon forked this worker: what it had loaded before the fork
+    with open(f"/proc/{{os.getppid()}}/cmdline", "rb") as f:
+        daemon = f.read().replace(b"\\0", b" ").decode()
+    with open(f"/proc/{{os.getppid()}}/maps") as f:
+        maps = f.read()
     yield pd.DataFrame({{"info": [json.dumps(
-        {{"pyspark": pyspark.__file__, "path": sys.path, "zips": zips}}
+        {{"pyspark": pyspark.__file__, "path": sys.path, "zips": zips,
+          "daemon": daemon,
+          "daemon_libs": [m for m in ("/pandas/_libs/", "/pyarrow/lib.") if m in maps]}}
     )]}})
 
 spark = get_spark(app_name="worker-path", cores=2, driver_memory="1g")
@@ -96,16 +106,32 @@ def _spark_archive(entry: str) -> bool:
     return name.endswith(".jar") or name == "pyspark.zip" or name.startswith("py4j-")
 
 
-def test_workers_import_pyspark_from_a_directory(tmp_path):
-    """Run from a directory that is not the repository, with no PYTHONPATH,
-    as ``tests/test_submit.py`` does: the workers must still find the daemon
-    and import pyspark without any Spark archive on their path."""
-    out = _run(WORKER_PROBE.format(repo=REPO), str(tmp_path), 540)
+@pytest.fixture(scope="module")
+def workers(tmp_path_factory):
+    """What the workers of a ``get_spark`` session report, run from a
+    directory that is not the repository, with no PYTHONPATH, as
+    ``tests/test_submit.py`` does."""
+    out = _run(WORKER_PROBE.format(repo=REPO), str(tmp_path_factory.mktemp("cwd")), 540)
     assert out.returncode == 0, out.stderr[-3000:]
-    workers = json.loads(out.stdout.strip().splitlines()[-1])
-    assert workers
+    reports = json.loads(out.stdout.strip().splitlines()[-1])
+    assert reports
+    return reports
+
+
+def test_workers_import_pyspark_from_a_directory(workers):
+    """The workers must find the daemon and import pyspark without any
+    Spark archive on their path."""
     for w in workers:
         assert os.path.basename(os.path.dirname(w["pyspark"])) == "pyspark", w["pyspark"]
         assert os.path.isdir(os.path.dirname(w["pyspark"])), w["pyspark"]
         assert not [e for e in w["path"] if _spark_archive(e)], w["path"]
         assert not [z for z in w["zips"] if _spark_archive(z)], w["zips"]
+
+
+def test_daemon_preloads_pandas_and_pyarrow_before_forking(workers):
+    """Each worker's parent is the engine's daemon, and it had pandas' and
+    pyarrow's extension modules loaded: workers inherit them at fork
+    instead of importing them in their first task."""
+    for w in workers:
+        assert "audio_feature_extraction_spark.worker_daemon" in w["daemon"], w["daemon"]
+        assert w["daemon_libs"] == ["/pandas/_libs/", "/pyarrow/lib."], w["daemon_libs"]

@@ -8,10 +8,17 @@ at-a-time Python, sort-merge joins, and scan pushdown. The same facts
 reviewable artifact so a plan regression shows up as a diff.
 
 It also writes BENCH/plan_hashes.json, the normalized plan hash of every
-query. The shipped hashes were computed at sf0.001 (the default ``sf_dir``):
-they prove plan stability at that scale only. AQE and size-dependent
-choices (broadcast vs shuffle, partition counts) can give another plan at a
-larger scale factor.
+query, with the git commit it was computed at and whether tracked files
+differed from that commit when the run started. The shipped hashes were
+computed at sf0.001 (the default ``sf_dir``): they prove plan stability at
+that scale only. AQE and size-dependent choices (broadcast vs shuffle,
+partition counts) can give another plan at a larger scale factor.
+
+The session prints plan metadata untruncated
+(``spark.sql.maxMetadataStringLength``): Spark cuts a scan's
+``DataFilters`` text at that length before the expression ids are
+normalized away, so with the default of 100 the cut point moved with the
+digit count of the ids, and one plan could get two hashes.
 
 Usage:
     python tools/plan_report.py [sf_dir]
@@ -29,6 +36,7 @@ sys.path.insert(0, ".")
 
 import __spark_entry__ as em  # noqa: E402
 from audio_feature_extraction_spark.session import get_spark  # noqa: E402
+from perfbench.tracing import git_stamp  # noqa: E402
 
 BANNED = ("BatchEvalPython", "CartesianProduct")
 
@@ -77,7 +85,11 @@ def plan_facts(plan: str) -> dict:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = get_spark(app_name="afe-plans", cores=4, shuffle_partitions=8)
+    stamp = git_stamp(os.getcwd())
+    spark = get_spark(
+        app_name="afe-plans", cores=4, shuffle_partitions=8,
+        extra={"spark.sql.maxMetadataStringLength": str(2**31 - 1)},
+    )
     spark.sparkContext.setLogLevel("ERROR")
     rows, banned_any, plan_hashes = [], [], {}
     for name, fn in em.queries().items():
@@ -141,7 +153,7 @@ plus the expression choices in the code are the codegen evidence.)
     with open("BENCH/plan_hashes.json", "w") as fh:
         json.dump(
             {"sf_dir": sf_dir, "normalized": "expr-ids, plan ids and lambda variable ids stripped",
-             "hashes": plan_hashes}, fh, indent=1, sort_keys=True,
+             "git": stamp, "hashes": plan_hashes}, fh, indent=1, sort_keys=True,
         )
     print(
         f"wrote BENCH/PLANS.md ({len(rows)} queries, 0 banned nodes) "
