@@ -260,9 +260,17 @@ def test_star_cc_matches_label_propagation(spark):
     assert got == dict(enumerate(lbl))
 
 
+def _persistent_rdds_above(sc, floor: int) -> list[int]:
+    """Ids of the persistent RDDs registered after RDD id ``floor``. Ids,
+    not the persistent count: the ContextCleaner may free RDDs of earlier
+    plans meanwhile."""
+    return [i for i in sc._jsc.getPersistentRDDs().keys() if i > floor]
+
+
 def test_star_cc_long_chain(spark):
     """A 64-node path: star contraction must reach the fixpoint well inside
-    the O(log n) budget (one round per hop would need 63 rounds)."""
+    the O(log n) budget (one round per hop would need 63 rounds), keeping
+    only its final round's checkpoint."""
     from audio_feature_extraction_spark.operators.graph import (
         connected_components,
     )
@@ -272,8 +280,11 @@ def test_star_cc_long_chain(spark):
         [(i, i + 1) for i in range(1, n)], "id_a long, id_b long"
     )
     nodes = spark.createDataFrame([(i,) for i in range(1, n + 1)], "id long")
+    floor = spark.sparkContext.emptyRDD()._jrdd.id()
     out = connected_components(e, nodes, max_iter=14).collect()
     assert len(out) == n and all(r["cluster_id"] == 1 for r in out)
+    # every round but the last was released, and the last stayed readable
+    assert len(_persistent_rdds_above(spark.sparkContext, floor)) == 1
 
 
 def test_cc_out_of_universe_edges_ignored_consistently(spark):
@@ -314,42 +325,17 @@ def test_cc_raises_when_not_converged(spark):
         connected_components(e, nodes, max_iter=1)
 
 
-def _cc_chain(spark):
-    from audio_feature_extraction_spark.operators.graph import (
-        connected_components,
-    )
-
-    n = 64
-    e = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, n)], "id_a long, id_b long"
-    )
-    nodes = spark.createDataFrame([(i,) for i in range(1, n + 1)], "id long")
-    return connected_components(e, nodes)
-
-
-@pytest.mark.parametrize("case", ["chain", "dedup_clusters"])
-def test_cc_keeps_only_its_final_checkpoint(spark, case):
+@pytest.mark.parametrize("qname", ["dedup_clusters", "emb_dedup_clusters"])
+def test_cc_keeps_only_its_final_checkpoint(spark, qname):
     """Each star round's localCheckpoint is released once the next one is
-    materialized: of the RDDs registered while building and collecting,
-    only the returned plan's own checkpoint is still persistent, and it
-    stays readable. RDD ids above the pre-query maximum are tracked, not
-    the persistent count: the ContextCleaner may free RDDs of earlier
-    plans meanwhile."""
+    materialized: after building and collecting, only the returned plan's
+    own checkpoint is still persistent."""
     import __spark_entry__ as em
 
     sc = spark.sparkContext
     floor = sc.emptyRDD()._jrdd.id()
-    if case == "chain":
-        df = _cc_chain(spark)
-    else:
-        df = em.queries()[case](spark, SF_DIR)
-    rows = df.collect()
-    kept = [i for i in sc._jsc.getPersistentRDDs().keys() if i > floor]
-    assert len(kept) == 1, kept
-    if case == "chain":
-        assert len(rows) == 64 and all(r["cluster_id"] == 1 for r in rows)
-    else:
-        assert rows
+    assert em.queries()[qname](spark, SF_DIR).collect()
+    assert len(_persistent_rdds_above(sc, floor)) == 1
 
 
 # Build jobs at sf0.001. dedup_clusters: 1 schema read, 9 for the
