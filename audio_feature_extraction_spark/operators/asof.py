@@ -9,33 +9,36 @@ sorted merge; the DTW band constraint survives as the tolerance
 (max_time_difference analog, `dtw_alignment.py:44`). Zero temporal leakage by
 construction: a backward match never reads right rows with ts > left.ts.
 
-One matcher: union both sides with a marker, then ``last(struct)`` over the
-history frame ordered by (ts, marker). Right-side rows sort *before* left
-rows at equal ts, so backward matches are inclusive (ties match). It is a
-100% JVM window exec — no Python, no join explosion. Four physical
-strategies, same semantics (equivalence is tested):
+One match rule (:func:`_matched`) turns the backward and forward candidates
+of every strategy into the result: a NULL left ts never matches, the
+tolerance applies per side in integer µs, and ``nearest`` ties go backward.
+Three physical strategies produce those candidates, same semantics
+(equivalence is tested):
 
-``window``      (default) one hash exchange on the keys (or on the
-                ``cluster_on`` subset) feeds the window.
+``window``      (default) union both sides with a marker, then
+                ``last(struct)`` over the history frame ordered by
+                (ts, marker): the sorted sweep of a merge join, 100% JVM
+                window exec. Right-side rows sort *before* left rows at
+                equal ts, so backward matches are inclusive (ties match).
+                One hash exchange on the keys (or on the ``cluster_on``
+                subset) feeds the window.
 
 ``salted``      the window partition key is extended with a salt: left rows
-                get pmod(xxhash64(ts), S); right rows are replicated to
-                all S salts. Use when the equi key is coarse and skewed (one
-                hot ``source``) — a single window partition would otherwise
-                serialize the hot key on one task.
-
-``range_merge`` the north rule's shape: repartitionByRange on the keys feeds
-                the same window, whose own sort on (keys, ts, marker) is the
-                secondary sort of a sorted merge over range partitions.
-                Range partitioning balances partitions by sampled row
-                counts, which also absorbs key skew without salting.
+                get pmod(xxhash64(ts), SALT_BUCKETS); right rows are
+                replicated to every salt. Use when the equi key is coarse
+                and skewed (one hot ``source``) — a single window partition
+                would otherwise serialize the hot key on one task.
 
 ``broadcast``   for a SMALL right side (a reference dimension): collapse the
                 right side to one sorted struct-array per key, broadcast it,
-                and match per left row with array `filter` + `element_at` —
-                the fat left side is never shuffled at all. The right side
-                must fit in a broadcast (same contract as any dim broadcast).
-                Backward and forward only.
+                and take the candidates per left row with array ``filter`` +
+                ``try_element_at`` — the fat left side is never shuffled at
+                all. The right side must fit in a broadcast (same contract as
+                any dim broadcast).
+
+A range-partitioned variant of the window strategy was measured and dropped:
+its extra sampling job made it slower than ``window`` on uniform keys and
+than ``salted`` on a hot key.
 
 Right side must be unique per (keys, ts): use :func:`dedupe_right` first if
 needed (the reference pre-dedupes teacher frames the same way).
@@ -43,15 +46,15 @@ needed (the reference pre-dedupes teacher frames the same way).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from audio_feature_extraction_spark.operators.timeutil import tol_us, ts_micros
 
 _MARK = "__is_ref"
-_TS = "__asof_ts"
 _SALT = "__salt"
-STRATEGIES = ("window", "salted", "range_merge", "broadcast")
+SALT_BUCKETS = 8
+STRATEGIES = ("window", "salted", "broadcast")
 DIRECTIONS = ("backward", "forward", "nearest")
 
 
@@ -61,57 +64,50 @@ def dedupe_right(right: DataFrame, on: list[str], ts: str) -> DataFrame:
     return right.groupBy(*on, ts).agg(*[F.max(c).alias(c) for c in payload])
 
 
-def _union_frames(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    ts: str,
+def _matched(
+    frame: DataFrame,
+    left_cols: list[str],
     right_payload: list[str],
-):
-    lcols = left.columns
-    l = left.select(
-        *lcols,
-        F.col(ts).alias(_TS),
-        F.lit(0).alias(_MARK),
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"__r_{c}") for c in right_payload],
-        F.lit(None).cast(right.schema[ts].dataType).alias("__r_ts"),
-    )
-    r = right.select(
-        *[
-            F.col(c).alias(c) if c in on else F.lit(None).cast(left.schema[c].dataType).alias(c)
-            for c in lcols
-        ],
-        F.col(ts).alias(_TS),
-        F.lit(1).alias(_MARK),
-        *[F.col(c).alias(f"__r_{c}") for c in right_payload],
-        F.col(ts).alias("__r_ts"),
-    )
-    return l.unionByName(r)
+    lts: Column,
+    back: Column | None,
+    fwd: Column | None,
+    tolerance_sec: float | None,
+) -> DataFrame:
+    """The one match rule. ``back`` / ``fwd`` are the backward and forward
+    candidate right rows (a struct with ``ts`` first, NULL when there is
+    none; None when the direction does not ask for that side). Each
+    candidate is checked on its own side first: a NULL left ts has no
+    position in time and never matches (pandas ``merge_asof`` parity), and
+    the tolerance compares exact int64 µs, no double rounding at the
+    boundary. With both sides, the closer valid one wins and an exact tie
+    goes backward; tolerance filters each side BEFORE the choice, so a
+    nearer out-of-tolerance backward row loses to a farther in-tolerance
+    forward row, as in pandas."""
+    t_us = tol_us(tolerance_sec)
 
+    def valid(cand: Column, lag: Column) -> Column:
+        ok = lts.isNotNull() & cand["ts"].isNotNull()
+        return ok if t_us is None else ok & (lag <= F.lit(t_us))
 
-def _finish(matched: DataFrame, left_cols, right_payload, tolerance_sec, direction):
-    # a NULL left-ts row has no position in time and never matches (pandas
-    # merge_asof parity; also the broadcast strategy's behavior). Without
-    # this, the forward window's desc sort (NULLS LAST) exposes EVERY right
-    # row to a NULL-ts left row.
-    ok = F.col("__m___r_ts").isNotNull() & F.col(_TS).isNotNull()
-    if tolerance_sec is not None:
-        # exact int64 microsecond arithmetic — no double-rounding at the
-        # tolerance boundary
-        if direction == "backward":
-            lag = ts_micros(_TS) - ts_micros("__m___r_ts")
-        else:
-            lag = ts_micros("__m___r_ts") - ts_micros(_TS)
-        ok = ok & (lag <= F.lit(tol_us(tolerance_sec)))
-    out = matched.where(F.col(_MARK) == 0).select(
+    if back is not None:
+        blag = ts_micros(lts) - ts_micros(back["ts"])
+        valid_b = valid(back, blag)
+    if fwd is not None:
+        flag = ts_micros(fwd["ts"]) - ts_micros(lts)
+        valid_f = valid(fwd, flag)
+    if fwd is None:
+        chosen = F.when(valid_b, back)
+    elif back is None:
+        chosen = F.when(valid_f, fwd)
+    else:
+        chosen = F.when(valid_b & (~valid_f | (blag <= flag)), back).when(
+            valid_f, fwd
+        )
+    return frame.select(
         *left_cols,
-        F.when(ok, F.col("__m___r_ts")).otherwise(F.lit(None)).alias("matched_ts"),
-        *[
-            F.when(ok, F.col(f"__m___r_{c}")).otherwise(F.lit(None)).alias(c)
-            for c in right_payload
-        ],
+        chosen["ts"].alias("matched_ts"),
+        *[chosen[c].alias(c) for c in right_payload],
     )
-    return out
 
 
 def asof_join(
@@ -122,7 +118,6 @@ def asof_join(
     tolerance_sec: float | None = None,
     direction: str = "backward",
     strategy: str = "window",
-    salt_buckets: int = 8,
     cluster_on: list[str] | None = None,
 ) -> DataFrame:
     """As-of join; returns all left columns + ``matched_ts`` + right payload
@@ -138,74 +133,75 @@ def asof_join(
     partitioning with zero further shuffles. This is how the flagship
     pipeline runs end-to-end on ONE exchange of the fat token rows.
 
-    ``direction="nearest"`` (pandas ``merge_asof`` parity; every strategy
-    but broadcast): the closer of the backward and forward candidates wins,
-    exact-tie broken toward backward; ``tolerance_sec`` filters each
-    candidate BEFORE the choice (so a NEARER but out-of-tolerance backward
-    row loses to a farther in-tolerance forward row, matching pandas; the
-    converse case is vacuous — a forward row nearer than an in-tolerance
-    backward row is itself in tolerance). Plan shape:
-    both directions ride the SAME partitioning — one exchange, two
-    in-partition sorts.
+    ``direction="nearest"`` (pandas ``merge_asof`` parity) computes both
+    candidates; on the window strategies both ride the SAME partitioning —
+    one exchange, two in-partition sorts.
 
     Raises ``ValueError`` for a ``strategy`` not in :data:`STRATEGIES`, a
-    ``direction`` not in :data:`DIRECTIONS`, nearest with broadcast, or a
-    ``cluster_on`` that is not a subset of ``on`` under strategy="window".
+    ``direction`` not in :data:`DIRECTIONS`, or a ``cluster_on`` that is not
+    a subset of ``on`` under strategy="window".
     """
     if strategy not in STRATEGIES:
         raise ValueError(f"strategy must be one of {STRATEGIES}, got {strategy!r}")
     if direction not in DIRECTIONS:
         raise ValueError(f"direction must be one of {DIRECTIONS}, got {direction!r}")
-    if direction == "nearest" and strategy == "broadcast":
-        raise ValueError(
-            "direction='nearest' needs strategy 'window', 'salted' or "
-            "'range_merge', not 'broadcast'"
-        )
     if cluster_on and (strategy != "window" or not set(cluster_on) <= set(on)):
         raise ValueError(
             f"cluster_on {cluster_on} must be a subset of the equi keys {on} "
             "and needs strategy='window'"
         )
     right_payload = [c for c in right.columns if c not in set(on) | {left_ts}]
+    lts = F.col(left_ts)
+    want_back, want_fwd = direction != "forward", direction != "backward"
 
     if strategy == "broadcast":
-        return _broadcast_asof(
-            left, right, on, left_ts, right_payload, tolerance_sec, direction
+        j = _broadcast_refs(left, right, on, left_ts, right_payload)
+        # try_element_at: NULL on an empty candidate array (no partner);
+        # element_at throws under ANSI mode (Spark 4 default)
+        back = fwd = None
+        if want_back:  # latest preceding
+            back = F.try_element_at(
+                F.filter("__refs", lambda r: r["ts"] <= lts), F.lit(-1)
+            )
+        if want_fwd:  # earliest following
+            fwd = F.try_element_at(
+                F.filter("__refs", lambda r: r["ts"] >= lts), F.lit(1)
+            )
+        return _matched(
+            j, left.columns, right_payload, lts, back, fwd, tolerance_sec
         )
 
-    u = _union_frames(left, right, on, left_ts, right_payload)
-    nparts = int(u.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-
+    # both sides in one frame, event time in ``left_ts``; right rows carry
+    # NULL in the other left columns and their payload in __r_* columns
+    l = left.select(
+        *left.columns,
+        F.lit(0).alias(_MARK),
+        *[F.lit(None).cast(right.schema[c].dataType).alias(f"__r_{c}") for c in right_payload],
+    )
+    r = right.select(
+        *[
+            F.col(c) if c in on or c == left_ts
+            else F.lit(None).cast(left.schema[c].dataType).alias(c)
+            for c in left.columns
+        ],
+        F.lit(1).alias(_MARK),
+        *[F.col(c).alias(f"__r_{c}") for c in right_payload],
+    )
     part_keys = list(on)
     if strategy == "salted":
-        salt = F.pmod(F.xxhash64(left_ts), F.lit(salt_buckets)).cast("int")
         # left rows pick one salt; right rows are replicated to every salt so
         # each salt cell sees the complete right side for its key
-        l_salted = u.where(F.col(_MARK) == 0).withColumn(_SALT, salt)
-        r_salted = u.where(F.col(_MARK) == 1).withColumn(
-            _SALT, F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
+        salt = F.pmod(F.xxhash64(left_ts), F.lit(SALT_BUCKETS)).cast("int")
+        l = l.withColumn(_SALT, salt)
+        r = r.withColumn(
+            _SALT, F.explode(F.sequence(F.lit(0), F.lit(SALT_BUCKETS - 1)))
         )
-        u = l_salted.unionByName(r_salted)
-        part_keys = part_keys + [_SALT]
-
-    if strategy == "range_merge":
-        # the range exchange satisfies the window's clustering on the keys,
-        # so Spark adds no exchange of its own; the window's sort is the
-        # secondary sort within each range partition
-        u = u.repartitionByRange(nparts, *on)
+        part_keys.append(_SALT)
+    u = l.unionByName(r)
     if cluster_on:
+        nparts = int(u.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         u = u.repartition(nparts, *cluster_on)
 
-    wb = (
-        Window.partitionBy(*part_keys)
-        .orderBy(F.col(_TS).asc(), F.col(_MARK).desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wf = (
-        Window.partitionBy(*part_keys)
-        .orderBy(F.col(_TS).desc(), F.col(_MARK).desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
     # ONE last() over a struct that is non-NULL for every right row — NOT a
     # per-column last(payload, ignorenulls): that would skip a genuine right
     # row whose payload value is NULL and resurrect an older non-NULL value,
@@ -215,59 +211,49 @@ def asof_join(
     m_struct = F.when(
         F.col(_MARK) == 1,
         F.struct(
-            F.col("__r_ts").alias("ts"),
-            *[F.col(f"__r_{c}").alias(c) for c in right_payload],
+            lts.alias("ts"), *[F.col(f"__r_{c}").alias(c) for c in right_payload]
         ),
     )
-    if direction == "nearest":
-        t_us = tol_us(tolerance_sec)
-        matched = u.select(
-            "*",
-            F.last(m_struct, ignorenulls=True).over(wb).alias("__mb"),
-            F.last(m_struct, ignorenulls=True).over(wf).alias("__mf"),
+
+    def candidate(ts_order: Column) -> Column:
+        w = (
+            Window.partitionBy(*part_keys)
+            .orderBy(ts_order, F.col(_MARK).desc())
+            .rowsBetween(Window.unboundedPreceding, 0)
         )
-        blag = ts_micros(_TS) - ts_micros("__mb.ts")
-        flag = ts_micros("__mf.ts") - ts_micros(_TS)
-        # NULL left-ts rows never match (see _finish)
-        lts_ok = F.col(_TS).isNotNull()
-        valid_b = lts_ok & F.col("__mb.ts").isNotNull()
-        valid_f = lts_ok & F.col("__mf.ts").isNotNull()
-        if t_us is not None:
-            valid_b = valid_b & (blag <= F.lit(t_us))
-            valid_f = valid_f & (flag <= F.lit(t_us))
-        chosen = F.when(
-            valid_b & (~valid_f | (blag <= flag)), F.col("__mb")
-        ).when(valid_f, F.col("__mf"))
-        return matched.where(F.col(_MARK) == 0).select(
-            *left.columns,
-            chosen["ts"].alias("matched_ts"),
-            *[chosen[c].alias(c) for c in right_payload],
-        )
-    w = wb if direction == "backward" else wf
+        return F.last(m_struct, ignorenulls=True).over(w)
+
+    sides = {}
+    if want_back:
+        sides["__mb"] = candidate(lts.asc())
+    if want_fwd:
+        sides["__mf"] = candidate(lts.desc())
     matched = u.select(
-        "*", F.last(m_struct, ignorenulls=True).over(w).alias("__m")
-    ).select(
-        "*",
-        *[F.col(f"__m.{c}").alias(f"__m___r_{c}") for c in right_payload],
-        F.col("__m.ts").alias("__m___r_ts"),
+        "*", *[c.alias(n) for n, c in sides.items()]
+    ).where(F.col(_MARK) == 0)
+    return _matched(
+        matched,
+        left.columns,
+        right_payload,
+        lts,
+        F.col("__mb") if want_back else None,
+        F.col("__mf") if want_fwd else None,
+        tolerance_sec,
     )
-    return _finish(matched, left.columns, right_payload, tolerance_sec, direction)
 
 
-def _broadcast_asof(
+def _broadcast_refs(
     left: DataFrame,
     right: DataFrame,
     on: list[str],
     ts: str,
     right_payload: list[str],
-    tolerance_sec: float | None,
-    direction: str,
 ) -> DataFrame:
-    """Small-right as-of: per-key time-sorted struct array, broadcast-joined,
-    matched with array ``filter`` + ``element_at`` — 100% JVM expressions,
-    zero shuffle/sort of the (fat) left side. The 100 TB shape for PIT
-    lookups against a reference *dimension* (the teacher-recording analog is
-    exactly that: few reference rows per key, `dtw_alignment.py:1377-1416`)."""
+    """Small-right as-of input: ``left`` with ``__refs``, its key's
+    time-sorted struct array, broadcast-joined — zero shuffle/sort of the
+    (fat) left side. The 100 TB shape for PIT lookups against a reference
+    *dimension* (the teacher-recording analog is exactly that: few
+    reference rows per key, `dtw_alignment.py:1377-1416`)."""
     # struct sorts lexicographically, ts first → array_sort = time order
     refs = right.groupBy(*on).agg(
         F.array_sort(
@@ -277,7 +263,7 @@ def _broadcast_asof(
         ).alias("__refs")
     )
     # null-safe equality (<=>) so NULL keys match the NULL-key reference
-    # history — the window-family strategies group NULL keys together via
+    # history — the window strategies group NULL keys together via
     # partitionBy, and the documented cross-strategy equivalence must hold
     refs = refs.select(
         *[F.col(k).alias(f"__k_{k}") for k in on], "__refs"
@@ -286,36 +272,6 @@ def _broadcast_asof(
     for k in on:
         c = F.col(k).eqNullSafe(F.col(f"__k_{k}"))
         cond = c if cond is None else cond & c
-    j = left.join(F.broadcast(refs), cond, "left").drop(
+    return left.join(F.broadcast(refs), cond, "left").drop(
         *[f"__k_{k}" for k in on]
     )
-
-    lts = F.col(ts)
-    # try_element_at: NULL on empty candidate array (a left row with no
-    # in-tolerance partner) — element_at throws under ANSI mode (Spark 4
-    # default), and NULL is exactly the intended missing-partner semantics.
-    if direction == "backward":
-        cand = F.filter("__refs", lambda r: r["ts"] <= lts)
-        hit = F.try_element_at(cand, F.lit(-1))  # latest preceding
-    else:
-        cand = F.filter("__refs", lambda r: r["ts"] >= lts)
-        hit = F.try_element_at(cand, F.lit(1))  # earliest following
-
-    m_ts = hit["ts"]
-    if tolerance_sec is not None:
-        tol = F.lit(tol_us(tolerance_sec))
-        lag = (
-            ts_micros(ts) - ts_micros(m_ts)
-            if direction == "backward"
-            else ts_micros(m_ts) - ts_micros(ts)
-        )
-        ok = m_ts.isNotNull() & (lag <= tol)
-    else:
-        ok = m_ts.isNotNull()
-
-    return j.select(
-        *left.columns,
-        F.when(ok, m_ts).alias("matched_ts"),
-        *[F.when(ok, hit[c]).alias(c) for c in right_payload],
-    )
-

@@ -160,11 +160,7 @@ def duplicated_substring_runs(
         F.col(id_col),
         "pos",
         portable_word_hash(F.col("shingle")).alias("_h"),
-    ).persist()  # two consumers (dup-hash agg + semi-join probe): without
-    # it each re-runs the tokenize+explode chain. The blocks stay cached
-    # until the returned plan is garbage-collected (the ContextCleaner then
-    # drops them); they are MEMORY_AND_DISK, so a long-lived session that
-    # keeps many such plans spills before it runs out of memory.
+    )
     dup = sh.groupBy("_h").agg(
         F.count_distinct(F.col(id_col)).alias("_nd")
     )

@@ -1,15 +1,13 @@
-"""Multimodal columns: opaque binary payloads + typed metadata + Arrow-batched
-decode/feature plumbing.
+"""Multimodal columns: opaque binary payloads + Arrow-batched decode/feature
+plumbing.
 
-Media (image/audio/video) are ``binary`` columns with a metadata struct
-(modality, codec, width/height or sample rate, byte length). Decoding and
-feature extraction run as ``mapInPandas`` kernels — Arrow batches in, Arrow
-batches out, never per-row Python. The actual codec step is STUBBED in this
-container (no PIL/librosa/ffmpeg): :func:`decode_kernel` raises
-``NotImplementedError`` unless ``fake=True``, in which case a deterministic
-fake decoder (bytes → seeded feature vector) exercises the full distributed
-path — schema, batching, partitioning, dtype discipline are all real and
-tested (tests/test_multimodal.py).
+Media (image/audio/video) are ``binary`` columns. Decoding and feature
+extraction run as ``mapInPandas`` kernels — Arrow batches in, Arrow batches
+out, never per-row Python. No media codec (PIL/librosa/ffmpeg) is installed,
+so the decode step is a deterministic fake decoder (bytes → seeded feature
+vector) that exercises the full distributed path — schema, batching,
+partitioning, dtype discipline are all real and tested
+(tests/test_similarity_multimodal.py).
 
 Reference analog: the audio load + feature chain
 (`04_feature_extraction_experiment/feature_extractor.py:62-131` format
@@ -37,23 +35,6 @@ from pyspark.sql.types import (
 
 FEATURE_DIM = 16
 
-MEDIA_META_COLS = ["modality", "codec", "n_bytes"]
-
-
-def with_media_meta(
-    df: DataFrame, binary_col: str = "payload", modality: str = "audio",
-    codec: str = "pcm16",
-) -> DataFrame:
-    """Attach the typed metadata struct every downstream op keys on."""
-    return df.withColumn(
-        "media_meta",
-        F.struct(
-            F.lit(modality).alias("modality"),
-            F.lit(codec).alias("codec"),
-            F.length(F.col(binary_col)).alias("n_bytes"),
-        ),
-    )
-
 
 def _fake_decode(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
     """Deterministic stand-in for a codec: feature i is a pure arithmetic
@@ -72,21 +53,10 @@ def _fake_decode(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
     )
 
 
-def decode_kernel(payload: bytes, codec: str, fake: bool = False) -> np.ndarray:
-    if fake:
-        return _fake_decode(payload)
-    raise NotImplementedError(
-        f"codec {codec!r}: media codecs (PIL/librosa/ffmpeg) are not available "
-        "in this container; pass fake=True for the deterministic test decoder"
-    )
-
-
 def extract_media_features(
     df: DataFrame,
     id_col: str = "doc_id",
     binary_col: str = "payload",
-    codec: str = "pcm16",
-    fake: bool = False,
 ) -> DataFrame:
     """Decode + featurize each media payload: (id, media_features
     array<float>[FEATURE_DIM]). One mapInPandas stage; the binary column is
@@ -105,10 +75,7 @@ def extract_media_features(
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            feats = [
-                decode_kernel(bytes(p), codec, fake=fake)
-                for p in b[binary_col]
-            ]
+            feats = [_fake_decode(bytes(p)) for p in b[binary_col]]
             yield pd.DataFrame({id_col: b[id_col], "media_features": feats})
 
     return src.mapInPandas(kernel, schema=out_schema)

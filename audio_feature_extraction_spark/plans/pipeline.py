@@ -53,7 +53,6 @@ from audio_feature_extraction_spark.operators.timeutil import ts_micros
 def feature_pipeline(
     seq: DataFrame,
     ref: DataFrame,
-    asof_strategy: str = "window",
     gap_sec: float = GAP_SEC,
     tol_sec: float = ASOF_TOL_SEC,
 ) -> DataFrame:
@@ -67,8 +66,8 @@ def feature_pipeline(
         left_ts="ts",
         tolerance_sec=tol_sec,
         direction="backward",
-        strategy=asof_strategy,
-        cluster_on=["doc_id"] if asof_strategy == "window" else None,
+        strategy="window",
+        cluster_on=["doc_id"],
     )
 
     w = Window.partitionBy("doc_id").orderBy("ts", "seq")

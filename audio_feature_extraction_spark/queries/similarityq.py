@@ -177,7 +177,7 @@ def _q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", F.encode("text", "utf-8").alias("payload")
         )
     )
-    out = _M.extract_media_features(_M.with_media_meta(d), fake=True)
+    out = _M.extract_media_features(d)
     return out.select(
         "doc_id",
         F.size("media_features").alias("feat_dim"),

@@ -2,8 +2,8 @@
 
 At cluster scale the input lives in a bucketed/sorted Iceberg table. A scan of
 a table bucketed by doc_id satisfies every per-doc_id window's
-ClusteredDistribution, so with the broadcast as-of strategy the flagship
-pipeline shuffles the fat token rows ZERO times — the only exchange left is
+ClusteredDistribution, so the broadcast as-of strategy followed by a per-doc
+window shuffles the fat token rows ZERO times — the only exchange left is
 the slim reference-dimension aggregation feeding the broadcast.
 """
 
@@ -12,13 +12,30 @@ from __future__ import annotations
 import re
 
 import numpy as np
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
-from audio_feature_extraction_spark import datagen as dg
-from audio_feature_extraction_spark.plans.pipeline import feature_pipeline
+from audio_feature_extraction_spark.operators.asof import asof_join
+from audio_feature_extraction_spark.oracle import ASOF_TOL_SEC
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _asof_then_window(seq, ref, **kw):
+    m = asof_join(
+        seq, ref, on=["source", "doc_id"], left_ts="ts",
+        tolerance_sec=ASOF_TOL_SEC, **kw,
+    )
+    w = Window.partitionBy("doc_id").orderBy("ts", "seq")
+    return m.select(
+        "doc_id",
+        "seq",
+        "matched_ts",
+        F.coalesce(F.try_element_at("ref_vec", F.lit(1)), F.lit(0.0)).alias("r0"),
+        F.sum(F.col("n_tok").cast("long")).over(w).alias("cum_tokens"),
+    )
 
 
 def test_bucketed_scan_plus_broadcast_asof_is_zero_fat_shuffle(spark, tiny_df, tmp_path):
@@ -33,8 +50,7 @@ def test_bucketed_scan_plus_broadcast_asof_is_zero_fat_shuffle(spark, tiny_df, t
         .saveAsTable(tbl)
     )
     try:
-        sb = spark.table(tbl)
-        out = feature_pipeline(sb, ref, asof_strategy="broadcast")
+        out = _asof_then_window(spark.table(tbl), ref, strategy="broadcast")
         plan = _plan(out)
 
         # the fat side never hash-exchanges: no exchange keyed on doc_id alone
@@ -44,21 +60,16 @@ def test_bucketed_scan_plus_broadcast_asof_is_zero_fat_shuffle(spark, tiny_df, t
         assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 1, plan
         assert "BroadcastHashJoin" in plan, plan
 
-        # semantics unchanged vs the window-strategy pipeline
-        a = (
-            out.toPandas()
-            .sort_values(["doc_id", "seq"])
-            .reset_index(drop=True)
-        )
+        # semantics unchanged vs the window strategy
+        a = out.toPandas().sort_values(["doc_id", "seq"]).reset_index(drop=True)
         b = (
-            feature_pipeline(seq, ref)
+            _asof_then_window(seq, ref, strategy="window", cluster_on=["doc_id"])
             .toPandas()
             .sort_values(["doc_id", "seq"])
             .reset_index(drop=True)
         )
-        fa = np.array(a["feature_vector"].tolist())
-        fb = np.array(b["feature_vector"].tolist())
-        assert np.allclose(fa, fb)
-        assert all((x == y).all() for x, y in zip(a["tokens"], b["tokens"]))
+        assert a["matched_ts"].equals(b["matched_ts"])
+        assert a["cum_tokens"].equals(b["cum_tokens"])
+        assert np.array_equal(a["r0"].to_numpy(), b["r0"].to_numpy())
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")

@@ -156,19 +156,18 @@ def test_broadcast_asof_never_shuffles_left(tiny_df):
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
 
 
-def test_range_merge_asof_is_range_exchange_under_window(spark):
-    """strategy="range_merge" is range partitioning under the window
-    matcher: after a run, AQE's final plan holds exactly one range exchange,
-    on the equi key, below the Window's Sort (which is the secondary sort),
-    and no Python node."""
-    df = em.queries()["asof_range_merge"](spark, SF_DIR)
-    df.collect()
-    plan = _plan(df).split("== Initial Plan ==")[0]
-    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
-        assert node not in plan, plan
-    assert re.findall(r"Exchange rangepartitioning\((\w+)#", plan) == ["user_id"], plan
-    sort = _subtree(_subtree(plan, "Window ["), "Sort [user_id#")
-    assert "Exchange rangepartitioning(user_id#" in sort, plan
+def test_asof_range_merge_plans_as_asof_backward(spark):
+    """The registry name asof_range_merge runs the window plan: its
+    normalized plan equals asof_backward's, with one hash exchange on the
+    equi key feeding the Window and no range exchange."""
+    def canon(name):
+        plan = _plan(em.queries()[name](spark, SF_DIR))
+        return re.sub(r"(#|plan_id=|lambda [a-z]+_)\d+L?", r"\1", plan)
+
+    plan = canon("asof_range_merge")
+    assert plan == canon("asof_backward")
+    assert "rangepartitioning" not in plan, plan
+    assert len(re.findall(r"Exchange hashpartitioning\(user_id#, \d+\)", plan)) == 1, plan
 
 
 def test_repetition_stats_exchanges_only_on_doc_id(spark):

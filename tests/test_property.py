@@ -102,7 +102,7 @@ def test_sessionize_matches_pandas(spark, rows, gap):
     lrows=rows_strategy,
     rrows=rows_strategy,
     tol=st.one_of(st.none(), st.integers(min_value=0, max_value=200)),
-    strategy=st.sampled_from(["window", "range_merge", "broadcast"]),
+    strategy=st.sampled_from(["window", "salted", "broadcast"]),
 )
 @SETTINGS
 def test_asof_matches_pandas_merge_asof(spark, lrows, rrows, tol, strategy):
@@ -263,7 +263,7 @@ def test_connected_components_matches_union_find(spark, edges):
     lrows=rows_strategy,
     rrows=rows_strategy,
     tol=st.one_of(st.none(), st.integers(min_value=0, max_value=200)),
-    strategy=st.sampled_from(["window", "salted", "range_merge"]),
+    strategy=st.sampled_from(["window", "salted", "broadcast"]),
 )
 @SETTINGS
 def test_asof_nearest_matches_pandas(spark, lrows, rrows, tol, strategy):

@@ -132,12 +132,7 @@ def test_ivf_cells_partition_corpus(emb):
 def test_media_decode_plumbing(spark):
     rows = [(f"d{i}", bytes([i] * (i + 1))) for i in range(20)]
     df = spark.createDataFrame(rows, "doc_id string, payload binary")
-    df = M.with_media_meta(df)
-    meta = df.select("media_meta.*").toPandas()
-    assert list(meta.columns) == M.MEDIA_META_COLS
-    assert (meta.n_bytes.to_numpy() == np.arange(1, 21)).all()
-
-    got = M.extract_media_features(df, fake=True).toPandas()
+    got = M.extract_media_features(df).toPandas()
     assert len(got) == 20
     feats = np.stack(got.media_features.map(np.asarray).to_numpy())
     assert feats.shape == (20, M.FEATURE_DIM)
@@ -145,17 +140,11 @@ def test_media_decode_plumbing(spark):
     assert ((feats >= 0.0) & (feats < 1.0)).all()
 
     # deterministic + partition-invariant
-    got2 = M.extract_media_features(df.repartition(7), fake=True).toPandas()
+    got2 = M.extract_media_features(df.repartition(7)).toPandas()
     a = got.sort_values("doc_id").reset_index(drop=True)
     b = got2.sort_values("doc_id").reset_index(drop=True)
     for x, y in zip(a.media_features, b.media_features):
         assert np.array_equal(np.asarray(x), np.asarray(y))
-
-
-def test_media_decode_stub_raises(spark):
-    df = spark.createDataFrame([("d0", b"abc")], "doc_id string, payload binary")
-    with pytest.raises(Exception, match="NotImplementedError|codec"):
-        M.extract_media_features(df, fake=False).collect()
 
 
 def test_frame_sample_plan(spark):

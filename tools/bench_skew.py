@@ -1,10 +1,9 @@
-"""Measured skew evidence for asof_join(strategy='salted') — VERDICT r05 #7.
+"""Measured skew evidence for asof_join(strategy='salted').
 
 Generates a hot-key frame (90% of left rows on ONE source key) and times
-the window (unsalted) strategy against salted at several salt counts on
+the window (unsalted) strategy against salted (``SALT_BUCKETS`` salts) on
 the SAME input, verifying the results identical first. Prints one JSON
-line; the numbers land in BENCH/BASELINE.md next to the salt-count
-heuristic.
+line.
 
 Run:  python tools/bench_skew.py [n_left] [hot_frac]
 """
@@ -20,7 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from audio_feature_extraction_spark.operators.asof import asof_join  # noqa: E402
+from audio_feature_extraction_spark.operators.asof import SALT_BUCKETS, asof_join  # noqa: E402
 from audio_feature_extraction_spark.session import get_spark  # noqa: E402
 from tools.hostcond import HostWindow, window_noisy  # noqa: E402
 
@@ -82,9 +81,10 @@ def main() -> None:
     left = left.localCheckpoint()   # freeze inputs so every variant reads
     right = right.localCheckpoint() # identical materialized data
 
-    variants = [("window_unsalted", dict(strategy="window"))]
-    for s in (8, 16, 32):
-        variants.append((f"salted_{s}", dict(strategy="salted", salt_buckets=s)))
+    variants = [
+        ("window_unsalted", dict(strategy="window")),
+        (f"salted_{SALT_BUCKETS}", dict(strategy="salted")),
+    ]
 
     # correctness first: identical fingerprints across variants
     fps = {}
